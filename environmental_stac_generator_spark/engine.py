@@ -105,6 +105,12 @@ class EnvStacEngine:
 
         Returns every stage's DataFrame; sinks have already run
         (they are actions), catalog frames are lazy.
+
+        Cached until :meth:`release`: the packed grids (the long
+        relation without ``packed_encode``), the slab ``summary`` that
+        every catalog frame derives from, ``info``, the per-item
+        ``leadtime_counts``, and the COG/NetCDF sink results. The
+        summary is the catalog's one pass over the cells.
         """
         step, unit = parse_forecast_frequency(forecast_frequency)
         store_or_validate_config(
@@ -129,28 +135,24 @@ class EnvStacEngine:
             # optimization, SURVEY §4) — we scan once and reuse
             long_df = self._track(self.scan(input_path).persist())
         crs_df = self._collection_crs(input_path)
-        info = fc.forecast_info(
-            long_df, crs_by_collection=crs_df, bbox_transform=self.bbox_transform
+        # the catalog's ONE pass over the cells: every catalog frame
+        # derives from this summary's few rows; caching info and the
+        # per-item leadtime counts as well spares each save_catalog
+        # action re-deriving them from the summary
+        summary = self._track(fc.slab_summary(long_df).persist())
+        catalog = sc.build_catalog(
+            summary,
+            crs_by_collection=crs_df,
+            bbox_transform=self.bbox_transform,
+            license=self.license,
+            leadtime_unit=unit,
+            leadtime_step=step,
+            file_server_url=self.file_server_url,
         )
-        stats = self.band_statistics(long_df)
-        collections = sc.build_collections(info, license=self.license)
-        times = fc.leadtime_counts(long_df)
-        items = sc.build_items(times, info, leadtime_unit=unit, leadtime_step=step)
-        cog_assets = sc.build_cog_assets(stats, items, leadtime_unit=unit, leadtime_step=step)
-        nc_assets = sc.build_netcdf_assets(items)
-        thumb_assets = sc.build_thumbnail_assets(cog_assets)
-        assets = cog_assets.unionByName(nc_assets).unionByName(thumb_assets)
-        if self.file_server_url:
-            assets = sc.rewrite_hrefs(assets, self.file_server_url)
+        self._track(catalog["info"].persist())
+        self._track(catalog["leadtime_counts"].persist())
 
-        results: dict[str, DataFrame] = {
-            "long": long_df,
-            "info": info,
-            "stats": stats,
-            "collections": collections,
-            "items": items,
-            "assets": assets,
-        }
+        results: dict[str, DataFrame] = {"long": long_df, "summary": summary, **catalog}
         if crs_df is not None:
             results["crs"] = crs_df.withColumnRenamed(
                 "collection", "collection_id"
@@ -204,10 +206,12 @@ class EnvStacEngine:
         return df
 
     def release(self) -> None:
-        """Unpersist every frame cached by earlier ``process`` calls,
-        plus any module-tracked pair-bucket caches (ADVICE r4). Call
-        once the returned frames have been consumed (inspected /
-        saved): results stay valid but recompute on next use."""
+        """Unpersist every frame cached by earlier ``process`` calls —
+        grids or long relation, slab summary, info, leadtime counts,
+        sink results — plus any module-tracked pair-bucket caches
+        (ADVICE r4). Call once the returned frames have been consumed
+        (inspected / saved): results stay valid but recompute on next
+        use."""
         from environmental_stac_generator_spark.operators.lineage import (
             release_tracked,
         )

@@ -53,15 +53,71 @@ def nan_to_null(col: Column | str) -> Column:
     return F.when(F.isnan(c), None).otherwise(c)
 
 
+# the slab grain: one decoded 2-D array per (collection, init time,
+# leadtime, variable) — the unit get_forecast_info / get_da_statistics
+# see in memory (ref stac/generator.py:461-531, utils.py:213-259)
+SLAB_KEYS = ["collection", "forecast_reference_time", "leadtime_idx", "variable"]
+STAT_COLS = ["min", "max", "mean", "std", "valid_percent"]
+
+
+def slab_summary(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
+    """The ONE cell-level aggregate behind the catalog metadata: per
+    ``keys`` group (default the slab grain) the band statistics and,
+    when the frame has grid coordinates, the coordinate extent
+    ``xmin/ymin/xmax/ymax``. Everything else the catalog needs (bbox,
+    temporal extent, band list, leadtime counts) is derived from its
+    few rows, so a cached summary spares every later catalog action a
+    pass over the cells.
+
+    Band statistics match ``get_da_statistics`` (ref
+    ``utils.py:213-259``) exactly: NaN skipped, **population** stddev
+    (numpy ``np.std``), and valid% = floor(100 * finite/total * 100) /
+    100 (ref ``utils.py:250``). The valid count uses ``np.isfinite``
+    semantics (±Inf excluded too), while min/max/mean/std keep numpy's
+    nan-skipping-only semantics — an Inf-bearing band reports Inf
+    stats but a lower valid%.
+    """
+    keys = keys or SLAB_KEYS
+    v = nan_to_null("value")
+    d = df.withColumn("v", v).withColumn(
+        "v_finite",
+        F.when(F.abs(F.col("v")) == float("inf"), None).otherwise(F.col("v")),
+    )
+    aggs = [
+        F.min("v").alias("min"),
+        F.max("v").alias("max"),
+        F.avg("v").alias("mean"),
+        F.stddev_pop("v").alias("std"),
+        (F.floor(100.0 * F.count("v_finite") / F.count(F.lit(1)) * 100) / 100).alias(
+            "valid_percent"
+        ),
+    ]
+    if {"xc", "yc"} <= set(df.columns):
+        aggs += [
+            F.min("xc").alias("xmin"),
+            F.min("yc").alias("ymin"),
+            F.max("xc").alias("xmax"),
+            F.max("yc").alias("ymax"),
+        ]
+    return d.groupBy(*keys).agg(*aggs)
+
+
+def _as_summary(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
+    """``df`` itself when it already is a :func:`slab_summary`, else
+    its summary: the catalog derivations accept either grain."""
+    return df if "valid_percent" in df.columns else slab_summary(df, keys)
+
+
 def bbox(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """A1: [min(x), min(y), max(x), max(y)] per collection
-    (ref ``stac/generator.py:555-585``)."""
+    (ref ``stac/generator.py:555-585``) — min of the slab minima, max
+    of the slab maxima. ``df``: cells or their slab summary."""
     keys = keys or ["collection"]
-    return df.groupBy(*keys).agg(
-        F.min("xc").alias("xmin"),
-        F.min("yc").alias("ymin"),
-        F.max("xc").alias("xmax"),
-        F.max("yc").alias("ymax"),
+    return _as_summary(df).groupBy(*keys).agg(
+        F.min("xmin").alias("xmin"),
+        F.min("ymin").alias("ymin"),
+        F.max("xmax").alias("xmax"),
+        F.max("ymax").alias("ymax"),
     )
 
 
@@ -84,7 +140,8 @@ def geometry_json(bbox_df: DataFrame) -> DataFrame:
 
 def temporal_extent(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """A2: first/last forecast init time per collection
-    (ref ``stac/generator.py:517-518``)."""
+    (ref ``stac/generator.py:517-518``). Reads only key columns, so
+    cells and their slab summary give the same rows."""
     keys = keys or ["collection"]
     return df.groupBy(*keys).agg(
         F.min("forecast_reference_time").alias("extent_start"),
@@ -93,30 +150,11 @@ def temporal_extent(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
 
 
 def band_statistics(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
-    """A3: per-band min/max/mean/stddev + floored valid%.
-
-    Matches ``get_da_statistics`` (ref ``utils.py:213-259``) exactly:
-    NaN skipped, **population** stddev (numpy ``np.std``), and
-    valid% = floor(100 * finite/total * 100) / 100 (ref ``utils.py:250``).
-    The valid count uses ``np.isfinite`` semantics (±Inf excluded too),
-    while min/max/mean/std keep numpy's nan-skipping-only semantics —
-    an Inf-bearing band reports Inf stats but a lower valid%.
-    """
-    keys = keys or ["collection", "forecast_reference_time", "leadtime_idx", "variable"]
-    v = nan_to_null("value")
-    d = df.withColumn("v", v).withColumn(
-        "v_finite",
-        F.when(F.abs(F.col("v")) == float("inf"), None).otherwise(F.col("v")),
-    )
-    return d.groupBy(*keys).agg(
-        F.min("v").alias("min"),
-        F.max("v").alias("max"),
-        F.avg("v").alias("mean"),
-        F.stddev_pop("v").alias("std"),
-        (F.floor(100.0 * F.count("v_finite") / F.count(F.lit(1)) * 100) / 100).alias(
-            "valid_percent"
-        ),
-    )
+    """A3: per-band min/max/mean/stddev + floored valid% — the
+    statistics columns of :func:`slab_summary` (semantics there).
+    ``df``: cells, or a slab summary for the default keys."""
+    keys = keys or SLAB_KEYS
+    return _as_summary(df, keys).select(*keys, *STAT_COLS)
 
 
 def infer_valid_bands(df: DataFrame) -> DataFrame:
@@ -124,7 +162,8 @@ def infer_valid_bands(df: DataFrame) -> DataFrame:
     variable already has the full dim set; a variable scanned from a
     degenerate (non-4-D) source shows fewer distinct leadtimes than
     the collection's maximum. Keep only full-coverage variables
-    (ref ``stac/generator.py:506``)."""
+    (ref ``stac/generator.py:506``). Reads only key columns: cells
+    and their slab summary give the same rows."""
     per_var = df.groupBy("collection", "variable").agg(
         F.countDistinct("leadtime_idx").alias("n_lead")
     )
@@ -138,8 +177,9 @@ def infer_valid_bands(df: DataFrame) -> DataFrame:
 
 def leadtime_counts(df: DataFrame) -> DataFrame:
     """A6: nleadtime per (collection, init time)
-    (ref ``stac/generator.py:647``)."""
-    return df.groupBy("collection", "forecast_reference_time").agg(
+    (ref ``stac/generator.py:647``). ``df``: cells or their slab
+    summary."""
+    return _as_summary(df).groupBy("collection", "forecast_reference_time").agg(
         F.countDistinct("leadtime_idx").alias("n_leadtime")
     )
 
@@ -182,6 +222,8 @@ def forecast_info(
     """The distributed twin of ``get_forecast_info``'s 10-tuple
     (ref ``stac/generator.py:461-531``): one row per collection with
     bbox + geometry, temporal extent, band list, leadtime count.
+    ``df``: cells or their slab summary — every column is derived from
+    the summary's rows.
 
     ``crs_by_collection`` — optional (collection, crs) frame (from the
     metadata scan): projected-CRS bboxes then reproject to WGS84
@@ -191,7 +233,8 @@ def forecast_info(
     native coordinates (the pre-round-6 behavior, correct only for
     EPSG:4326 sources). ``bbox_transform`` overrides the pyproj
     kernel for environments without pyproj."""
-    b = bbox(df)
+    s = _as_summary(df)
+    b = bbox(s)
     if crs_by_collection is not None:
         from environmental_stac_generator_spark.functions import geo
 
@@ -206,13 +249,13 @@ def forecast_info(
         kwargs = {"transform": bbox_transform} if bbox_transform else {}
         b = geo.reproject_bbox(b, crs_col="crs", **kwargs).drop("crs")
     b = geometry_json(b)
-    t = temporal_extent(df)
+    t = temporal_extent(s)
     bands = (
-        infer_valid_bands(df)
+        infer_valid_bands(s)
         .groupBy("collection")
         .agg(F.sort_array(F.collect_set("variable")).alias("valid_bands"))
     )
-    n_lead = df.groupBy("collection").agg(
+    n_lead = s.groupBy("collection").agg(
         F.countDistinct("leadtime_idx").alias("n_leadtime")
     )
     return b.join(t, "collection").join(bands, "collection").join(n_lead, "collection")

@@ -331,10 +331,13 @@ def curate(
     def staged(df: DataFrame, stage: str) -> DataFrame:
         # one materialization per stage: downstream multi-consumption
         # reads the stored partitions instead of re-running upstream.
-        # LAZY checkpoint + count = ONE job that both computes/stores
-        # the partitions and counts them (the cut_lineage(eager=False)
-        # pattern); the eager form paid a second scheduled job per
-        # stage just to count the already-stored blocks.
+        # On the localCheckpoint path, LAZY checkpoint + count = ONE
+        # job that both computes/stores the partitions and counts them
+        # (the cut_lineage(eager=False) pattern); the eager form paid a
+        # second scheduled job per stage just to count the stored
+        # blocks. The reliable checkpoint(eager=False) path is still
+        # two: after the counting job, Spark runs a second job that
+        # recomputes the unpersisted partitions to write the files.
         out = (
             df.checkpoint(eager=False)
             if reliable

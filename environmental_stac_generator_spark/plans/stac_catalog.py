@@ -26,6 +26,9 @@ from pyspark.sql import Column, DataFrame, Window
 from environmental_stac_generator_spark.operators.forecast import (
     FNAME_FMT,
     ISO_FMT,
+    band_statistics,
+    forecast_info,
+    leadtime_counts,
     valid_time,
 )
 
@@ -300,6 +303,49 @@ def rewrite_hrefs(assets: DataFrame, file_server_url: str) -> DataFrame:
             F.concat(F.lit(base), F.substring(href, 3, 1 << 30)),
         ).otherwise(href),
     )
+
+
+def build_catalog(
+    summary: DataFrame,
+    crs_by_collection: DataFrame | None = None,
+    bbox_transform=None,
+    license: str = "other",
+    leadtime_unit: str = "days",
+    leadtime_step: float = 1.0,
+    file_server_url: str | None = None,
+) -> dict[str, DataFrame]:
+    """The whole summary → info → collections/items/assets chain
+    (ref ``stac/generator.py:650-803``): COG, NetCDF and thumbnail
+    assets, hrefs rewritten onto ``file_server_url`` when given.
+
+    ``summary`` is ``forecast.slab_summary()`` output. Returns
+    ``info``, ``leadtime_counts``, ``stats``, ``collections``,
+    ``items`` and ``assets``; each is derived from the summary's few
+    rows only."""
+    info = forecast_info(
+        summary, crs_by_collection=crs_by_collection, bbox_transform=bbox_transform
+    )
+    stats = band_statistics(summary)
+    times = leadtime_counts(summary)
+    items = build_items(
+        times, info, leadtime_unit=leadtime_unit, leadtime_step=leadtime_step
+    )
+    cog_assets = build_cog_assets(
+        stats, items, leadtime_unit=leadtime_unit, leadtime_step=leadtime_step
+    )
+    assets = cog_assets.unionByName(build_netcdf_assets(items)).unionByName(
+        build_thumbnail_assets(cog_assets)
+    )
+    if file_server_url:
+        assets = rewrite_hrefs(assets, file_server_url)
+    return {
+        "info": info,
+        "leadtime_counts": times,
+        "stats": stats,
+        "collections": build_collections(info, license=license),
+        "items": items,
+        "assets": assets,
+    }
 
 
 # pystac's ProjectionExtension schema (the extension the reference

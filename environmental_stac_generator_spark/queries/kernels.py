@@ -168,23 +168,16 @@ def stac_item_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _assemble_catalog_frames(spark: SparkSession):
-    """Shared scan→info→stats→items→assets assembly used by both
-    stac_item_documents and stac_catalog_roundtrip; returns
-    (items, assets, info)."""
+    """The engine's catalog assembly over the fake landing, shared by
+    stac_item_documents and stac_catalog_roundtrip; returns (items,
+    assets, info)."""
     from environmental_stac_generator_spark.operators import forecast as fc
     from environmental_stac_generator_spark.plans import stac_catalog as sc
     from environmental_stac_generator_spark.sources import netcdf
 
     long_df = netcdf.scan_netcdf(spark, _fake_landing(), decoder=netcdf.fake_decoder())
-    info = fc.forecast_info(long_df)
-    stats = fc.band_statistics(long_df)
-    items = sc.build_items(fc.leadtime_counts(long_df), info)
-    cogs = sc.build_cog_assets(stats, items)
-    assets = (
-        cogs.unionByName(sc.build_netcdf_assets(items))
-        .unionByName(sc.build_thumbnail_assets(cogs))
-    )
-    return items, assets, info
+    cat = sc.build_catalog(fc.slab_summary(long_df))
+    return cat["items"], cat["assets"], cat["info"]
 
 
 @register(

@@ -2,8 +2,11 @@
 
 from __future__ import annotations
 
+import hashlib
 import json
+from pathlib import Path
 
+import numpy as np
 import pytest
 
 from environmental_stac_generator_spark.engine import EnvStacEngine
@@ -18,6 +21,88 @@ def inputs(tmp_path_factory):
     for i in range(2):
         (d / f"fc{i}.nc").write_bytes(bytes([i]))
     return d
+
+
+def _pinned_decoder(extreme_slab: bool = False):
+    """The fake decoder keyed on the file's last two path parts, not
+    its tmp dir, so values and init dates (md5 of the path) are the
+    same on every run. Both fixture files then share one init date:
+    their slabs carry the same (collection, init, leadtime, variable)
+    key and the catalog aggregate must merge slabs across files.
+    ``extreme_slab`` adds one more slab to fc0 carrying NaN, +Inf and
+    -Inf among finite values."""
+    inner = netcdf.fake_decoder()
+
+    def decode(path, content):
+        path = "landing/" + "/".join(path.split("/")[-2:])
+        for i, chunk in enumerate(inner(path, content)):
+            yield chunk
+            if extreme_slab and i == 0 and path.endswith("fc0.nc"):
+                v = chunk["value"].to_numpy(copy=True)
+                v[:3] = [np.nan, np.inf, -np.inf]
+                yield chunk.assign(variable="sic_extreme", value=v)
+
+    return decode
+
+
+def _tree_md5(stac_dir: Path) -> str:
+    h = hashlib.md5()
+    for f in sorted(stac_dir.rglob("*.json")):
+        h.update(f.relative_to(stac_dir).as_posix().encode() + b"\0")
+        h.update(f.read_bytes())
+    return h.hexdigest()
+
+
+@pytest.fixture(scope="module")
+def pinned_catalogs(spark, inputs, tmp_path_factory):
+    """case -> (md5 of the stac/**.json tree, jobs run by save_catalog)
+    for process + save_catalog over the module's inputs."""
+    sc = spark.sparkContext
+    out = {}
+    for case, extreme in (("fake", False), ("extreme", True)):
+        root = tmp_path_factory.mktemp(case)
+        eng = EnvStacEngine(
+            spark, catalog_name="pinned", output_dir=root,
+            decoder=_pinned_decoder(extreme),
+        )
+        results = eng.process(str(inputs))
+        group = f"test_engine_save_catalog_{case}"
+        sc.setJobGroup(group, group)
+        try:
+            eng.save_catalog(results)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            eng.release()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        out[case] = (_tree_md5(root / "stac"), jobs)
+    return out
+
+
+@pytest.mark.parametrize(
+    "case, md5",
+    [
+        # md5s of the tree written before the catalog metadata moved
+        # onto one cached slab-grain aggregate: the move must not
+        # change one byte
+        ("fake", "004ba1103f39da0b1441fc2e53a9a753"),
+        ("extreme", "3dda1984630a4cfebdb29ec503522d0a"),
+    ],
+)
+def test_catalog_tree_bytes_pinned(pinned_catalogs, case, md5):
+    got = pinned_catalogs[case][0]
+    assert got == md5, f"{case}: catalog tree md5 {got}"
+
+
+def test_save_catalog_reads_cached_summary(pinned_catalogs):
+    """save_catalog reads the cached slab summary, info and leadtime
+    counts instead of re-exploding every cell per action. On this
+    fixture at local[4], deriving the catalog from the cells took 128
+    and 133 jobs in two identical runs; the cached summary takes 41.
+    AQE moves the count by a few jobs from run to run, so the bound is
+    half the lower old count."""
+    jobs = pinned_catalogs["fake"][1]
+    assert jobs <= 64, f"save_catalog ran {jobs} jobs"
 
 
 def test_process_end_to_end(spark, inputs, tmp_path):
