@@ -19,7 +19,10 @@ if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
 from environmental_stac_generator_spark.registry import load_full_registry
-from environmental_stac_generator_spark.session import get_spark
+from environmental_stac_generator_spark.session import (
+    DEFAULT_SHUFFLE_PARTITIONS,
+    get_spark,
+)
 
 # Representative of every operator family: scan+agg, joins, windows,
 # pivots, regex/string map stages, dedup/similarity/text extensions.
@@ -1276,11 +1279,11 @@ def _manifest_commit_curve_block() -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = DEFAULT_SHUFFLE_PARTITIONS
     spark = get_spark(
         app_name="envstac-bench",
         master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
+        shuffle_partitions=cpus,
         # executor-realistic heap: local[32] previously ran on Spark's
         # 1g cluster-driver default, so all 32 task threads shared 1 GB
         # — a GC regime no real executor sees (r7 machine-config fix)
@@ -1487,25 +1490,19 @@ def _machine_report(calib_start, calib_end, steal0, steal1) -> dict:
 def _cog_pipeline_throughput(spark) -> dict:
     """The reference's actual workload: NetCDF cells -> per-leadtime
     multi-band COGs (BASELINE.md: 432x432x93x2 ~ 34.7M cells/file on
-    a 4-worker pool). Measures our scan->grid->encode pipeline in
-    cells/sec with the deterministic codec. The codec now does real
+    a 4-worker pool). Measures our scan->slab->encode pipeline in
+    cells/sec with the deterministic codec. The codec does real
     per-tile DEFLATE + overview pages, so the number tracks the whole
     encode path (shuffle, grouping, Arrow, zlib), not just plumbing.
 
-    _best_of applies here too: the first execution of each path pays
-    one-time Python UDF worker spinup + per-worker module imports +
-    plan compilation (~7 s measured vs a ~2 s steady state for
-    long_rows), which a single-shot timing records as throughput —
-    that inflated r5's long_rows number by 1.8x while the code was
-    timing-neutral."""
+    _best_of applies here too: the first execution pays one-time
+    Python UDF worker spinup + per-worker module imports + plan
+    compilation, which a single-shot timing records as throughput."""
     import shutil
     import tempfile
     from pathlib import Path
 
-    from environmental_stac_generator_spark.sinks.raster import (
-        encode_cogs,
-        encode_cogs_grids,
-    )
+    from environmental_stac_generator_spark.sinks.raster import encode_cogs
     from environmental_stac_generator_spark.sources import netcdf
 
     base = Path(tempfile.mkdtemp(prefix="envstac_bench_cog_"))
@@ -1518,22 +1515,16 @@ def _cog_pipeline_throughput(spark) -> dict:
     dec = netcdf.fake_decoder(grid=grid, n_lead=n_lead)
     cells = n_files * grid * grid * n_lead * n_vars
 
-    sec_long = _best_of(
+    sec = _best_of(
         lambda: encode_cogs(
-            netcdf.scan_netcdf(spark, src, decoder=dec), base / "cogs_long"
-        ).write.mode("overwrite").format("noop").save()
-    )
-    sec_grid = _best_of(
-        lambda: encode_cogs_grids(
-            netcdf.scan_netcdf_grids(spark, src, decoder=dec), base / "cogs_grid"
+            netcdf.scan_netcdf_grids(spark, src, decoder=dec), base / "cogs"
         ).write.mode("overwrite").format("noop").save()
     )
 
     shutil.rmtree(base, ignore_errors=True)
     return {
         "cells": cells,
-        "long_rows": {"sec": round(sec_long, 3), "cells_per_sec": int(cells / sec_long)},
-        "packed_grids": {"sec": round(sec_grid, 3), "cells_per_sec": int(cells / sec_grid)},
+        "packed_grids": {"sec": round(sec, 3), "cells_per_sec": int(cells / sec)},
     }
 
 
@@ -2314,12 +2305,12 @@ def soak() -> None:
     import shutil
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = DEFAULT_SHUFFLE_PARTITIONS
     soak_dir, doc_rows = _synthesize_soak_dir(sf_dir, SOAK_FACTOR)
     spark = get_spark(
         app_name="envstac-soak",
         master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
+        shuffle_partitions=cpus,
         # the natural-regime block scans a >1M-doc corpus; Spark's 1g
         # local-mode default heap OOMs there (32 task threads share
         # the driver JVM — see session.DEFAULT_DRIVER_MEMORY)

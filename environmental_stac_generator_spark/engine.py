@@ -49,23 +49,12 @@ class EnvStacEngine:
     # TransformFn) for environments without pyproj; None -> pyproj
     bbox_transform: Callable | None = None
     cog_encoder: raster.Encoder = field(default=raster.fake_tiff_encoder)
-    # encode COGs from packed grid slabs (second decode pass, ~50x
-    # less shuffle; byte-identical output) instead of the long rows
-    packed_encode: bool = True
     # frames process() cached, released by release() — at 100 TB the
     # scan relation otherwise pins executor memory for the engine's
     # lifetime
     _persisted: list[DataFrame] = field(default_factory=list, repr=False)
 
     # ---- scan stage (S1/S2/U1) ----
-
-    def scan(self, input_path: str) -> DataFrame:
-        return netcdf.scan_netcdf(self.spark, input_path, decoder=self.decoder)
-
-    def scan_metadata(self, input_path: str) -> DataFrame:
-        return netcdf.scan_netcdf_metadata(
-            self.spark, input_path, meta_decoder=self.meta_decoder
-        )
 
     def _collection_crs(self, input_path: str) -> DataFrame | None:
         """(collection, crs) from the attr-only metadata scan — the
@@ -80,18 +69,14 @@ class EnvStacEngine:
             if importlib.util.find_spec("xarray") is None:
                 return None
         return (
-            self.scan_metadata(input_path)
+            netcdf.scan_netcdf_metadata(
+                self.spark, input_path, meta_decoder=self.meta_decoder
+            )
             .groupBy("collection")
             .agg(F.min("crs").alias("crs"))
         )
 
-    # ---- derivation stages ----
-
-    def forecast_info(self, long_df: DataFrame) -> DataFrame:
-        return fc.forecast_info(long_df)
-
-    def band_statistics(self, long_df: DataFrame) -> DataFrame:
-        return fc.band_statistics(long_df)
+    # ---- preprocess pipeline ----
 
     def process(
         self,
@@ -104,13 +89,19 @@ class EnvStacEngine:
         (ref ``process``, ``stac/generator.py:587-808``).
 
         Returns every stage's DataFrame; sinks have already run
-        (they are actions), catalog frames are lazy.
+        (they are actions) unless ``stac_only``, catalog frames are
+        lazy.
 
-        Cached until :meth:`release`: the packed grids (the long
-        relation without ``packed_encode``), the slab ``summary`` that
-        every catalog frame derives from, ``info``, the per-item
-        ``leadtime_counts``, and the COG/NetCDF sink results. The
-        summary is the catalog's one pass over the cells.
+        ONE slab-level scan feeds everything: the packed grids
+        (``sources.netcdf.scan_netcdf_grids``) go to both raster sinks
+        as they are, and the ``long`` cell relation is derived from
+        them JVM-side, so per-cell data never crosses a Python
+        boundary after the decoder.
+
+        Cached until :meth:`release`: the packed grids, the slab
+        ``summary`` that every catalog frame derives from, ``info``,
+        the per-item ``leadtime_counts``, and the COG/NetCDF sink
+        results. The summary is the catalog's one pass over the cells.
         """
         step, unit = parse_forecast_frequency(forecast_frequency)
         store_or_validate_config(
@@ -118,22 +109,12 @@ class EnvStacEngine:
             Path(self.output_dir) / "config.json",
             {self.catalog_name: {"forecast_frequency": forecast_frequency}},
         )
-        if self.packed_encode:
-            # ONE slab-level scan feeds everything: the long relation
-            # is derived JVM-side (posexplode), so per-cell data never
-            # crosses a Python boundary, and both raster sinks regroup
-            # packed slabs instead of cells.
-            grids = self._track(
-                netcdf.scan_netcdf_grids(
-                    self.spark, input_path, decoder=self.decoder
-                ).persist()
-            )
-            long_df = netcdf.long_from_grids(grids)
-        else:
-            grids = None
-            # the reference re-opens each file per stage (a missed
-            # optimization, SURVEY §4) — we scan once and reuse
-            long_df = self._track(self.scan(input_path).persist())
+        grids = self._track(
+            netcdf.scan_netcdf_grids(
+                self.spark, input_path, decoder=self.decoder
+            ).persist()
+        )
+        long_df = netcdf.long_from_grids(grids)
         crs_df = self._collection_crs(input_path)
         # the catalog's ONE pass over the cells: every catalog frame
         # derives from this summary's few rows; caching info and the
@@ -160,34 +141,19 @@ class EnvStacEngine:
         if not stac_only:
             # sinks are actions: materialize now (persist so callers
             # can inspect the result rows without re-encoding)
-            if self.packed_encode:
-                cog_results = raster.encode_cogs_grids(
-                    grids,
-                    self.output_dir,
-                    encoder=self.cog_encoder,
-                    overwrite=overwrite,
-                    leadtime_unit=unit,
-                    leadtime_step=step,
-                ).persist()
-                self._track(cog_results).count()
-                nc_results = raster.write_netcdf_slices_grids(
-                    grids, self.output_dir, overwrite=overwrite
-                ).persist()
-                self._track(nc_results).count()
-            else:
-                cog_results = raster.encode_cogs(
-                    long_df,
-                    self.output_dir,
-                    encoder=self.cog_encoder,
-                    overwrite=overwrite,
-                    leadtime_unit=unit,
-                    leadtime_step=step,
-                ).persist()
-                self._track(cog_results).count()
-                nc_results = raster.write_netcdf_slices(
-                    long_df, self.output_dir, overwrite=overwrite
-                ).persist()
-                self._track(nc_results).count()
+            cog_results = raster.encode_cogs(
+                grids,
+                self.output_dir,
+                encoder=self.cog_encoder,
+                overwrite=overwrite,
+                leadtime_unit=unit,
+                leadtime_step=step,
+            ).persist()
+            self._track(cog_results).count()
+            nc_results = raster.write_netcdf_slices(
+                grids, self.output_dir, overwrite=overwrite
+            ).persist()
+            self._track(nc_results).count()
             results["cog_results"] = cog_results
             results["netcdf_results"] = nc_results
         # adopt any module-tracked pair-bucket pins this process() run
@@ -207,8 +173,8 @@ class EnvStacEngine:
 
     def release(self) -> None:
         """Unpersist every frame cached by earlier ``process`` calls —
-        grids or long relation, slab summary, info, leadtime counts,
-        sink results — plus any module-tracked pair-bucket caches
+        packed grids, slab summary, info, leadtime counts, sink
+        results — plus any module-tracked pair-bucket caches
         (ADVICE r4). Call once the returned frames have been consumed
         (inspected / saved): results stay valid but recompute on next
         use."""

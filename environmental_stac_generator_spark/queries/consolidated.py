@@ -581,7 +581,8 @@ def build(full: dict[str, QuerySpec]) -> dict[str, QuerySpec]:
                 _kernel(
                     full,
                     [("long", "netcdf_scan_long"), ("meta", "netcdf_metadata_scan")],
-                    doc="S1/U1 NetCDF explode to long rows + attr-only "
+                    doc="S1/U1 NetCDF slab scan exploded JVM-side to long "
+                    "rows + attr-only "
                     "metadata scan (absorbs netcdf_scan_long, "
                     "netcdf_metadata_scan; attrs map serialized to JSON "
                     "payload).",
@@ -592,7 +593,8 @@ def build(full: dict[str, QuerySpec]) -> dict[str, QuerySpec]:
                 _kernel(
                     full,
                     [("cog", "cog_encode"), ("ncslice", "netcdf_slice_write")],
-                    doc="K1/K2/U2/U3 applyInPandas grid rebuild → COG encode "
+                    doc="K1/K2/U2/U3 applyInPandas packed-slab stack → COG "
+                    "encode "
                     "and per-init-time NetCDF slice write (absorbs "
                     "cog_encode, netcdf_slice_write).",
                 ),

@@ -100,8 +100,9 @@ def _fake_landing(n_files: int = 2) -> str:
 @register(
     "netcdf_scan_long",
     None,
-    doc="U1: binaryFile + mapInPandas NetCDF explode to long rows "
-    "(deterministic fake decoder; ref stac/generator.py:485,506).",
+    doc="U1: binaryFile + mapInPandas NetCDF slab scan, exploded "
+    "JVM-side to long rows (deterministic fake decoder; "
+    "ref stac/generator.py:485,506).",
 )
 def netcdf_scan_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     from environmental_stac_generator_spark.sources import netcdf
@@ -126,17 +127,19 @@ def netcdf_metadata_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "cog_encode",
     None,
-    doc="K2/U2: applyInPandas grid rebuild + multi-band COG encode per "
-    "(collection, init, leadtime) with md5 multihash results "
+    doc="K2/U2: applyInPandas packed-slab stack + multi-band COG encode "
+    "per (collection, init, leadtime) with md5 multihash results "
     "(ref cog.py:16-126).",
 )
 def cog_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from environmental_stac_generator_spark.sinks import raster
     from environmental_stac_generator_spark.sources import netcdf
 
-    long_df = netcdf.scan_netcdf(spark, _fake_landing(1), decoder=netcdf.fake_decoder())
+    grids = netcdf.scan_netcdf_grids(
+        spark, _fake_landing(1), decoder=netcdf.fake_decoder()
+    )
     out = _scratch_dir("envstac_cogs_")
-    return raster.encode_cogs(long_df, out).drop("path")  # path is tmp-random
+    return raster.encode_cogs(grids, out).drop("path")  # path is tmp-random
 
 
 @register(
@@ -149,9 +152,11 @@ def netcdf_slice_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     from environmental_stac_generator_spark.sinks import raster
     from environmental_stac_generator_spark.sources import netcdf
 
-    long_df = netcdf.scan_netcdf(spark, _fake_landing(1), decoder=netcdf.fake_decoder())
+    grids = netcdf.scan_netcdf_grids(
+        spark, _fake_landing(1), decoder=netcdf.fake_decoder()
+    )
     out = _scratch_dir("envstac_nc_")
-    return raster.write_netcdf_slices(long_df, out).drop("path")
+    return raster.write_netcdf_slices(grids, out).drop("path")
 
 
 @register(

@@ -22,7 +22,17 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the host's usable cores unless SPARK_GRAFT_CPUS says otherwise: the
+# one core-count default that bench.py and tools/ read too
+# (sched_getaffinity is Linux-only; cpu_count counts every core)
+DEFAULT_SHUFFLE_PARTITIONS = int(
+    os.environ.get("SPARK_GRAFT_CPUS")
+    or (
+        len(os.sched_getaffinity(0))
+        if hasattr(os, "sched_getaffinity")
+        else os.cpu_count()
+    )
+)
 
 # local-mode heap: Spark's 1g driver default is sized for a CLUSTER
 # driver that only coordinates — but local[N] runs every executor

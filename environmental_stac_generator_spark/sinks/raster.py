@@ -2,14 +2,17 @@
 
 The reference's per-leadtime process pool (``stac/generator.py:781-789``)
 becomes ``groupBy(collection, forecast_reference_time, leadtime_idx)
-.applyInPandas(...)`` — each Spark task rebuilds one grid from long
-rows and encodes one file, so parallelism is the number of
-(init, leadtime) groups instead of a 4-worker pool, and the only
-cross-node traffic is Spark's own shuffle of the grouped cells.
+.applyInPandas(...)`` over the packed slabs of
+``sources.netcdf.scan_netcdf_grids`` — each Spark task stacks one
+(init, leadtime)'s variable slabs into a grid and encodes one file, so
+parallelism is the number of (init, leadtime) groups instead of a
+4-worker pool, and the only cross-node traffic is Spark's own shuffle
+of a few packed slabs per file.
 
-Grid reconstruction order is explicit — ``yc`` descending (north-up
-raster convention), ``xc`` ascending, bands sorted by variable name —
-making the long→grid round trip deterministic (SURVEY §7 hard-point b).
+Grid order is explicit — ``yc`` descending (north-up raster
+convention), ``xc`` ascending (packed so by the scan), bands sorted by
+variable name — so each file's bytes are deterministic (SURVEY §7
+hard-point b).
 
 Encoders are pluggable:
 - :func:`rio_cogeo_encoder` — real COG (256-px tiles, 4 overview
@@ -105,24 +108,6 @@ def multihash_md5(data: bytes) -> str:
     spec-compliant consumer (multihash.decode, pgSTAC checksum
     validation) would reject the digest."""
     return "d50110" + hashlib.md5(data).hexdigest()
-
-
-def grid_from_long(pdf: pd.DataFrame) -> tuple[np.ndarray, list[str], np.ndarray, np.ndarray]:
-    """Rebuild a (band, y, x) array from long rows, north-up."""
-    ys = np.sort(pdf["yc"].unique())[::-1]  # yc descending
-    xs = np.sort(pdf["xc"].unique())  # xc ascending
-    bands = sorted(pdf["variable"].unique())
-    y_pos = {v: i for i, v in enumerate(ys)}
-    x_pos = {v: i for i, v in enumerate(xs)}
-    arr = np.full((len(bands), len(ys), len(xs)), np.nan)
-    for bi, var in enumerate(bands):
-        sub = pdf[pdf["variable"] == var]
-        arr[
-            bi,
-            sub["yc"].map(y_pos).to_numpy(),
-            sub["xc"].map(x_pos).to_numpy(),
-        ] = sub["value"].to_numpy()
-    return arr, bands, ys, xs
 
 
 # --- Dependency-free tiled-TIFF writer -------------------------------
@@ -551,21 +536,22 @@ def _check_leadtime_resolution(unit: str, step: float) -> None:
 
 
 def encode_cogs(
-    long_df: DataFrame,
+    grids_df: DataFrame,
     out_dir: str | Path,
     encoder: Encoder = fake_tiff_encoder,
     thumbnail_encoder: Encoder = fake_jpeg_encoder,
     overwrite: bool = True,
-    stac_only: bool = False,
     leadtime_unit: str = "days",
     leadtime_step: float = 1.0,
     external_overviews: ExternalOverviews | None = None,
     reproject: GridReproject | None = None,
 ) -> DataFrame:
     """K2/U2 (+K3/U4): one multi-band COG per (collection, init time,
-    leadtime), plus a thumbnail for leadtime 0 only
-    (ref ``stac/generator.py:901-921``). Returns a result DataFrame
-    (path, dims, checksum, skipped) — the input to asset assembly.
+    leadtime) from the packed slabs of
+    ``sources.netcdf.scan_netcdf_grids``, plus a thumbnail for
+    leadtime 0 only (ref ``stac/generator.py:901-921``). Returns a
+    result DataFrame (path, dims, checksum, skipped) — the input to
+    asset assembly.
 
     Skip-existing (P9/J6): with ``overwrite=False``, groups whose
     output file already exists return ``skipped=True`` without
@@ -573,84 +559,55 @@ def encode_cogs(
     """
     _check_leadtime_resolution(leadtime_unit, leadtime_step)
     out = str(out_dir)
-    opts = dict(
-        encoder=encoder,
-        thumbnail_encoder=thumbnail_encoder,
-        overwrite=overwrite,
-        stac_only=stac_only,
-        leadtime_unit=leadtime_unit,
-        leadtime_step=leadtime_step,
-        external_overviews=external_overviews,
-        reproject=reproject,
-    )
 
     def encode_group(key, pdf: pd.DataFrame):
         collection, ref_time, lead = key
-        def build():
-            return grid_from_long(pdf)
-        return _encode_one(out, collection, ref_time, int(lead), build, **opts)
-
-    return (
-        long_df.groupBy("collection", "forecast_reference_time", "leadtime_idx")
-        .applyInPandas(encode_group, schema=COG_RESULT_SCHEMA)
-    )
-
-
-def _encode_one(
-    out: str,
-    collection,
-    ref_time,
-    lead: int,
-    build_grid,
-    encoder: Encoder,
-    thumbnail_encoder: Encoder,
-    overwrite: bool,
-    stac_only: bool,
-    leadtime_unit: str,
-    leadtime_step: float,
-    external_overviews: ExternalOverviews | None,
-    reproject: GridReproject | None,
-) -> pd.DataFrame:
-    """Shared per-(collection, init, leadtime) encode: path scheme,
-    skip-existing, band stack, write, result row. ``build_grid`` is
-    called lazily so the skip path never materializes the array."""
-    ref = pd.Timestamp(ref_time)
-    d = Path(out) / "cogs" / str(collection) / str(ref.date())
-    stamp = ref.strftime("%Y-%m-%dT%H-%M-%SZ")
-    # file named by VALID time (ref valid_time_str_1 "%Y-%m-%d_%H%M",
-    # stac/generator.py:866,871-875) so hrefs in the STAC assets
-    # (plans.stac_catalog.build_cog_assets) resolve to these files
-    vt = _valid_time(ref, lead, leadtime_unit, leadtime_step)
-    lead_stamp = f"{stamp}_lead_{vt.strftime('%Y-%m-%d_%H%M')}"
-    cog_path = d / f"forecast_init_{lead_stamp}.tif"
-    if cog_path.exists() and not overwrite:
-        data = cog_path.read_bytes()
-        return pd.DataFrame(
-            [
-                {
-                    "collection": collection,
-                    "forecast_reference_time": ref_time,
-                    "leadtime_idx": lead,
-                    "path": str(cog_path),
-                    "n_bands": -1,
-                    "height": -1,
-                    "width": -1,
-                    "size": len(data),
-                    "multihash": multihash_md5(data),
-                    "skipped": True,
-                }
-            ]
+        lead = int(lead)
+        ref = pd.Timestamp(ref_time)
+        d = Path(out) / "cogs" / str(collection) / str(ref.date())
+        stamp = ref.strftime("%Y-%m-%dT%H-%M-%SZ")
+        # file named by VALID time (ref valid_time_str_1 "%Y-%m-%d_%H%M",
+        # stac/generator.py:866,871-875) so hrefs in the STAC assets
+        # (plans.stac_catalog.build_cog_assets) resolve to these files
+        vt = _valid_time(ref, lead, leadtime_unit, leadtime_step)
+        lead_stamp = f"{stamp}_lead_{vt.strftime('%Y-%m-%d_%H%M')}"
+        cog_path = d / f"forecast_init_{lead_stamp}.tif"
+        row = {
+            "collection": collection,
+            "forecast_reference_time": ref_time,
+            "leadtime_idx": lead,
+            "path": str(cog_path),
+        }
+        if cog_path.exists() and not overwrite:
+            data = cog_path.read_bytes()
+            return pd.DataFrame(
+                [
+                    {
+                        **row,
+                        "n_bands": -1,
+                        "height": -1,
+                        "width": -1,
+                        "size": len(data),
+                        "multihash": multihash_md5(data),
+                        "skipped": True,
+                    }
+                ]
+            )
+        sub = pdf.sort_values("variable")
+        bands = list(sub["variable"])
+        ny = int(sub["ny"].iloc[0])
+        nx = int(sub["nx"].iloc[0])
+        ys = np.asarray(sub["ys"].iloc[0], dtype="float64")
+        xs = np.asarray(sub["xs"].iloc[0], dtype="float64")
+        arr = np.stack(
+            [np.asarray(b, dtype="float64").reshape(ny, nx) for b in sub["values"]]
         )
-    arr, bands, ys, xs = build_grid()
-    meta = {"collection": collection, "ys": ys, "xs": xs}
-    if reproject is not None:
-        # F14: warp to EPSG:4326 before encoding (ref _write_cog's
-        # reproject branch, stac/generator.py:1006-1007)
-        arr, ys, xs, meta = reproject(arr, ys, xs, meta)
-        meta.update(ys=ys, xs=xs)
-    if stac_only:
-        data = b""
-    else:
+        meta = {"collection": collection, "ys": ys, "xs": xs}
+        if reproject is not None:
+            # F14: warp to EPSG:4326 before encoding (ref _write_cog's
+            # reproject branch, stac/generator.py:1006-1007)
+            arr, ys, xs, meta = reproject(arr, ys, xs, meta)
+            meta.update(ys=ys, xs=xs)
         data = encoder(arr, bands, meta)
         d.mkdir(parents=True, exist_ok=True)
         # The COG appears LAST: skip-existing keys on its existence,
@@ -672,75 +629,19 @@ def _encode_one(
             thumb = thumbnail_encoder(arr, bands, meta)
             atomic_write_bytes(d / f"forecast_init_{lead_stamp}.jpg", thumb)
         os.replace(tmp, cog_path)
-    return pd.DataFrame(
-        [
-            {
-                "collection": collection,
-                "forecast_reference_time": ref_time,
-                "leadtime_idx": lead,
-                "path": str(cog_path),
-                "n_bands": arr.shape[0],
-                "height": arr.shape[1],
-                "width": arr.shape[2],
-                "size": len(data),
-                "multihash": multihash_md5(data),
-                "skipped": False,
-            }
-        ]
-    )
-
-
-def encode_cogs_grids(
-    grids_df: DataFrame,
-    out_dir: str | Path,
-    encoder: Encoder = fake_tiff_encoder,
-    thumbnail_encoder: Encoder = fake_jpeg_encoder,
-    overwrite: bool = True,
-    stac_only: bool = False,
-    leadtime_unit: str = "days",
-    leadtime_step: float = 1.0,
-    external_overviews: ExternalOverviews | None = None,
-    reproject: GridReproject | None = None,
-) -> DataFrame:
-    """K2/U2 fast path over PACKED grid rows (see
-    ``sources.netcdf.scan_netcdf_grids``): one row per (variable,
-    init, leadtime) slab carrying the 2-D array as bytes. The shuffle
-    moves ~n_bands packed slabs per COG instead of height*width*bands
-    long rows — ~50x less shuffle volume and no per-cell Python —
-    while producing byte-identical files to :func:`encode_cogs`
-    (asserted in tests/test_raster_sink.py)."""
-    _check_leadtime_resolution(leadtime_unit, leadtime_step)
-    out = str(out_dir)
-    opts = dict(
-        encoder=encoder,
-        thumbnail_encoder=thumbnail_encoder,
-        overwrite=overwrite,
-        stac_only=stac_only,
-        leadtime_unit=leadtime_unit,
-        leadtime_step=leadtime_step,
-        external_overviews=external_overviews,
-        reproject=reproject,
-    )
-
-    def encode_group(key, pdf: pd.DataFrame):
-        collection, ref_time, lead = key
-
-        def build():
-            sub = pdf.sort_values("variable")
-            bands = list(sub["variable"])
-            ny = int(sub["ny"].iloc[0])
-            nx = int(sub["nx"].iloc[0])
-            ys = np.asarray(sub["ys"].iloc[0], dtype="float64")
-            xs = np.asarray(sub["xs"].iloc[0], dtype="float64")
-            arr = np.stack(
-                [
-                    np.asarray(b, dtype="float64").reshape(ny, nx)
-                    for b in sub["values"]
-                ]
-            )
-            return arr, bands, ys, xs
-
-        return _encode_one(out, collection, ref_time, int(lead), build, **opts)
+        return pd.DataFrame(
+            [
+                {
+                    **row,
+                    "n_bands": arr.shape[0],
+                    "height": arr.shape[1],
+                    "width": arr.shape[2],
+                    "size": len(data),
+                    "multihash": multihash_md5(data),
+                    "skipped": False,
+                }
+            ]
+        )
 
     return (
         grids_df.groupBy("collection", "forecast_reference_time", "leadtime_idx")
@@ -750,70 +651,66 @@ def encode_cogs_grids(
 
 def fake_netcdf_encoder(pdf: pd.DataFrame, meta: dict) -> bytes:
     """K1 stand-in: zlib level-9 container (the reference writes
-    zlib-9 NetCDF, ``stac/generator.py:969-974``); deterministic."""
-    ordered = pdf.sort_values(["variable", "leadtime_idx", "yc", "xc"])
-    return b"FAKENC_1" + zlib.compress(
-        ordered[["value"]].to_numpy().astype("float64").tobytes(), 9
-    )
-
-
-def _netcdf_encode_group(
-    out: str, key, pdf: pd.DataFrame, encoder, overwrite: bool
-) -> pd.DataFrame:
-    """Shared K1/U3 per-(collection, init) encode body: path scheme,
-    skip-existing, atomic write, result row — used by both the
-    long-rows and the packed-grids sinks (only the encoder differs)."""
-    collection, ref_time = key
-    d = Path(out) / "netcdf" / str(collection) / str(pd.Timestamp(ref_time).date())
-    stamp = pd.Timestamp(ref_time).strftime("%Y-%m-%dT%H-%M-%SZ")
-    nc_path = d / f"{stamp}.nc"
-    if nc_path.exists() and not overwrite:
-        data = nc_path.read_bytes()
-        skipped = True
-    else:
-        data = encoder(pdf, {"collection": collection})
-        d.mkdir(parents=True, exist_ok=True)
-        atomic_write_bytes(nc_path, data)
-        skipped = False
-    return pd.DataFrame(
-        [
-            {
-                "collection": collection,
-                "forecast_reference_time": ref_time,
-                "path": str(nc_path),
-                "n_variables": pdf["variable"].nunique(),
-                "size": len(data),
-                "multihash": multihash_md5(data),
-                "skipped": skipped,
-            }
-        ]
-    )
+    zlib-9 NetCDF, ``stac/generator.py:969-974``); deterministic. The
+    payload is the init's cell values ordered by (variable, leadtime,
+    yc, xc): slabs by (variable, leadtime), each flipped back from
+    north-up to y-ascending."""
+    ordered = pdf.sort_values(["variable", "leadtime_idx"])
+    parts = [
+        np.flipud(
+            np.asarray(r["values"], dtype="float64").reshape(r["ny"], r["nx"])
+        ).ravel()
+        for _, r in ordered.iterrows()
+    ]
+    return b"FAKENC_1" + zlib.compress(np.concatenate(parts).tobytes(), 9)
 
 
 def write_netcdf_slices(
-    long_df: DataFrame,
+    grids_df: DataFrame,
     out_dir: str | Path,
     encoder: Callable[[pd.DataFrame, dict], bytes] = fake_netcdf_encoder,
     overwrite: bool = True,
 ) -> DataFrame:
     """K1/U3: one sliced NetCDF per (collection, init time), path
     ``netcdf/{collection}/{date}/{ts}.nc``
-    (ref ``stac/generator.py:689-707,961-979``).
+    (ref ``stac/generator.py:689-707,961-979``), from the packed slabs
+    of ``sources.netcdf.scan_netcdf_grids``. The encoder receives the
+    init's slab rows.
 
     Memory profile: "one output file = one applyInPandas group" is
     inherent to writing a single .nc per init, so the task holds the
-    file's LONG rows as a pandas frame — 10-20x the file's data bytes
-    (object-dtype strings per cell) plus the encoder's sorted copy.
-    Fine for modest files; for the canonical 278 MB / 34.7M-cell file
-    (BASELINE.md) use :func:`write_netcdf_slices_grids` (the engine's
-    ``packed_encode=True`` default), whose group is one row per SLAB
-    and peaks at ~2x the file's data bytes — byte-identical output."""
+    file's slabs — one row per (variable, leadtime), peaking at ~2x
+    the file's data bytes."""
     out = str(out_dir)
 
     def encode_group(key, pdf: pd.DataFrame):
-        return _netcdf_encode_group(out, key, pdf, encoder, overwrite)
+        collection, ref_time = key
+        d = Path(out) / "netcdf" / str(collection) / str(pd.Timestamp(ref_time).date())
+        stamp = pd.Timestamp(ref_time).strftime("%Y-%m-%dT%H-%M-%SZ")
+        nc_path = d / f"{stamp}.nc"
+        if nc_path.exists() and not overwrite:
+            data = nc_path.read_bytes()
+            skipped = True
+        else:
+            data = encoder(pdf, {"collection": collection})
+            d.mkdir(parents=True, exist_ok=True)
+            atomic_write_bytes(nc_path, data)
+            skipped = False
+        return pd.DataFrame(
+            [
+                {
+                    "collection": collection,
+                    "forecast_reference_time": ref_time,
+                    "path": str(nc_path),
+                    "n_variables": pdf["variable"].nunique(),
+                    "size": len(data),
+                    "multihash": multihash_md5(data),
+                    "skipped": skipped,
+                }
+            ]
+        )
 
-    return long_df.groupBy("collection", "forecast_reference_time").applyInPandas(
+    return grids_df.groupBy("collection", "forecast_reference_time").applyInPandas(
         encode_group, schema=NETCDF_RESULT_SCHEMA
     )
 
@@ -839,38 +736,4 @@ def skip_existing_outputs(planned: DataFrame, out_dir: str | Path, spark) -> Dat
         existing,
         planned["path"] == F.regexp_replace("_existing_path", "^file:", ""),
         "left_anti",
-    )
-
-
-def fake_netcdf_grids_encoder(pdf: pd.DataFrame, meta: dict) -> bytes:
-    """Packed-slab twin of :func:`fake_netcdf_encoder` — byte-identical
-    output: slabs ordered by (variable, leadtime), each flipped back to
-    y-ascending to match the long path's (yc, xc) sort."""
-    ordered = pdf.sort_values(["variable", "leadtime_idx"])
-    parts = [
-        np.flipud(
-            np.asarray(r["values"], dtype="float64").reshape(r["ny"], r["nx"])
-        ).ravel()
-        for _, r in ordered.iterrows()
-    ]
-    return b"FAKENC_1" + zlib.compress(np.concatenate(parts).tobytes(), 9)
-
-
-def write_netcdf_slices_grids(
-    grids_df: DataFrame,
-    out_dir: str | Path,
-    encoder: Callable[[pd.DataFrame, dict], bytes] = fake_netcdf_grids_encoder,
-    overwrite: bool = True,
-) -> DataFrame:
-    """K1/U3 fast path over packed slabs (see
-    ``sources.netcdf.scan_netcdf_grids``): the shuffle moves one row
-    per (variable, leadtime) slab instead of every cell, producing
-    byte-identical slice files (asserted in tests)."""
-    out = str(out_dir)
-
-    def encode_group(key, pdf: pd.DataFrame):
-        return _netcdf_encode_group(out, key, pdf, encoder, overwrite)
-
-    return grids_df.groupBy("collection", "forecast_reference_time").applyInPandas(
-        encode_group, schema=NETCDF_RESULT_SCHEMA
     )

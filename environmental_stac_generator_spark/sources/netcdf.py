@@ -6,13 +6,20 @@ The reference opens each forecast file with
 Spark has no native NetCDF source, so the scan is:
 
     spark.read.format("binaryFile").load(glob)      # distributed listing
-      -> mapInPandas(decode)                         # Arrow-batched explode
-      -> long rows (collection, time, leadtime_idx, variable, yc, xc, value)
+      -> mapInPandas(decode + pack)                  # Arrow-batched
+      -> packed slabs (collection, time, leadtime_idx, variable,
+                       ny, nx, ys, xs, values)       # scan_netcdf_grids
+
+The packed slab is the one in-flight format for decoded forecast
+data: the raster sinks (``sinks.raster``) group slabs, and the long
+cell relation (``scan_netcdf``) is derived from them JVM-side by
+:func:`long_from_grids`, so per-cell data never crosses a Python
+boundary after the decoder.
 
 Scale design (100 TB of daily files):
 - ``binaryFile`` distributes one file per task; a 278 MB canonical
-  file (432x432x93x2 vars, BASELINE.md) explodes to ~34.7 M rows per
-  task, emitted **slab by slab** (one (variable, leadtime) slice at a
+  file (432x432x93x2 vars, BASELINE.md) holds ~34.7 M cells, decoded
+  and packed **slab by slab** (one (variable, leadtime) slice at a
   time) so executor memory stays bounded at one 2-D grid regardless
   of file size — the analog of the reference's lazy xarray loads.
 - The decoder is pluggable: :func:`xarray_decoder` uses
@@ -74,7 +81,9 @@ FILE_META_SCHEMA = StructType(
     ]
 )
 
-# decoder(path, content) -> iterator of (long_chunk, meta_row_or_None)
+# decoder(path, content) -> iterator of DataFrames in LONG_SCHEMA
+# columns, each one dense slab: every (yc, xc) cell of one
+# (collection, init time, leadtime, variable) exactly once
 Decoder = Callable[[str, bytes], Iterator[pd.DataFrame]]
 
 
@@ -114,7 +123,7 @@ def _require_coord(
 
 
 def xarray_decoder(path: str, content: bytes | None) -> Iterator[pd.DataFrame]:
-    """Real NetCDF decode via xarray/h5netcdf (ref S1). Emits one long
+    """Real NetCDF decode via xarray/h5netcdf (ref S1). Emits one dense
     chunk per (variable, time, leadtime) slab so peak memory is one
     2-D grid. Raises if the raster stack is not installed.
 
@@ -155,7 +164,7 @@ def xarray_decoder(path: str, content: bytes | None) -> Iterator[pd.DataFrame]:
         # runs on the opened dataset BEFORE any bbox/geometry math
         # (stac/generator.py:533-553): km / legacy '1000 meter'
         # coordinates scale to metres here, so every downstream
-        # consumer of the long relation sees metres without a units
+        # consumer of the scan sees metres without a units
         # column or a metadata join.
         if str(ds[x].attrs.get("units", "")) in KM_UNITS:
             xs = xs * 1000.0
@@ -233,39 +242,6 @@ def fake_decoder(
     return decode
 
 
-def scan_netcdf(
-    spark: SparkSession,
-    path: str,
-    decoder: Decoder | None = None,
-    glob: str = "*.nc",
-    with_content: bool = False,
-) -> DataFrame:
-    """Distributed NetCDF -> long-format scan (S1/U1).
-
-    One task per file; each task streams slab-sized chunks through
-    Arrow. Downstream groupBy/agg sees ordinary rows — all of
-    SURVEY §2's relational operators apply unchanged.
-
-    By default only ``path`` is projected from the binaryFile listing
-    (column pruning elides the content read entirely) and the decoder
-    opens the file lazily — executor memory holds one slab, not one
-    file. ``with_content=True`` ships whole files through the scan for
-    decoders that need a byte stream.
-    """
-    dec = decoder or xarray_decoder
-    files = (
-        spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
-    )
-
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                yield from dec(row["path"], row["content"] if with_content else None)
-
-    cols = ["path", "content"] if with_content else ["path"]
-    return files.select(*cols).mapInPandas(explode, schema=LONG_SCHEMA)
-
-
 def xarray_meta_decoder(path: str, content: bytes | None = None) -> dict:
     """Real attribute-only metadata read (hemisphere detection inputs,
     ref ``utils.py:47-82``): opens the header lazily, reads global
@@ -339,7 +315,7 @@ def scan_netcdf_metadata(
     header); ``with_content=True`` for stream-only decoders. The
     default decoder is the REAL :func:`xarray_meta_decoder` (raising
     without the raster stack); environments without it inject
-    :func:`fake_meta_decoder` — mirroring :func:`scan_netcdf`."""
+    :func:`fake_meta_decoder` — mirroring :func:`scan_netcdf_grids`."""
     dec = meta_decoder or xarray_meta_decoder
     files = (
         spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
@@ -376,6 +352,10 @@ GRID_SCHEMA = (
 )
 
 
+# the key one packed slab (and one decoder chunk) belongs to
+SLAB_KEY = ("collection", "forecast_reference_time", "leadtime_idx", "variable")
+
+
 def scan_netcdf_grids(
     spark: SparkSession,
     path: str,
@@ -383,13 +363,21 @@ def scan_netcdf_grids(
     glob: str = "*.nc",
     with_content: bool = False,
 ) -> DataFrame:
-    """S1/U1 packed fast path: one row per (variable, init, leadtime)
-    SLAB — the 2-D array as float64 bytes in north-up (y desc, x asc)
-    order — instead of one row per cell. Downstream COG encoding
-    (``sinks.raster.encode_cogs_grids``) then shuffles packed slabs,
-    not cells: ~50x less shuffle volume at identical output bytes.
-    The long form (``scan_netcdf``) remains the relational surface
-    for stats/bbox queries; this is the bulk-movement path."""
+    """Distributed NetCDF -> packed-slab scan (S1/U1): one row per
+    (variable, init, leadtime) SLAB, the 2-D array in north-up
+    (y desc, x asc) order. The raster sinks group these slabs, not
+    cells: ~50x less shuffle volume than a per-cell relation.
+
+    One task per file. By default only ``path`` is projected from the
+    binaryFile listing (column pruning elides the content read
+    entirely) and the decoder opens the file lazily — executor memory
+    holds one slab, not one file. ``with_content=True`` ships whole
+    files through the scan for decoders that need a byte stream.
+
+    Each decoder chunk must be one dense slab (see :data:`Decoder`); a
+    chunk spanning several slab keys, or one missing or repeating
+    cells, raises ``ValueError`` naming the file, variable and
+    leadtime instead of packing a misplaced grid."""
     dec = decoder or xarray_decoder
     files = (
         spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
@@ -400,6 +388,22 @@ def scan_netcdf_grids(
             for _, row in pdf.iterrows():
                 content = row["content"] if with_content else None
                 for chunk in dec(row["path"], content):
+                    if chunk.empty:
+                        continue
+                    first = chunk.iloc[0]
+                    where = (
+                        f"{first['path']}: variable {first['variable']!r} "
+                        f"leadtime {first['leadtime_idx']}"
+                    )
+                    # adjacent-row compare: cheaper than nunique on
+                    # the object (string) key columns
+                    keys = (chunk[c].to_numpy() for c in SLAB_KEY)
+                    if any((k[1:] != k[:-1]).any() for k in keys):
+                        raise ValueError(
+                            f"{where}: decoder chunk spans more than one "
+                            "(collection, init time, leadtime, variable) slab; "
+                            "a Decoder must yield one slab per chunk"
+                        )
                     y = chunk["yc"].to_numpy()
                     x = chunk["xc"].to_numpy()
                     v = chunk["value"].to_numpy(dtype="float64")
@@ -407,16 +411,23 @@ def scan_netcdf_grids(
                     xs = np.sort(np.unique(x))
                     ny, nx = len(ys), len(xs)
                     v = _north_up(y, x, v, ys, xs, ny, nx)
+                    if v is None:
+                        raise ValueError(
+                            f"{where}: decoder chunk holds {len(chunk)} cells, "
+                            f"not each of the {ny}x{nx} grid's cells once; "
+                            "a Decoder must yield dense slabs (NaN, not "
+                            "dropped, for missing values)"
+                        )
                     yield pd.DataFrame(
                         [
                             {
-                                "collection": chunk["collection"].iloc[0],
-                                "path": chunk["path"].iloc[0],
-                                "forecast_reference_time": chunk[
+                                "collection": first["collection"],
+                                "path": first["path"],
+                                "forecast_reference_time": first[
                                     "forecast_reference_time"
-                                ].iloc[0],
-                                "leadtime_idx": int(chunk["leadtime_idx"].iloc[0]),
-                                "variable": chunk["variable"].iloc[0],
+                                ],
+                                "leadtime_idx": int(first["leadtime_idx"]),
+                                "variable": first["variable"],
                                 "ny": ny,
                                 "nx": nx,
                                 "ys": ys.astype("float64"),
@@ -430,32 +441,40 @@ def scan_netcdf_grids(
     return files.select(*cols).mapInPandas(pack, schema=GRID_SCHEMA)
 
 
-def _north_up(y, x, v, ys, xs, ny: int, nx: int) -> np.ndarray:
-    """Values in (y desc, x asc) row-major order. Decoders emit
-    meshgrid-raveled slabs, so the common cases are already row-major
-    up to a vertical flip — recognized with O(n) equality checks (the
-    per-cell lexsort this replaces was the dominant non-decode cost
-    of the packed fast lane); anything irregular falls back to the
-    exact lexsort."""
-    if ny * nx == len(v):
-        Y = y.reshape(ny, nx)
-        X = x.reshape(ny, nx)
-        if (X == xs[None, :]).all() and (Y == Y[:, :1]).all():
-            col = Y[:, 0]
-            if np.array_equal(col, ys):  # already north-up
-                return v
-            if np.array_equal(col, ys[::-1]):  # south-up: flip rows
-                return v.reshape(ny, nx)[::-1].ravel()
-    return v[np.lexsort((x, -y))]
+def _north_up(y, x, v, ys, xs, ny: int, nx: int) -> np.ndarray | None:
+    """Values in (y desc, x asc) row-major order, or None when the
+    cells are not each of the ``ny x nx`` grid's cells exactly once.
+    Decoders emit meshgrid-raveled slabs, so the common cases are
+    already row-major up to a vertical flip — recognized with O(n)
+    equality checks (the per-cell lexsort this replaces was the
+    dominant non-decode cost of the packed scan); anything irregular
+    falls back to the exact lexsort, then checks the sorted cells
+    tile the grid."""
+    if ny * nx != len(v):
+        return None
+    Y = y.reshape(ny, nx)
+    X = x.reshape(ny, nx)
+    if (X == xs[None, :]).all() and (Y == Y[:, :1]).all():
+        col = Y[:, 0]
+        if np.array_equal(col, ys):  # already north-up
+            return v
+        if np.array_equal(col, ys[::-1]):  # south-up: flip rows
+            return v.reshape(ny, nx)[::-1].ravel()
+    order = np.lexsort((x, -y))
+    if (y[order].reshape(ny, nx) == ys[:, None]).all() and (
+        x[order].reshape(ny, nx) == xs[None, :]
+    ).all():
+        return v[order]
+    return None
 
 
 def long_from_grids(grids_df: DataFrame) -> DataFrame:
-    """Packed slabs -> the long cell relation, entirely JVM-side
-    (posexplode + element_at inside whole-stage codegen). Combined
-    with :func:`scan_netcdf_grids` this means per-CELL data never
-    crosses a Python boundary: Python touches one row per slab, and
-    the ~10^4-10^6 cells per slab are exploded by Tungsten. Produces
-    the same rows as :func:`scan_netcdf` (order aside)."""
+    """Packed slabs -> the long cell relation (``LONG_SCHEMA``),
+    entirely JVM-side (posexplode + element_at inside whole-stage
+    codegen). Combined with :func:`scan_netcdf_grids` this means
+    per-CELL data never crosses a Python boundary: Python touches one
+    row per slab, and the ~10^4-10^6 cells per slab are exploded by
+    Tungsten."""
     e = F.posexplode("values")
     return (
         grids_df.select(
@@ -480,4 +499,22 @@ def long_from_grids(grids_df: DataFrame) -> DataFrame:
             F.element_at("xs", (F.col("i") % F.col("nx")) + 1).alias("xc"),
             "value",
         )
+    )
+
+
+def scan_netcdf(
+    spark: SparkSession,
+    path: str,
+    decoder: Decoder | None = None,
+    glob: str = "*.nc",
+    with_content: bool = False,
+) -> DataFrame:
+    """Distributed NetCDF -> long-format scan (S1/U1): one row per
+    cell in ``LONG_SCHEMA``, the relational surface for stats/bbox
+    queries — all of SURVEY §2's relational operators apply unchanged.
+    The rows are the decoder's cells (order aside), derived JVM-side
+    from the packed slab scan (:func:`scan_netcdf_grids`); arguments
+    are as there."""
+    return long_from_grids(
+        scan_netcdf_grids(spark, path, decoder, glob=glob, with_content=with_content)
     )

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import re
+
+import pandas as pd
 import pytest
 
 from environmental_stac_generator_spark.sources import netcdf
@@ -81,30 +84,67 @@ def test_content_pruned_from_scan_by_default(spark, tmp_path):
     assert "content" in fplan.split("ReadSchema:")[-1]
 
 
-def test_long_from_grids_matches_long_scan(spark, tmp_path):
+def test_scan_netcdf_matches_decoder_chunks(spark, tmp_path):
+    """The long rows equal the decoder's own chunks concatenated, and
+    the scan's only Python stage is the slab scan: the cells are
+    exploded JVM-side."""
+    import pandas.testing as pdt
+
     landing = tmp_path / "lfg"
     landing.mkdir()
     (landing / "fc0.nc").write_bytes(b"\x00")
     dec = netcdf.fake_decoder(grid=8, n_lead=2)
-    cols = ["collection", "forecast_reference_time", "leadtime_idx",
-            "variable", "yc", "xc", "value"]
-    direct = (
-        netcdf.scan_netcdf(spark, str(landing), decoder=dec)
-        .select(cols).toPandas().sort_values(cols[:6]).reset_index(drop=True)
+    cols = netcdf.LONG_SCHEMA.fieldNames()
+    keys = ["forecast_reference_time", "leadtime_idx", "variable", "yc", "xc"]
+    (path,) = [r["path"] for r in netcdf.list_files(spark, str(landing)).collect()]
+    want = pd.concat(list(dec(path, None)), ignore_index=True)[cols]
+    want["forecast_reference_time"] = want["forecast_reference_time"].astype(
+        "datetime64[ns]"
     )
-    derived = (
-        netcdf.long_from_grids(netcdf.scan_netcdf_grids(spark, str(landing), decoder=dec))
-        .select(cols).toPandas().sort_values(cols[:6]).reset_index(drop=True)
+    df = netcdf.scan_netcdf(spark, str(landing), decoder=dec)
+    got = df.toPandas()
+    pdt.assert_frame_equal(
+        got.sort_values(keys).reset_index(drop=True),
+        want.sort_values(keys).reset_index(drop=True),
     )
-    import pandas.testing as pdt
-
-    pdt.assert_frame_equal(direct, derived)
-    # and the derived path is pure JVM after the slab scan
-    plan = (
-        netcdf.long_from_grids(netcdf.scan_netcdf_grids(spark, str(landing), decoder=dec))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 1  # only the slab scan
+
+
+@pytest.mark.parametrize(
+    "fault,error",
+    [
+        ("sparse", "grid's cells once"),
+        ("duplicate_cell", "grid's cells once"),
+        ("multi_slab", "spans more than one"),
+    ],
+    ids=["sparse", "duplicate_cell", "multi_slab"],
+)
+def test_scan_rejects_chunks_that_are_not_one_dense_slab(
+    spark, tmp_path, fault, error
+):
+    """A decoder chunk must be one dense (collection, init, leadtime,
+    variable) slab; anything else fails loudly, naming the file,
+    variable and leadtime, instead of packing a misplaced grid."""
+    landing = tmp_path / "bad"
+    landing.mkdir()
+    (landing / "fc0.nc").write_bytes(b"\x00")
+    inner = netcdf.fake_decoder(grid=8, n_lead=3)
+
+    def dec(path, content):
+        chunks = list(inner(path, content))
+        if fault == "multi_slab":  # every slab of the file in one chunk
+            yield pd.concat(chunks, ignore_index=True)
+        elif fault == "sparse":  # missing cells dropped, not NaN
+            yield from (c[c["value"].notna()] for c in chunks)
+        else:  # right cell count, but one cell twice and one not at all
+            c = chunks[0].copy()
+            c.loc[c.index[-1], ["yc", "xc"]] = c.iloc[0][["yc", "xc"]].to_numpy()
+            yield c
+
+    with pytest.raises(Exception, match=error) as exc:
+        netcdf.scan_netcdf(spark, str(landing), decoder=dec).count()
+    assert re.search(r"fc0\.nc: variable 'sic_\w+' leadtime \d", str(exc.value))
 
 
 def test_metadata_scan_default_is_real_decoder(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""K1/K2/K3 raster sinks: grid round trip, skip-existing, stats tags."""
+"""K1/K2/K3 raster sinks: reference bytes, skip-existing, stats tags."""
 
 from __future__ import annotations
 
@@ -6,6 +6,7 @@ import struct
 import zlib
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from environmental_stac_generator_spark.sinks import raster
@@ -16,33 +17,42 @@ from environmental_stac_generator_spark.sources.raster_probe import (
 
 
 @pytest.fixture(scope="module")
-def long_df(spark, tmp_path_factory):
+def grids(spark, tmp_path_factory):
     d = tmp_path_factory.mktemp("rast") / "icenet_test"
     d.mkdir()
     (d / "fc0.nc").write_bytes(b"\x00")
-    return netcdf.scan_netcdf(
+    return netcdf.scan_netcdf_grids(
         spark, str(d), decoder=netcdf.fake_decoder()
     ).persist()
 
 
-def test_grid_from_long_roundtrip(long_df):
-    pdf = long_df.toPandas()
-    one = pdf[(pdf.leadtime_idx == 0)]
-    arr, bands, ys, xs = raster.grid_from_long(one)
-    assert arr.shape == (2, 8, 8)
-    assert bands == ["sic_mean", "sic_stddev"]
-    assert ys[0] > ys[-1]  # north-up: yc descending
-    assert xs[0] < xs[-1]
-    # spot-check a cell against the long rows
-    row = one[(one.variable == "sic_mean")].iloc[7]
-    yi = list(ys).index(row["yc"])
-    xi = list(xs).index(row["xc"])
-    v = arr[0, yi, xi]
-    assert (np.isnan(v) and np.isnan(row["value"])) or v == row["value"]
+def _decoded(spark, src: str, dec) -> pd.DataFrame:
+    """The decoder's own chunks for every listed file, concatenated:
+    the reference the sinks are checked against, built without the
+    scan or the sinks."""
+    paths = sorted(r["path"] for r in netcdf.list_files(spark, src).collect())
+    return pd.concat([c for p in paths for c in dec(p, None)], ignore_index=True)
 
 
-def test_encode_cogs_and_thumbnails(long_df, tmp_path):
-    res = raster.encode_cogs(long_df, tmp_path).collect()
+def _north_up_stack(cells: pd.DataFrame) -> tuple[np.ndarray, list[str]]:
+    """(band, y, x) array of one (collection, init, leadtime)'s cells:
+    bands sorted by variable, yc descending, xc ascending. C order, as
+    the encoder's NaN stats sum in memory order."""
+    bands = sorted(cells["variable"].unique())
+    grids = [
+        cells[cells["variable"] == b]
+        .pivot(index="yc", columns="xc", values="value")
+        .sort_index(ascending=False)
+        .sort_index(axis=1)
+        .to_numpy()
+        for b in bands
+    ]
+    arr = np.ascontiguousarray(np.stack(grids))
+    return arr, bands
+
+
+def test_encode_cogs_and_thumbnails(grids, tmp_path):
+    res = raster.encode_cogs(grids, tmp_path).collect()
     assert len(res) == 3  # one per leadtime
     assert all(not r["skipped"] for r in res)
     for r in res:
@@ -65,10 +75,12 @@ def test_encode_cogs_and_thumbnails(long_df, tmp_path):
     assert jpgs[0].name.split("_lead_")[1].startswith(init_stamp[:10])
 
 
-def test_fake_cog_embeds_band_stats(long_df):
-    pdf = long_df.toPandas()
-    one = pdf[pdf.leadtime_idx == 0]
-    arr, bands, _, _ = raster.grid_from_long(one)
+def test_fake_cog_embeds_band_stats(grids):
+    one = grids.filter("leadtime_idx = 0").orderBy("variable").toPandas()
+    bands = list(one["variable"])
+    arr = np.stack(
+        [np.reshape(r["values"], (r["ny"], r["nx"])) for _, r in one.iterrows()]
+    )
     blob = raster.fake_tiff_encoder(arr, bands, {})
     info = parse_tiff_header(blob)
     assert info["band_names"] == bands
@@ -81,18 +93,18 @@ def test_fake_cog_embeds_band_stats(long_df):
     assert stats[0]["STATISTICS_STDDEV"] == np.nanstd(arr[0])
 
 
-def test_skip_existing(long_df, tmp_path):
-    first = raster.encode_cogs(long_df, tmp_path, overwrite=True).collect()
-    second = raster.encode_cogs(long_df, tmp_path, overwrite=False).collect()
+def test_skip_existing(grids, tmp_path):
+    first = raster.encode_cogs(grids, tmp_path, overwrite=True).collect()
+    second = raster.encode_cogs(grids, tmp_path, overwrite=False).collect()
     assert all(not r["skipped"] for r in first)
     assert all(r["skipped"] for r in second)  # P9/J6
     # overwrite=True re-encodes
-    third = raster.encode_cogs(long_df, tmp_path, overwrite=True).collect()
+    third = raster.encode_cogs(grids, tmp_path, overwrite=True).collect()
     assert all(not r["skipped"] for r in third)
 
 
-def test_write_netcdf_slices(long_df, tmp_path):
-    res = raster.write_netcdf_slices(long_df, tmp_path).collect()
+def test_write_netcdf_slices(grids, tmp_path):
+    res = raster.write_netcdf_slices(grids, tmp_path).collect()
     assert len(res) == 1  # one init time
     r = res[0]
     assert r["n_variables"] == 2
@@ -102,55 +114,61 @@ def test_write_netcdf_slices(long_df, tmp_path):
     assert "/netcdf/icenet_test/" in r["path"]
 
 
-def test_grid_fast_path_byte_identical(spark, tmp_path):
-    from environmental_stac_generator_spark.sinks.raster import encode_cogs_grids
-
+def _two_collection_landing(root):
     # one collection per subdir so (collection, init, leadtime) groups
-    # never merge cells from two files (same-key collisions are
-    # ill-defined in the long path too)
-    landing = tmp_path / "grid_landing"
+    # never merge cells from two files
     for i in range(2):
-        (landing / f"coll{i}").mkdir(parents=True)
-        (landing / f"coll{i}" / "fc.nc").write_bytes(bytes([i]))
-    landing = landing / "*"
+        (root / f"coll{i}").mkdir(parents=True)
+        (root / f"coll{i}" / "fc.nc").write_bytes(bytes([i]))
+    return str(root / "*")
+
+
+def test_cog_bytes_match_decoder_reference(spark, tmp_path):
+    """Every COG equals fake_tiff_encoder over a numpy north-up grid
+    built straight from the decoder's chunks (bands sorted, yc
+    descending, xc ascending)."""
+    src = _two_collection_landing(tmp_path / "grid_landing")
     dec = netcdf.fake_decoder(grid=8, n_lead=3)
-
-    long_df = netcdf.scan_netcdf(spark, str(landing), decoder=dec)
-    slow = {
-        (r["collection"], r["leadtime_idx"], r["path"].rsplit("/", 1)[-1]): r["multihash"]
-        for r in raster.encode_cogs(long_df, tmp_path / "out_long").collect()
+    cells = _decoded(spark, src, dec)
+    grids = netcdf.scan_netcdf_grids(spark, src, decoder=dec)
+    res = raster.encode_cogs(grids, tmp_path / "out").collect()
+    got = {
+        (r["collection"], r["leadtime_idx"]): open(r["path"], "rb").read()
+        for r in res
     }
-    grids = netcdf.scan_netcdf_grids(spark, str(landing), decoder=dec)
-    fast = {
-        (r["collection"], r["leadtime_idx"], r["path"].rsplit("/", 1)[-1]): r["multihash"]
-        for r in encode_cogs_grids(grids, tmp_path / "out_grid").collect()
+    want = {
+        (coll, lead): raster.fake_tiff_encoder(*_north_up_stack(g), {})
+        for (coll, lead), g in cells.groupby(["collection", "leadtime_idx"])
     }
-    # same files, byte-identical content, via ~50x less shuffle
-    assert slow == fast and len(slow) == 6
+    assert got == want and len(got) == 6
+    for r in res:
+        key = (r["collection"], r["leadtime_idx"])
+        assert r["multihash"] == raster.multihash_md5(got[key])
 
 
-def test_netcdf_slices_grid_path_byte_identical(spark, tmp_path):
-    from environmental_stac_generator_spark.sinks.raster import write_netcdf_slices_grids
-
-    landing = tmp_path / "ncg"
-    for i in range(2):
-        (landing / f"c{i}").mkdir(parents=True)
-        (landing / f"c{i}" / "fc.nc").write_bytes(bytes([i]))
-    src = str(landing / "*")
+def test_netcdf_slice_bytes_match_decoder_reference(spark, tmp_path):
+    """Every slice file is FAKENC_1 + zlib-9 of the decoder's values
+    sorted by (variable, leadtime, yc, xc)."""
+    src = _two_collection_landing(tmp_path / "ncg")
     dec = netcdf.fake_decoder(grid=8, n_lead=3)
-    slow = {
-        r["path"].rsplit("/", 3)[-3]: r["multihash"]
+    cells = _decoded(spark, src, dec)
+    got = {
+        r["collection"]: open(r["path"], "rb").read()
         for r in raster.write_netcdf_slices(
-            netcdf.scan_netcdf(spark, src, decoder=dec), tmp_path / "out_l"
+            netcdf.scan_netcdf_grids(spark, src, decoder=dec), tmp_path / "out"
         ).collect()
     }
-    fast = {
-        r["path"].rsplit("/", 3)[-3]: r["multihash"]
-        for r in write_netcdf_slices_grids(
-            netcdf.scan_netcdf_grids(spark, src, decoder=dec), tmp_path / "out_g"
-        ).collect()
+    want = {
+        coll: b"FAKENC_1"
+        + zlib.compress(
+            g.sort_values(["variable", "leadtime_idx", "yc", "xc"])["value"]
+            .to_numpy(dtype="float64")
+            .tobytes(),
+            9,
+        )
+        for coll, g in cells.groupby("collection")
     }
-    assert slow == fast and len(slow) == 2
+    assert got == want and len(got) == 2
 
 
 def test_average_downsample_nan_block_mean():
@@ -166,9 +184,9 @@ def test_average_downsample_nan_block_mean():
     assert ov[1, 1] == 13.0
 
 
-def test_external_overviews_sidecar(long_df, tmp_path):
+def test_external_overviews_sidecar(grids, tmp_path):
     out = raster.encode_cogs(
-        long_df,
+        grids,
         tmp_path,
         external_overviews=raster.default_external_overviews,
     )
@@ -186,7 +204,7 @@ def test_external_overviews_sidecar(long_df, tmp_path):
         assert level == 2 and h >= 1 and w >= 1
 
 
-def test_thumbnail_encoder_selection(long_df, tmp_path):
+def test_thumbnail_encoder_selection(tmp_path):
     arr = np.arange(12.0).reshape(1, 3, 4)
     data = raster.default_thumbnail_encoder(arr, ["b0"], {})
     try:
@@ -206,7 +224,7 @@ def test_matplotlib_encoder_guarded():
             raster.matplotlib_jpeg_encoder(arr, ["b0"], {})
 
 
-def test_reproject_kernel_applied(long_df, tmp_path):
+def test_reproject_kernel_applied(grids, tmp_path):
     # F14: injected warp kernel runs inside the K2 encode kernel
     calls = []
 
@@ -214,9 +232,9 @@ def test_reproject_kernel_applied(long_df, tmp_path):
         calls.append(arr.shape)
         return arr * 2.0, ys, xs, {**meta, "crs": "EPSG:4326"}
 
-    plain = raster.encode_cogs(long_df, tmp_path / "a").collect()
+    plain = raster.encode_cogs(grids, tmp_path / "a").collect()
     warped = raster.encode_cogs(
-        long_df, tmp_path / "b", reproject=mark_kernel
+        grids, tmp_path / "b", reproject=mark_kernel
     ).collect()
     # kernel ran once per (init, leadtime) group and changed the bytes
     by_key = {(r["forecast_reference_time"], r["leadtime_idx"]): r["multihash"] for r in plain}
@@ -281,29 +299,21 @@ def test_skip_existing_outputs_missing_dir_passes_through(spark, tmp_path):
 def test_sub_minute_leadtime_step_rejected(spark, tmp_path):
     """A leadtime step below the output naming scheme's 1-minute
     resolution would silently collide distinct leadtimes onto one
-    path; both encode entry points must fail loudly instead."""
+    path; the COG encode must fail loudly instead."""
     import pytest
 
-    from environmental_stac_generator_spark.sinks.raster import (
-        encode_cogs,
-        encode_cogs_grids,
-    )
+    from environmental_stac_generator_spark.sinks.raster import encode_cogs
     from environmental_stac_generator_spark.sources import netcdf
 
     landing = tmp_path / "nc"
     (landing / "c").mkdir(parents=True)
     (landing / "c" / "f.nc").write_bytes(b"x")
-    long_df = netcdf.scan_netcdf(
-        spark, str(landing / "*"), decoder=netcdf.fake_decoder(grid=4, n_lead=2)
-    )
-    with pytest.raises(ValueError, match="1-minute resolution"):
-        encode_cogs(long_df, tmp_path / "o", leadtime_unit="hours", leadtime_step=0.01)
     grids = netcdf.scan_netcdf_grids(
         spark, str(landing / "*"), decoder=netcdf.fake_decoder(grid=4, n_lead=2)
     )
     with pytest.raises(ValueError, match="1-minute resolution"):
-        encode_cogs_grids(
-            grids, tmp_path / "o2", leadtime_unit="hours", leadtime_step=0.01
+        encode_cogs(
+            grids, tmp_path / "o", leadtime_unit="hours", leadtime_step=0.01
         )
 
 

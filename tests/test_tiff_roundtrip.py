@@ -125,10 +125,10 @@ def test_engine_k2_to_s5_loop(spark, tmp_path):
     d = tmp_path / "coll0"
     d.mkdir()
     (d / "fc.nc").write_bytes(b"\x00")
-    long_df = netcdf.scan_netcdf(
+    grids = netcdf.scan_netcdf_grids(
         spark, str(tmp_path / "*"), decoder=netcdf.fake_decoder(grid=8, n_lead=2)
     )
-    res = raster.encode_cogs(long_df, tmp_path / "out").collect()
+    res = raster.encode_cogs(grids, tmp_path / "out").collect()
     assert res and all(not r["skipped"] for r in res)
     probed = {
         r["path"].rsplit("/", 1)[-1]: r

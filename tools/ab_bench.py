@@ -102,12 +102,15 @@ def main() -> None:
     new_reg, new_mods = _load_registry_from(REPO)
 
     with _active(REPO, new_mods):
-        from environmental_stac_generator_spark.session import get_spark
+        from environmental_stac_generator_spark.session import (
+            DEFAULT_SHUFFLE_PARTITIONS,
+            get_spark,
+        )
 
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = DEFAULT_SHUFFLE_PARTITIONS
         spark = get_spark(
             app_name="envstac-ab", master=f"local[{cpus}]",
-            shuffle_partitions=int(cpus), driver_memory="8g",
+            shuffle_partitions=cpus, driver_memory="8g",
         )
         spark.sparkContext.setLogLevel("ERROR")
 

@@ -27,7 +27,10 @@ from environmental_stac_generator_spark.operators.lineage import (  # noqa: E402
     release_tracked,
 )
 from environmental_stac_generator_spark.registry import load_full_registry  # noqa: E402
-from environmental_stac_generator_spark.session import get_spark  # noqa: E402
+from environmental_stac_generator_spark.session import (  # noqa: E402
+    DEFAULT_SHUFFLE_PARTITIONS,
+    get_spark,
+)
 
 DEFAULT = (
     "pq_encode,pq_ann_probe,ivfpq_ann_probe,ivfpq_residual_probe,"
@@ -38,10 +41,10 @@ DEFAULT = (
 def main() -> None:
     names = (sys.argv[1] if len(sys.argv) > 1 else DEFAULT).split(",")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = DEFAULT_SHUFFLE_PARTITIONS
     spark = get_spark(
         app_name="envstac-probe-latency", master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus), driver_memory="8g",
+        shuffle_partitions=cpus, driver_memory="8g",
     )
     spark.sparkContext.setLogLevel("ERROR")
     reg = load_full_registry()

@@ -30,7 +30,10 @@ from environmental_stac_generator_spark.operators.lineage import (  # noqa: E402
     release_tracked,
 )
 from environmental_stac_generator_spark.registry import load_full_registry  # noqa: E402
-from environmental_stac_generator_spark.session import get_spark  # noqa: E402
+from environmental_stac_generator_spark.session import (  # noqa: E402
+    DEFAULT_SHUFFLE_PARTITIONS,
+    get_spark,
+)
 
 
 def _rest(spark, path: str):
@@ -138,11 +141,11 @@ def main() -> None:
         only = sys.argv[sys.argv.index("--only") + 1].split(",")
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = DEFAULT_SHUFFLE_PARTITIONS
     spark = get_spark(
         app_name="envstac-profile-r16",
         master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
+        shuffle_partitions=cpus,
         driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -7,7 +7,7 @@ ratios ≈ 1 and cannot demonstrate that the fan-out and kernel paths
 scale. This lane times a subset of HEADLINE rows at a LARGER corpus
 (generate with tools/make_testdata.py, e.g. sf1 = 500k docs /
 embeddings, 6M lineitem) where per-task compute dominates, at the
-core count given by $SPARK_GRAFT_CPUS.
+core count given by $SPARK_GRAFT_CPUS (default: the host's usable cores).
 
 Excluded by design: the fixed-K semdedup rows (K=8 is oracle-pinned
 for the driver corpus; at 500k embeddings a 62k-member cluster's
@@ -37,7 +37,10 @@ from environmental_stac_generator_spark.operators.lineage import (  # noqa: E402
     release_tracked,
 )
 from environmental_stac_generator_spark.registry import load_full_registry  # noqa: E402
-from environmental_stac_generator_spark.session import get_spark  # noqa: E402
+from environmental_stac_generator_spark.session import (  # noqa: E402
+    DEFAULT_SHUFFLE_PARTITIONS,
+    get_spark,
+)
 
 ROWS = [
     # fan-out / hash-HOF map paths
@@ -59,10 +62,10 @@ ROWS = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/tmp/sfscale/sf1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = DEFAULT_SHUFFLE_PARTITIONS
     spark = get_spark(
         app_name="envstac-scale-lane", master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus), driver_memory="8g",
+        shuffle_partitions=cpus, driver_memory="8g",
     )
     spark.sparkContext.setLogLevel("ERROR")
     reg = load_full_registry()
@@ -83,7 +86,7 @@ def main() -> None:
             release_tracked()
         out[name] = round(best, 3)
         print(json.dumps({name: out[name]}), file=sys.stderr)
-    print(json.dumps({"cpus": int(cpus), "sf_dir": sf_dir, "queries": out}))
+    print(json.dumps({"cpus": cpus, "sf_dir": sf_dir, "queries": out}))
     spark.stop()
 
 
