@@ -99,9 +99,11 @@ class EnvStacEngine:
         boundary after the decoder.
 
         Cached until :meth:`release`: the packed grids, the slab
-        ``summary`` that every catalog frame derives from, ``info``,
-        the per-item ``leadtime_counts``, and the COG/NetCDF sink
-        results. The summary is the catalog's one pass over the cells.
+        ``summary`` that every catalog frame derives from, and the
+        COG/NetCDF sink results. The summary is the catalog's one pass
+        over the cells, cached hash-partitioned by item
+        (``stac_catalog.ITEM_KEYS``), so each catalog action runs the
+        COG and item aggregates over it without a shuffle.
         """
         step, unit = parse_forecast_frequency(forecast_frequency)
         store_or_validate_config(
@@ -117,10 +119,11 @@ class EnvStacEngine:
         long_df = netcdf.long_from_grids(grids)
         crs_df = self._collection_crs(input_path)
         # the catalog's ONE pass over the cells: every catalog frame
-        # derives from this summary's few rows; caching info and the
-        # per-item leadtime counts as well spares each save_catalog
-        # action re-deriving them from the summary
-        summary = self._track(fc.slab_summary(long_df).persist())
+        # derives from this summary's few rows (one shuffle of one row
+        # per slab puts each item's slabs in one partition)
+        summary = self._track(
+            fc.slab_summary(long_df).repartition(*sc.ITEM_KEYS).persist()
+        )
         catalog = sc.build_catalog(
             summary,
             crs_by_collection=crs_df,
@@ -130,14 +133,8 @@ class EnvStacEngine:
             leadtime_step=step,
             file_server_url=self.file_server_url,
         )
-        self._track(catalog["info"].persist())
-        self._track(catalog["leadtime_counts"].persist())
 
         results: dict[str, DataFrame] = {"long": long_df, "summary": summary, **catalog}
-        if crs_df is not None:
-            results["crs"] = crs_df.withColumnRenamed(
-                "collection", "collection_id"
-            )
         if not stac_only:
             # sinks are actions: materialize now (persist so callers
             # can inspect the result rows without re-encoding)
@@ -173,9 +170,8 @@ class EnvStacEngine:
 
     def release(self) -> None:
         """Unpersist every frame cached by earlier ``process`` calls —
-        packed grids, slab summary, info, leadtime counts, sink
-        results — plus any module-tracked pair-bucket caches
-        (ADVICE r4). Call once the returned frames have been consumed
+        packed grids, slab summary, sink results — plus any
+        module-tracked pair-bucket caches (ADVICE r4). Call once the returned frames have been consumed
         (inspected / saved): results stay valid but recompute on next
         use."""
         from environmental_stac_generator_spark.operators.lineage import (
@@ -193,15 +189,10 @@ class EnvStacEngine:
         # (ref stac/generator.py:106) — keeps the catalog separable
         # from the raster outputs, which the ingest CLI reads back
         stac_dir = Path(self.output_dir) / "stac" / self.catalog_name
-        items_json = sc.items_to_json(
-            results["items"], results["assets"], crs_by_collection=results.get("crs")
+        stac_json.save_items(sc.items_to_json(results["items"]), stac_dir)
+        ids = stac_json.save_collections(
+            sc.collections_to_json(results["collections"]), stac_dir
         )
-        colls_json = sc.collections_to_json(
-            results["collections"], assets=results["assets"]
-        )
-        stac_json.save_items(items_json, stac_dir)
-        stac_json.save_collections(colls_json, stac_dir)
-        ids = [r["collection_id"] for r in results["collections"].select("collection_id").collect()]
         return stac_json.save_catalog_root(
             self.catalog_name,
             f"{self.catalog_name} STAC catalog",

@@ -212,50 +212,3 @@ def valid_time(
         return leadtime_offset(t, plural, i * F.lit(float(step)))
     except FrequencyParseError as exc:
         raise ValueError(f"unknown leadtime unit {unit!r}") from exc
-
-
-def forecast_info(
-    df: DataFrame,
-    crs_by_collection: DataFrame | None = None,
-    bbox_transform=None,
-) -> DataFrame:
-    """The distributed twin of ``get_forecast_info``'s 10-tuple
-    (ref ``stac/generator.py:461-531``): one row per collection with
-    bbox + geometry, temporal extent, band list, leadtime count.
-    ``df``: cells or their slab summary — every column is derived from
-    the summary's rows.
-
-    ``crs_by_collection`` — optional (collection, crs) frame (from the
-    metadata scan): projected-CRS bboxes then reproject to WGS84
-    BEFORE the geometry is built, exactly like the reference's
-    ``proj_to_geo`` inside ``_get_bbox_and_geometry``
-    (``stac/generator.py:581-584``); without it the bbox stays in
-    native coordinates (the pre-round-6 behavior, correct only for
-    EPSG:4326 sources). ``bbox_transform`` overrides the pyproj
-    kernel for environments without pyproj."""
-    s = _as_summary(df)
-    b = bbox(s)
-    if crs_by_collection is not None:
-        from environmental_stac_generator_spark.functions import geo
-
-        b = b.join(crs_by_collection, "collection", "left")
-        # '' (missing attr) and the reference's bare '4326' spelling
-        # are both "already WGS84" (ref :582 checks ["EPSG:4326",
-        # "4326"]); normalize to NULL, which the kernel passes through
-        b = b.withColumn(
-            "crs",
-            F.when(F.col("crs").isin("", "4326"), None).otherwise(F.col("crs")),
-        )
-        kwargs = {"transform": bbox_transform} if bbox_transform else {}
-        b = geo.reproject_bbox(b, crs_col="crs", **kwargs).drop("crs")
-    b = geometry_json(b)
-    t = temporal_extent(s)
-    bands = (
-        infer_valid_bands(s)
-        .groupBy("collection")
-        .agg(F.sort_array(F.collect_set("variable")).alias("valid_bands"))
-    )
-    n_lead = s.groupBy("collection").agg(
-        F.countDistinct("leadtime_idx").alias("n_leadtime")
-    )
-    return b.join(t, "collection").join(bands, "collection").join(n_lead, "collection")

@@ -4,13 +4,17 @@ The reference stores ``{collection: {forecast_frequency}}`` JSON on
 first run and DeepDiffs it against later runs, raising
 ``ConfigMismatchError`` on drift (ref ``stac/generator.py:425-459``,
 error class ``stac/utils.py:13-14``). Here the stored config is a
-tiny DataFrame/JSON file and drift detection is a two-way
-``exceptAll`` — empty means consistent.
+tiny JSON file of canonical (collection, param, value) rows and drift
+is their two-way multiset difference — empty means consistent. The
+guard runs on the driver over a handful of rows, so it starts no
+Spark job; :func:`config_diff` is the same difference as a relational
+``exceptAll`` for configs held in DataFrames.
 """
 
 from __future__ import annotations
 
 import json
+from collections import Counter
 from pathlib import Path
 
 import pyspark.sql.functions as F
@@ -36,7 +40,8 @@ def store_or_validate_config(
     reference's ``_store_config`` (``stac/generator.py:440-459``),
     only the collections the CURRENT run touches are validated: a
     shared config file holding OTHER collections' entries is not our
-    business, and brand-new collections are silently allowed."""
+    business, and brand-new collections are silently allowed.
+    Driver-side: ``spark`` is not used."""
     from environmental_stac_generator_spark.sinks.stac_json import (
         _atomic_write_text,
     )
@@ -75,24 +80,25 @@ def store_or_validate_config(
     stored_scoped = {c: v for c, v in stored.items() if c in current}
     current = {c: v for c, v in current.items() if c in stored}
 
-    def to_df(d: dict) -> DataFrame:
+    def rows(d: dict) -> Counter:
         # values normalize through the SAME canonicalization the file
         # stores (sorted-keys JSON): str(v) would compare the stored
         # side post-JSON-round-trip against the live Python value, so
         # an IDENTICAL config with a tuple-valued param ([0, 6] vs
         # "(0, 6)") or a dict whose insertion order differs from the
         # sort would raise a spurious mismatch
-        rows = [
+        return Counter(
             (coll, k, json.dumps(v, sort_keys=True, default=str))
             for coll, params in d.items()
             for k, v in sorted(params.items())
-        ]
-        return spark.createDataFrame(rows, "collection string, param string, value string")
+        )
 
-    diff = config_diff(to_df(stored_scoped), to_df(current))
-    drift = diff.collect()
+    was, now = rows(stored_scoped), rows(current)
+    drift = [("added", r) for r in sorted((now - was).elements())] + [
+        ("removed", r) for r in sorted((was - now).elements())
+    ]
     if drift:
         raise ConfigMismatchError(
             f"stored config at {p} differs from current run: "
-            + "; ".join(f"{r['drift']} {r['collection']}.{r['param']}={r['value']}" for r in drift)
+            + "; ".join(f"{kind} {c}.{k}={v}" for kind, (c, k, v) in drift)
         )

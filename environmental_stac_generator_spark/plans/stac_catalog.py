@@ -1,21 +1,25 @@
-"""STAC catalog assembly as DataFrame derivations.
+"""STAC catalog assembly as one aggregate chain over the slab summary.
 
 The reference builds a pystac object tree on the driver
 (``stac/generator.py:111-262,650-803``); here Catalog → Collection →
-Item → Asset are three DataFrames with deterministic upsert
-semantics, so the whole catalog derivation is a lazy plan that scales
-with item count:
+Item → Asset is a lazy chain of aggregates over the few rows of
+``forecast.slab_summary`` (one per decoded slab), so it scales with
+item count, never with cells:
 
-- collections(collection_id, title, description, license, bbox,
-  extent_start, extent_end, hemisphere)
-- items(collection_id, item_id, datetime, geometry, bbox,
-  properties…)
-- assets(collection_id, item_id, asset_key, href, media_type, title,
-  description, roles, band_meta…)
+1. per-COG rows, ``groupBy(collection, init, leadtime)``: the
+   ``forecast:bands`` list and the COG asset;
+2. per-item rows, ``groupBy(collection, init)``: the item's assets
+   (COGs, NetCDF, lead-0 thumbnail) and leadtime count;
+3. item documents get their collection's bbox through a window over
+   the item rows; collection rows are ``groupBy(collection)`` over
+   them. Either is one exchange of item rows; the optional
+   per-collection CRS is the only join.
 
-Every "get_or_create" is a left-anti + union (J1/J2/W3) and the
-extent update is an aggregate merge (J8) — both order-independent,
-unlike the reference's first-wins in-memory mutation.
+With the summary hash-partitioned by :data:`ITEM_KEYS`, steps 1 and 2
+run without a shuffle. The documents are ``to_json`` projections of
+the item and collection rows. Get-or-create is a left-anti + union
+(J1/J2/W3) and the extent update an aggregate merge (J8): both
+order-independent, unlike the reference's first-wins mutation.
 """
 
 from __future__ import annotations
@@ -26,13 +30,38 @@ from pyspark.sql import Column, DataFrame, Window
 from environmental_stac_generator_spark.operators.forecast import (
     FNAME_FMT,
     ISO_FMT,
+    STAT_COLS,
     band_statistics,
-    forecast_info,
-    leadtime_counts,
+    geometry_json,
     valid_time,
 )
 
 STAC_VERSION = "1.0.0"
+
+# the item grain: one STAC item per (collection, forecast init time)
+ITEM_KEYS = ["collection", "forecast_reference_time"]
+
+# pystac's ProjectionExtension schema (the extension the reference
+# adds to every item, ref stac/generator.py:257-260 — proj.code)
+PROJ_EXT_SCHEMA = "https://stac-extensions.github.io/projection/v2.0.0/schema.json"
+
+BAND_META_TYPE = (
+    "array<struct<name:string,index:int,min:double,max:double,"
+    "mean:double,std:double,valid_percent:double>>"
+)
+# the fields of an asset entry that its document object carries
+_DOC_FIELDS = ["href", "media_type", "title", "description", "roles", "band_meta"]
+BBOX_COLS = ["xmin", "ymin", "xmax", "ymax"]
+
+
+def _bbox_aggs(w: Window | None = None) -> list[Column]:
+    """min of the minima, max of the maxima — over ``w`` if given."""
+
+    def agg(f, c):
+        a = f(c)
+        return (a if w is None else a.over(w)).alias(c)
+
+    return [agg(F.min, "xmin"), agg(F.min, "ymin"), agg(F.max, "xmax"), agg(F.max, "ymax")]
 
 
 def title_case(col: Column | str) -> Column:
@@ -46,29 +75,6 @@ def title_case(col: Column | str) -> Column:
         F.upper(F.substring(c, 1, 1)), F.lower(F.substring(c, 2, 1 << 30))
     )
     return F.translate(capitalized, "_-", "  ")
-
-
-def build_collections(
-    info: DataFrame, license: str = "other", hemisphere: Column | None = None
-) -> DataFrame:
-    """Collection rows from forecast_info output
-    (ref ``get_or_create_collection`` creation branch,
-    ``stac/generator.py:650-659,178-190``)."""
-    out = info.select(
-        F.col("collection").alias("collection_id"),
-        F.col("collection").alias("title"),
-        F.concat(title_case("collection"), F.lit(" collection")).alias("description"),
-        F.lit(license).alias("license"),
-        F.array("xmin", "ymin", "xmax", "ymax").alias("bbox"),
-        "geometry",
-        "extent_start",
-        "extent_end",
-        "valid_bands",
-        "n_leadtime",
-    )
-    if hemisphere is not None:
-        out = out.withColumn("hemisphere", hemisphere)
-    return out
 
 
 def merge_collections(existing: DataFrame, new: DataFrame) -> DataFrame:
@@ -94,45 +100,6 @@ def merge_collections(existing: DataFrame, new: DataFrame) -> DataFrame:
     return meta.join(extents, "collection_id")
 
 
-def build_items(
-    long_times: DataFrame,
-    info: DataFrame,
-    leadtime_unit: str = "days",
-    leadtime_step: float = 1.0,
-) -> DataFrame:
-    """Item rows: one per (collection, forecast init time)
-    (ref ``stac/generator.py:664-731``).
-
-    ``long_times`` needs (collection, forecast_reference_time,
-    n_leadtime); ``info`` supplies bbox/geometry/crs per collection.
-    """
-    end_time = valid_time(
-        "forecast_reference_time",
-        F.col("n_leadtime") - 1,
-        leadtime_unit,
-        leadtime_step,
-    )
-    items = long_times.select(
-        F.col("collection").alias("collection_id"),
-        F.concat(
-            F.lit("forecast_init_"),
-            F.date_format("forecast_reference_time", FNAME_FMT),
-        ).alias("item_id"),
-        F.col("forecast_reference_time").alias("datetime"),
-        F.date_format("forecast_reference_time", ISO_FMT).alias(
-            "forecast_reference_time_str"
-        ),
-        F.date_format(end_time, ISO_FMT).alias("forecast_end_time_str"),
-        "n_leadtime",
-    )
-    geo = info.select(
-        F.col("collection").alias("collection_id"),
-        F.array("xmin", "ymin", "xmax", "ymax").alias("bbox"),
-        "geometry",
-    )
-    return items.join(geo, "collection_id")
-
-
 def merge_items(existing: DataFrame, new: DataFrame) -> DataFrame:
     """J2: composite-key get-or-create — existing items never
     replaced (ref ``stac/generator.py:243-261``)."""
@@ -144,165 +111,258 @@ def merge_items(existing: DataFrame, new: DataFrame) -> DataFrame:
     return existing.unionByName(created.select(*existing.columns))
 
 
-def build_netcdf_assets(items: DataFrame) -> DataFrame:
-    """The per-item full-forecast NetCDF asset
-    (ref ``stac/generator.py:736-751``)."""
-    space_fmt = "yyyy-MM-dd HH:mm"
-    return items.select(
-        "collection_id",
-        "item_id",
-        F.lit("netcdf").alias("asset_key"),
-        F.format_string(
-            "./netcdf/%s/%s/%s.nc",
-            F.col("collection_id"),
-            F.date_format("datetime", "yyyy-MM-dd"),
-            F.date_format("datetime", FNAME_FMT),
-        ).alias("href"),
-        F.lit("application/netcdf").alias("media_type"),
+def served_href(href: Column, file_server_url: str | None) -> Column:
+    """F8: './x' -> FILE_SERVER_URL + 'x', base URL gets a trailing
+    slash (ref ``stac/generator.py:1047-1056``); ``href`` unchanged
+    without a URL. startswith + concat, NOT regexp_replace: Java's
+    replaceAll treats '$' and '\\\\' in the REPLACEMENT specially, so
+    a base URL containing '$' would throw an illegal-group-reference
+    error at action time (and '\\\\' would silently corrupt hrefs)."""
+    if not file_server_url:
+        return href
+    base = file_server_url if file_server_url.endswith("/") else file_server_url + "/"
+    return F.when(
+        href.startswith("./"),
+        F.concat(F.lit(base), F.substring(href, 3, 1 << 30)),
+    ).otherwise(href)
+
+
+def _asset(
+    key, href, media_type, title, description=None, roles="data",
+    leadtime_idx=None, valid_time_str=None, band_meta=None,
+) -> Column:
+    """One asset entry: the document's asset object plus the key and
+    the COG's leadtime columns of the ``assets`` frame."""
+
+    def lit(v, type_):
+        return v if isinstance(v, Column) else F.lit(v).cast(type_)
+
+    return F.struct(
+        lit(key, "string").alias("asset_key"),
+        href.alias("href"),
+        F.lit(media_type).alias("media_type"),
+        title.alias("title"),
+        lit(description, "string").alias("description"),
+        F.array(F.lit(roles)).alias("roles"),
+        lit(leadtime_idx, "int").alias("leadtime_idx"),
+        lit(valid_time_str, "string").alias("valid_time_str"),
+        lit(band_meta, BAND_META_TYPE).alias("band_meta"),
+    )
+
+
+def _thumbnail(href: Column) -> Column:
+    return _asset("thumbnail", href, "image/jpeg", F.lit("Thumbnail"), roles="thumbnail")
+
+
+def _item_id(init: Column) -> Column:
+    return F.concat(F.lit("forecast_init_"), F.date_format(init, FNAME_FMT))
+
+
+def _cog_rows(summary: DataFrame, unit: str, step: float, url: str | None) -> DataFrame:
+    """One row per (collection, init, leadtime): the multi-band COG
+    asset with its ``forecast:bands`` metadata (ref
+    ``stac/generator.py:871-939``). The 1-based band index is the
+    position in the variable-sorted band list (ref ``:882`` enumerates
+    valid_bands)."""
+    init, lead = F.col("forecast_reference_time"), F.col("leadtime_idx")
+    vt = valid_time(init, lead, unit, step)
+    bands = (
+        summary.groupBy(*ITEM_KEYS, "leadtime_idx")
+        .agg(
+            F.sort_array(F.collect_list(F.struct("variable", *STAT_COLS))).alias("_b"),
+            *_bbox_aggs(),
+        )
+    )
+    band_meta = F.transform(
+        "_b",
+        lambda b, i: F.struct(
+            b["variable"].alias("name"),
+            (i + 1).alias("index"),
+            *[b[c].alias(c) for c in STAT_COLS],
+        ),
+    )
+    names = F.transform("_b", lambda b: b["variable"])
+    href = F.format_string(
+        "./cogs/%s/%s/%s_lead_%s.tif",
+        F.col("collection"),
+        F.date_format(init, "yyyy-MM-dd"),
+        _item_id(init),
+        # ref valid_time_str_1 (generator.py:866)
+        F.date_format(vt, "yyyy-MM-dd_HHmm"),
+    )
+    return bands.select(
+        *ITEM_KEYS,
+        "leadtime_idx",
+        *BBOX_COLS,
+        _asset(
+            F.date_format(vt, ISO_FMT),
+            served_href(href, url),
+            "image/tiff; application=geotiff; profile=cloud-optimized",
+            F.concat(F.lit("Forecast at "), F.date_format(vt, "yyyy-MM-dd HH:mm")),
+            description=F.concat(F.lit("Variables: "), F.concat_ws(", ", names)),
+            leadtime_idx=lead,
+            valid_time_str=F.date_format(vt, ISO_FMT),
+            band_meta=band_meta,
+        ).alias("_cog"),
+        F.transform(
+            names, lambda v: F.struct(v.alias("variable"), lead.alias("leadtime_idx"))
+        ).alias("_var_leads"),
+    )
+
+
+def _item_rows(cogs: DataFrame, unit: str, step: float, url: str | None) -> DataFrame:
+    """One row per (collection, init) (ref ``stac/generator.py:
+    664-751,901-921``): the leadtime count, the item's assets sorted
+    by key — its COGs, the full-forecast NetCDF and the lead-0
+    thumbnail — and the (variable, leadtime) pairs it holds."""
+    init = F.col("forecast_reference_time")
+    rows = cogs.groupBy(*ITEM_KEYS).agg(
+        F.count(F.lit(1)).alias("n_leadtime"),
+        *_bbox_aggs(),
+        F.collect_list("_cog").alias("_cogs"),
+        F.max(
+            F.when(
+                F.col("leadtime_idx") == 0,
+                F.regexp_replace(F.col("_cog")["href"], r"\.tif$", ".jpg"),
+            )
+        ).alias("_thumb"),
+        F.sort_array(F.flatten(F.collect_list("_var_leads"))).alias("_var_leads"),
+    )
+    ref_str = F.date_format(init, ISO_FMT)
+    netcdf = _asset(
+        "netcdf",
+        served_href(
+            F.format_string(
+                "./netcdf/%s/%s/%s.nc",
+                F.col("collection"),
+                F.date_format(init, "yyyy-MM-dd"),
+                F.date_format(init, FNAME_FMT),
+            ),
+            url,
+        ),
+        "application/netcdf",
         F.concat(
             F.lit("Full forecast netCDF from "),
-            F.date_format("datetime", space_fmt),
-        ).alias("title"),
-        F.concat(
+            F.date_format(init, "yyyy-MM-dd HH:mm"),
+        ),
+        description=F.concat(
             F.lit(
                 "netCDF file container forecast variables for forecast"
                 " initialised at: "
             ),
-            F.col("forecast_reference_time_str"),
-        ).alias("description"),
-        F.array(F.lit("data")).alias("roles"),
-        F.lit(None).cast("int").alias("leadtime_idx"),
-        F.lit(None).cast("string").alias("valid_time_str"),
-        F.lit(None).cast(
-            "array<struct<name:string,index:int,min:double,max:double,"
-            "mean:double,std:double,valid_percent:double>>"
-        ).alias("band_meta"),
+            ref_str,
+        ),
+    )
+    thumb = F.when(
+        F.col("_thumb").isNotNull(),
+        _thumbnail(F.col("_thumb")),
+    )
+    end_time = valid_time(init, F.col("n_leadtime") - 1, unit, step)
+    return rows.select(
+        *ITEM_KEYS,
+        _item_id(init).alias("item_id"),
+        ref_str.alias("forecast_reference_time_str"),
+        F.date_format(end_time, ISO_FMT).alias("forecast_end_time_str"),
+        "n_leadtime",
+        *BBOX_COLS,
+        F.sort_array(
+            F.array_compact(F.concat("_cogs", F.array(netcdf, thumb)))
+        ).alias("assets"),
+        "_thumb",
+        "_var_leads",
     )
 
 
-def build_cog_assets(
-    stats: DataFrame,
-    items: DataFrame,
-    leadtime_unit: str = "days",
-    leadtime_step: float = 1.0,
+def _located(
+    rows: DataFrame, crs_by_collection: DataFrame | None, bbox_transform
 ) -> DataFrame:
-    """Per-leadtime multi-band COG assets with the forecast:bands
-    metadata array (ref ``stac/generator.py:871-939``).
+    """``rows``' collection bbox as GeoJSON ``geometry`` (ref
+    ``stac/generator.py:555-585``). With ``crs_by_collection``
+    (collection, crs), projected-CRS bboxes reproject to WGS84 BEFORE
+    the geometry is built, exactly like the reference's
+    ``proj_to_geo`` inside ``_get_bbox_and_geometry`` (``:581-584``),
+    and the source CRS becomes ``crs`` (an item's ``proj:code``,
+    ``:255-260``); without it the bbox stays in native coordinates
+    and ``crs`` is NULL. ``bbox_transform`` overrides the pyproj
+    kernel for environments without pyproj."""
+    if crs_by_collection is None:
+        return geometry_json(rows.withColumn("crs", F.lit(None).cast("string")))
+    from environmental_stac_generator_spark.functions import geo
 
-    ``stats`` is band_statistics() output. The band index is a
-    1-based row_number ordered by variable name (ref ``:882`` uses
-    enumerate over valid_bands) and the band list is a
-    ``collect_list(struct(...))`` over that deterministic order (N2).
-    """
-    vt = valid_time(
-        "forecast_reference_time", "leadtime_idx", leadtime_unit, leadtime_step
+    crs = F.col("crs")
+    out = rows.join(F.broadcast(crs_by_collection), "collection", "left")
+    # '' (missing attr) and the reference's bare '4326' spelling are
+    # both "already WGS84" (ref :582 checks ["EPSG:4326", "4326"]);
+    # NULL passes the kernel through. Only '' is an unknown proj:code.
+    out = out.withColumn(
+        "_src_crs", F.when(crs.isin("", "4326"), None).otherwise(crs)
+    ).withColumn("crs", F.when(crs == "", None).otherwise(crs))
+    kwargs = {"transform": bbox_transform} if bbox_transform else {}
+    return geometry_json(
+        geo.reproject_bbox(out, crs_col="_src_crs", **kwargs).drop("_src_crs")
     )
-    w = Window.partitionBy(
-        "collection", "forecast_reference_time", "leadtime_idx"
-    ).orderBy("variable")
-    bands = (
-        stats.withColumn("index", F.row_number().over(w))
-        .groupBy("collection", "forecast_reference_time", "leadtime_idx")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col("variable").alias("name"),
-                        "index",
-                        "min",
-                        "max",
-                        "mean",
-                        "std",
-                        "valid_percent",
-                    )
-                )
-            ).alias("band_meta"),
-            F.sort_array(F.collect_set("variable")).alias("band_names"),
-        )
-        .withColumn("valid_time", vt)
+
+
+def _with_collection_bbox(items: DataFrame) -> DataFrame:
+    """Every item row gets its collection's bbox through a window
+    over the item rows — the item document carries the collection's
+    bbox and geometry (ref ``stac/generator.py:664-731``)."""
+    w = Window.partitionBy("collection")
+    return items.select(
+        *[c for c in items.columns if c not in BBOX_COLS],
+        *_bbox_aggs(w),
     )
-    item_keys = items.select(
-        F.col("collection_id").alias("collection"),
-        F.col("datetime").alias("forecast_reference_time"),
-        "item_id",
+
+
+def _collection_rows(items: DataFrame) -> DataFrame:
+    """One row per collection from its item rows (ref
+    ``get_forecast_info``, ``stac/generator.py:461-531``): bbox,
+    temporal extent, the full-coverage band list, leadtime count, and
+    the FIRST item's thumbnail promoted to a collection asset — first
+    by item id, so the choice does not depend on arrival order (ref
+    ``:795-803``).
+
+    Band list: ``forecast.infer_valid_bands``'s rule (P1) over the
+    distinct (variable, leadtime) pairs; ``collect_set`` keeps one
+    copy of each distinct per-item pair list."""
+    pairs = F.array_distinct(F.flatten(F.collect_set("_var_leads")))
+    first_thumb = F.min(F.when(F.col("_thumb").isNotNull(), F.struct("item_id", "_thumb")))
+    rows = items.groupBy("collection").agg(
+        *_bbox_aggs(),
+        F.min("forecast_reference_time").alias("extent_start"),
+        F.max("forecast_reference_time").alias("extent_end"),
+        pairs.alias("_pairs"),
+        first_thumb["_thumb"].alias("_thumb"),
     )
-    lead_fmt = "yyyy-MM-dd_HHmm"  # ref valid_time_str_1 (generator.py:866)
-    joined = bands.join(item_keys, ["collection", "forecast_reference_time"])
-    return joined.select(
+    variables = F.array_sort(F.array_distinct(F.transform("_pairs", lambda p: p["variable"])))
+    n_lead = F.transform(
+        variables,
+        lambda v: F.size(F.filter("_pairs", lambda p: p["variable"] == v)),
+    )
+    return rows.select(
+        "collection",
+        *BBOX_COLS,
+        "extent_start",
+        "extent_end",
+        F.filter(
+            variables, lambda v, i: n_lead[i] == F.array_max(n_lead)
+        ).alias("valid_bands"),
+        F.size(
+            F.array_distinct(F.transform("_pairs", lambda p: p["leadtime_idx"]))
+        ).cast("long").alias("n_leadtime"),
+        F.when(
+            F.col("_thumb").isNotNull(), F.array(_thumbnail(F.col("_thumb")))
+        ).alias("assets"),
+    )
+
+
+def _asset_rows(owner: DataFrame) -> DataFrame:
+    """The ``assets`` frame's rows of ``owner``'s asset arrays."""
+    return owner.select(
         F.col("collection").alias("collection_id"),
         "item_id",
-        F.date_format("valid_time", ISO_FMT).alias("asset_key"),
-        F.format_string(
-            "./cogs/%s/%s/%s_lead_%s.tif",
-            F.col("collection"),
-            F.date_format("forecast_reference_time", "yyyy-MM-dd"),
-            F.col("item_id"),
-            F.date_format("valid_time", lead_fmt),
-        ).alias("href"),
-        F.lit("image/tiff; application=geotiff; profile=cloud-optimized").alias(
-            "media_type"
-        ),
-        F.concat(
-            F.lit("Forecast at "), F.date_format("valid_time", "yyyy-MM-dd HH:mm")
-        ).alias("title"),
-        F.concat(F.lit("Variables: "), F.concat_ws(", ", "band_names")).alias(
-            "description"
-        ),
-        F.array(F.lit("data")).alias("roles"),
-        "leadtime_idx",
-        F.date_format("valid_time", ISO_FMT).alias("valid_time_str"),
-        "band_meta",
-    )
-
-
-def build_thumbnail_assets(cog_assets: DataFrame) -> DataFrame:
-    """K3/J9: one thumbnail per item (leadtime 0) plus the
-    collection-level promotion of the FIRST item's thumbnail —
-    deterministic via a window ordered by (datetime, item_id), fixing
-    the reference's arrival-order dependence
-    (ref ``stac/generator.py:795-803,913-921``)."""
-    lead0 = cog_assets.filter(F.col("leadtime_idx") == 0).select(
-        "collection_id",
-        "item_id",
-        F.lit("thumbnail").alias("asset_key"),
-        F.regexp_replace("href", r"\.tif$", ".jpg").alias("href"),
-        F.lit("image/jpeg").alias("media_type"),
-        F.lit("Thumbnail").alias("title"),
-        F.lit(None).cast("string").alias("description"),
-        F.array(F.lit("thumbnail")).alias("roles"),
-        F.lit(None).cast("int").alias("leadtime_idx"),
-        F.lit(None).cast("string").alias("valid_time_str"),
-        F.lit(None).cast(
-            "array<struct<name:string,index:int,min:double,max:double,"
-            "mean:double,std:double,valid_percent:double>>"
-        ).alias("band_meta"),
-    )
-    w = Window.partitionBy("collection_id").orderBy("item_id")
-    collection_thumb = (
-        lead0.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .withColumn("item_id", F.lit(None).cast("string"))
-    )
-    return lead0.unionByName(collection_thumb)
-
-
-def rewrite_hrefs(assets: DataFrame, file_server_url: str) -> DataFrame:
-    """F8: './x' -> FILE_SERVER_URL + 'x', base URL gets a trailing
-    slash (ref ``stac/generator.py:1047-1056``). startswith + concat,
-    NOT regexp_replace: Java's replaceAll treats '$' and '\\\\' in the
-    REPLACEMENT specially, so a base URL containing '$' would throw
-    an illegal-group-reference error at action time (and '\\\\' would
-    silently corrupt hrefs)."""
-    base = file_server_url if file_server_url.endswith("/") else file_server_url + "/"
-    href = F.col("href")
-    return assets.withColumn(
-        "href",
-        F.when(
-            href.startswith("./"),
-            F.concat(F.lit(base), F.substring(href, 3, 1 << 30)),
-        ).otherwise(href),
-    )
+        F.explode("assets").alias("a"),
+    ).select("collection_id", "item_id", "a.*")
 
 
 def build_catalog(
@@ -314,91 +374,80 @@ def build_catalog(
     leadtime_step: float = 1.0,
     file_server_url: str | None = None,
 ) -> dict[str, DataFrame]:
-    """The whole summary → info → collections/items/assets chain
-    (ref ``stac/generator.py:650-803``): COG, NetCDF and thumbnail
-    assets, hrefs rewritten onto ``file_server_url`` when given.
+    """The whole summary → COG → item → collection chain (module
+    docstring; ref ``stac/generator.py:650-803``), hrefs rewritten
+    onto ``file_server_url`` when given.
 
-    ``summary`` is ``forecast.slab_summary()`` output. Returns
-    ``info``, ``leadtime_counts``, ``stats``, ``collections``,
-    ``items`` and ``assets``; each is derived from the summary's few
-    rows only."""
-    info = forecast_info(
-        summary, crs_by_collection=crs_by_collection, bbox_transform=bbox_transform
-    )
-    stats = band_statistics(summary)
-    times = leadtime_counts(summary)
-    items = build_items(
-        times, info, leadtime_unit=leadtime_unit, leadtime_step=leadtime_step
-    )
-    cog_assets = build_cog_assets(
-        stats, items, leadtime_unit=leadtime_unit, leadtime_step=leadtime_step
-    )
-    assets = cog_assets.unionByName(build_netcdf_assets(items)).unionByName(
-        build_thumbnail_assets(cog_assets)
-    )
-    if file_server_url:
-        assets = rewrite_hrefs(assets, file_server_url)
+    ``summary`` is ``forecast.slab_summary()`` output, best cached
+    repartitioned by :data:`ITEM_KEYS`. Returns projections of the
+    chain: ``items`` and ``collections`` (the inputs of
+    :func:`items_to_json` / :func:`collections_to_json`), ``assets``
+    (one row per asset; collection-level ones have a NULL
+    ``item_id``), ``info`` (per collection: the twin of
+    ``get_forecast_info``'s 10-tuple), ``leadtime_counts`` and
+    ``stats``."""
+    cogs = _cog_rows(summary, leadtime_unit, leadtime_step, file_server_url)
+    per_item = _item_rows(cogs, leadtime_unit, leadtime_step, file_server_url)
+    items = _located(_with_collection_bbox(per_item), crs_by_collection, bbox_transform)
+    per_coll = _collection_rows(per_item)
+    colls = _located(per_coll, crs_by_collection, bbox_transform)
+    info_cols = [
+        "collection", *BBOX_COLS, "geometry", "extent_start", "extent_end",
+        "valid_bands", "n_leadtime",
+    ]
     return {
-        "info": info,
-        "leadtime_counts": times,
-        "stats": stats,
-        "collections": build_collections(info, license=license),
-        "items": items,
-        "assets": assets,
+        "info": colls.select(*info_cols),
+        "leadtime_counts": per_item.select(*ITEM_KEYS, "n_leadtime"),
+        "stats": band_statistics(summary),
+        "collections": colls.select(
+            F.col("collection").alias("collection_id"),
+            F.col("collection").alias("title"),
+            F.concat(title_case("collection"), F.lit(" collection")).alias(
+                "description"
+            ),
+            F.lit(license).alias("license"),
+            F.array(*BBOX_COLS).alias("bbox"),
+            *info_cols[5:],
+            "assets",
+        ),
+        "items": items.select(
+            F.col("collection").alias("collection_id"),
+            "item_id",
+            F.col("forecast_reference_time").alias("datetime"),
+            "forecast_reference_time_str",
+            "forecast_end_time_str",
+            "n_leadtime",
+            F.array(*BBOX_COLS).alias("bbox"),
+            "geometry",
+            "crs",
+            "assets",
+        ),
+        "assets": _asset_rows(per_item).unionByName(
+            _asset_rows(per_coll.withColumn("item_id", F.lit(None).cast("string")))
+        ),
     }
 
 
-# pystac's ProjectionExtension schema (the extension the reference
-# adds to every item, ref stac/generator.py:257-260 — proj.code)
-PROJ_EXT_SCHEMA = "https://stac-extensions.github.io/projection/v2.0.0/schema.json"
-
-
-def _asset_map(assets: DataFrame, keys: list[str]):
-    """key->asset map per ``keys`` grain (J9) — shared by the item
-    and collection document assemblers."""
-    return assets.groupBy(*keys).agg(
-        F.map_from_entries(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col("asset_key"),
-                        F.struct(
-                            "href", "media_type", "title", "description",
-                            "roles", "band_meta",
-                        ).alias("asset"),
-                    )
-                )
-            )
-        ).alias("assets")
-    )
-
-
-def items_to_json(items: DataFrame, assets: DataFrame, crs_by_collection: DataFrame | None = None) -> DataFrame:
-    """N6/K4: assemble full STAC Item documents as JSON strings.
-
-    Assets fold back into a key->asset map via
-    ``map_from_entries(collect_list(...))`` (J9). With
-    ``crs_by_collection`` (collection_id, crs), the item document
-    carries the projection extension exactly as the reference adds it
-    (ref ``stac/generator.py:255-260``): the extension schema in
-    ``stac_extensions`` and the source CRS as ``proj:code``."""
-    asset_map = _asset_map(
-        assets.filter(F.col("item_id").isNotNull()),
-        ["collection_id", "item_id"],
-    )
-    doc = items.join(asset_map, ["collection_id", "item_id"], "left")
-    crs = F.lit(None).cast("string")
-    if crs_by_collection is not None:
-        doc = doc.join(
-            crs_by_collection.select(
-                "collection_id",
-                F.when(F.col("crs") == "", None).otherwise(F.col("crs")).alias("_crs"),
+def _asset_map(assets: Column) -> Column:
+    """key -> asset object (J9), entries in key order."""
+    return F.map_from_entries(
+        F.transform(
+            assets,
+            lambda a: F.struct(
+                a["asset_key"], F.struct(*[a[f].alias(f) for f in _DOC_FIELDS])
             ),
-            "collection_id",
-            "left",
         )
-        crs = F.col("_crs")
-    doc = doc.select(
+    )
+
+
+def items_to_json(items: DataFrame) -> DataFrame:
+    """N6/K4: full STAC Item documents as JSON strings, a projection
+    of :func:`build_catalog`'s ``items``. An item with a known
+    ``crs`` carries the projection extension exactly as the reference
+    adds it (ref ``stac/generator.py:255-260``): the extension schema
+    in ``stac_extensions`` and the source CRS as ``proj:code``."""
+    crs = F.col("crs")
+    return items.select(
         "collection_id",
         "item_id",
         F.to_json(
@@ -424,35 +473,18 @@ def items_to_json(items: DataFrame, assets: DataFrame, crs_by_collection: DataFr
                     F.col("forecast_end_time_str").alias("forecast:end_time"),
                     F.col("n_leadtime").alias("forecast:leadtime_length"),
                 ).alias("properties"),
-                F.col("assets"),
+                _asset_map(F.col("assets")).alias("assets"),
             )
         ).alias("json"),
     )
-    return doc
 
 
-def collections_to_json(
-    collections: DataFrame, assets: DataFrame | None = None
-) -> DataFrame:
-    """Collection documents as JSON (ref ``stac/generator.py:178-190``).
-
-    ``assets`` — the full assets frame: its ``item_id IS NULL`` rows
-    are the collection-LEVEL assets (the J9 thumbnail promotion,
-    ``build_thumbnail_assets``; ref ``:795-803``) and fold into the
-    collection document here — without this the promoted thumbnail
-    was computed and then reached no serialized document."""
-    doc = collections
-    if assets is not None:
-        coll_assets = _asset_map(
-            assets.filter(F.col("item_id").isNull()), ["collection_id"]
-        )
-        doc = doc.join(coll_assets, "collection_id", "left")
-    else:
-        doc = doc.withColumn(
-            "assets",
-            F.lit(None).cast("map<string,struct<href:string>>"),
-        )
-    return doc.select(
+def collections_to_json(collections: DataFrame) -> DataFrame:
+    """Collection documents as JSON (ref ``stac/generator.py:178-190``),
+    a projection of :func:`build_catalog`'s ``collections``; their
+    ``assets`` hold the promoted first-item thumbnail (J9, ref
+    ``:795-803``)."""
+    return collections.select(
         "collection_id",
         F.to_json(
             F.struct(
@@ -473,7 +505,7 @@ def collections_to_json(
                         ).alias("interval")
                     ).alias("temporal"),
                 ).alias("extent"),
-                F.col("assets"),
+                _asset_map(F.col("assets")).alias("assets"),
             )
         ).alias("json"),
     )

@@ -163,26 +163,24 @@ def netcdf_slice_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stac_item_documents",
     None,
     doc="K4/N6: full STAC Item JSON documents assembled from the "
-    "scan->info->items->assets plan (ref stac/generator.py:650-803).",
+    "scan -> slab summary -> COG -> item aggregate chain (ref "
+    "stac/generator.py:650-803).",
 )
 def stac_item_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from environmental_stac_generator_spark.plans import stac_catalog as sc
 
-    items, assets, _ = _assemble_catalog_frames(spark)
-    return sc.items_to_json(items, assets)
+    return sc.items_to_json(_assemble_catalog_frames(spark)["items"])
 
 
-def _assemble_catalog_frames(spark: SparkSession):
+def _assemble_catalog_frames(spark: SparkSession) -> dict[str, DataFrame]:
     """The engine's catalog assembly over the fake landing, shared by
-    stac_item_documents and stac_catalog_roundtrip; returns (items,
-    assets, info)."""
+    stac_item_documents and stac_catalog_roundtrip."""
     from environmental_stac_generator_spark.operators import forecast as fc
     from environmental_stac_generator_spark.plans import stac_catalog as sc
     from environmental_stac_generator_spark.sources import netcdf
 
     long_df = netcdf.scan_netcdf(spark, _fake_landing(), decoder=netcdf.fake_decoder())
-    cat = sc.build_catalog(fc.slab_summary(long_df))
-    return cat["items"], cat["assets"], cat["info"]
+    return sc.build_catalog(fc.slab_summary(long_df))
 
 
 @register(
@@ -434,10 +432,10 @@ def stac_catalog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from environmental_stac_generator_spark.plans import stac_catalog as sc
     from environmental_stac_generator_spark.sinks import stac_json as sj
 
-    items, assets, info = _assemble_catalog_frames(spark)
+    cat = _assemble_catalog_frames(spark)
     out = Path(_scratch_dir("envstac_cat_")) / "catalog"
-    sj.save_items(sc.items_to_json(items, assets), out)
-    sj.save_collections(sc.collections_to_json(sc.build_collections(info)), out)
+    sj.save_items(sc.items_to_json(cat["items"]), out)
+    sj.save_collections(sc.collections_to_json(cat["collections"]), out)
     tree = sj.load_catalog_tree(spark, out)
     # link traversal: items (type=Feature) joined to their collection
     # docs (type=Collection) on the collection id

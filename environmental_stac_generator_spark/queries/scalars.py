@@ -16,6 +16,7 @@ from environmental_stac_generator_spark.functions.frequency import (
     freq_value,
 )
 from environmental_stac_generator_spark.functions.rounding import rnd
+from environmental_stac_generator_spark.plans.config_guard import config_diff
 from environmental_stac_generator_spark.registry import register
 from environmental_stac_generator_spark.tables import load
 
@@ -504,13 +505,9 @@ def config_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored_scoped = stored.join(
         F.broadcast(current.select("collection")), "collection", "left_semi"
     )
-    added = current.exceptAll(stored_scoped).select(
-        F.lit("added").alias("drift"), "collection", "forecast_frequency"
+    return config_diff(stored_scoped, current).select(
+        "drift", "collection", "forecast_frequency"
     )
-    removed = stored_scoped.exceptAll(current).select(
-        F.lit("removed").alias("drift"), "collection", "forecast_frequency"
-    )
-    return added.unionByName(removed)
 
 
 @register(

@@ -560,7 +560,7 @@ def encode_cogs(
     _check_leadtime_resolution(leadtime_unit, leadtime_step)
     out = str(out_dir)
 
-    def encode_group(key, pdf: pd.DataFrame):
+    def encode_group(key, pdf):
         collection, ref_time, lead = key
         lead = int(lead)
         ref = pd.Timestamp(ref_time)
@@ -683,7 +683,7 @@ def write_netcdf_slices(
     the file's data bytes."""
     out = str(out_dir)
 
-    def encode_group(key, pdf: pd.DataFrame):
+    def encode_group(key, pdf):
         collection, ref_time = key
         d = Path(out) / "netcdf" / str(collection) / str(pd.Timestamp(ref_time).date())
         stamp = pd.Timestamp(ref_time).strftime("%Y-%m-%dT%H-%M-%SZ")

@@ -11,8 +11,8 @@ them out as
 
 Items are written partition-parallel via ``foreachPartition`` (one
 tiny JSON per item — at 100 TB of rasters the catalog is still only
-~1 row per item, so this is the cheap part); the catalog root is a
-single driver-side write.
+~1 row per item, so this is the cheap part); the few collection
+documents and the catalog root are driver-side writes.
 """
 
 from __future__ import annotations
@@ -90,23 +90,25 @@ def _merge_collection_doc(old: dict, new: dict) -> dict:
     return new
 
 
-def save_collections(collections_json: DataFrame, out_dir: str | Path) -> None:
-    out = str(out_dir)
-
-    def write_partition(rows) -> None:
-        for row in rows:
-            d = Path(out) / row["collection_id"]
-            d.mkdir(parents=True, exist_ok=True)
-            p = d / "collection.json"
-            doc = json.loads(row["json"])
-            if p.exists():  # multi-input / re-run: merge extents
-                try:
-                    doc = _merge_collection_doc(json.loads(p.read_text()), doc)
-                except json.JSONDecodeError:
-                    pass
-            _atomic_write_text(p, json.dumps(doc, indent=2))
-
-    collections_json.foreachPartition(write_partition)
+def save_collections(collections_json: DataFrame, out_dir: str | Path) -> list[str]:
+    """Write one ``collection.json`` per row and return the collection
+    ids, for the catalog root. Driver-side, like the root: there is
+    one row per collection, so one collect serves both the documents
+    and the ids."""
+    ids = []
+    for row in collections_json.collect():
+        d = Path(out_dir) / row["collection_id"]
+        d.mkdir(parents=True, exist_ok=True)
+        p = d / "collection.json"
+        doc = json.loads(row["json"])
+        if p.exists():  # multi-input / re-run: merge extents
+            try:
+                doc = _merge_collection_doc(json.loads(p.read_text()), doc)
+            except json.JSONDecodeError:
+                pass
+        _atomic_write_text(p, json.dumps(doc, indent=2))
+        ids.append(row["collection_id"])
+    return ids
 
 
 def save_catalog_root(

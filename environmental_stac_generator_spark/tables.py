@@ -132,7 +132,9 @@ def fan_out_frame(df: DataFrame) -> DataFrame:
         return df
     try:
         n = df.rdd.getNumPartitions()
-    except Exception:
+    except NotImplementedError:
+        # a backend without the RDD API (Spark Connect raises
+        # PySparkNotImplementedError): no partition count, no fan
         return df
     return df.repartition(FAN_OUT_PARTITIONS) if n < FAN_OUT_PARTITIONS else df
 

@@ -130,3 +130,32 @@ def test_non_json_native_value_stores_and_revalidates(spark, tmp_path):
     changed = {"c": {"start": dt.datetime(1999, 1, 1), "root": Path("/data/x")}}
     with pytest.raises(ConfigMismatchError, match="start"):
         store_or_validate_config(spark, p, changed)
+
+
+def test_revalidation_runs_no_spark_job(spark, tmp_path):
+    """Drift is checked on the driver: re-validating an existing
+    config (matching, and drifted) starts no Spark job."""
+    p = tmp_path / "config.json"
+    cfg = {"c": {"forecast_frequency": "1days"}}
+    store_or_validate_config(spark, p, cfg)
+    sc = spark.sparkContext
+    group = "test_config_guard_revalidate"
+    sc.setJobGroup(group, group)
+    try:
+        store_or_validate_config(spark, p, cfg)
+        with pytest.raises(ConfigMismatchError, match="added c.forecast_frequency"):
+            store_or_validate_config(spark, p, {"c": {"forecast_frequency": "2days"}})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_drift_message_lists_added_then_removed(spark, tmp_path):
+    p = tmp_path / "config.json"
+    store_or_validate_config(spark, p, {"c": {"f": "1days", "g": 1}})
+    with pytest.raises(ConfigMismatchError) as exc:
+        store_or_validate_config(spark, p, {"c": {"f": "2days", "g": 1}})
+    assert str(exc.value).endswith(
+        'differs from current run: added c.f="2days"; removed c.f="1days"'
+    )

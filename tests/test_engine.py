@@ -45,6 +45,23 @@ def _pinned_decoder(extreme_slab: bool = False):
     return decode
 
 
+def _pinned_meta_decoder():
+    """``netcdf.fake_meta_decoder`` keyed on the same fixed path as
+    :func:`_pinned_decoder`, so the CRS it reports is the same on
+    every run."""
+
+    def decode(path, content=None):
+        path = "landing/" + "/".join(path.split("/")[-2:])
+        return netcdf.fake_meta_decoder(path, content)
+
+    return decode
+
+
+def _squash_transform(crs, xmin, ymin, xmax, ymax):
+    # a fixed stand-in for the pyproj reprojection
+    return (xmin / 1e6, ymin / 1e6, xmax / 1e6, ymax / 1e6)
+
+
 def _tree_md5(stac_dir: Path) -> str:
     h = hashlib.md5()
     for f in sorted(stac_dir.rglob("*.json")):
@@ -59,11 +76,18 @@ def pinned_catalogs(spark, inputs, tmp_path_factory):
     for process + save_catalog over the module's inputs."""
     sc = spark.sparkContext
     out = {}
-    for case, extreme in (("fake", False), ("extreme", True)):
+    crs = {
+        "meta_decoder": _pinned_meta_decoder(),
+        "bbox_transform": _squash_transform,
+        "file_server_url": "https://files.example.com/data",
+    }
+    for case, extreme, extra in (
+        ("fake", False, {}), ("extreme", True, {}), ("crs", False, crs)
+    ):
         root = tmp_path_factory.mktemp(case)
         eng = EnvStacEngine(
             spark, catalog_name="pinned", output_dir=root,
-            decoder=_pinned_decoder(extreme),
+            decoder=_pinned_decoder(extreme), **extra,
         )
         results = eng.process(str(inputs))
         group = f"test_engine_save_catalog_{case}"
@@ -87,6 +111,9 @@ def pinned_catalogs(spark, inputs, tmp_path_factory):
         # change one byte
         ("fake", "004ba1103f39da0b1441fc2e53a9a753"),
         ("extreme", "3dda1984630a4cfebdb29ec503522d0a"),
+        # reprojected bbox, proj:code and hrefs rewritten onto a file
+        # server (md5 taken before the documents became one chain)
+        ("crs", "fda24dd19c7b2cc67405ddf0bb7982b3"),
     ],
 )
 def test_catalog_tree_bytes_pinned(pinned_catalogs, case, md5):
@@ -95,14 +122,15 @@ def test_catalog_tree_bytes_pinned(pinned_catalogs, case, md5):
 
 
 def test_save_catalog_reads_cached_summary(pinned_catalogs):
-    """save_catalog reads the cached slab summary, info and leadtime
-    counts instead of re-exploding every cell per action. On this
-    fixture at local[4], deriving the catalog from the cells took 128
-    and 133 jobs in two identical runs; the cached summary takes 41.
-    AQE moves the count by a few jobs from run to run, so the bound is
-    half the lower old count."""
+    """save_catalog derives both document sets from the cached,
+    item-partitioned slab summary instead of re-exploding every cell
+    per action. On this fixture at local[4], deriving the catalog
+    from the cells took 128 and 133 jobs in two identical runs; the
+    cached summary with join-assembled documents took 41-42; the one
+    aggregate chain takes 7 (two of them cache the summary). AQE
+    moves the count by a few jobs from run to run."""
     jobs = pinned_catalogs["fake"][1]
-    assert jobs <= 64, f"save_catalog ran {jobs} jobs"
+    assert jobs <= 12, f"save_catalog ran {jobs} jobs"
 
 
 def test_process_end_to_end(spark, inputs, tmp_path):
@@ -203,7 +231,7 @@ def test_process_crs_aware_catalog(spark, inputs, tmp_path):
     # fake grid coords are ~1e7 metres; the squash puts WGS84-ish
     # magnitudes in the bbox — proof the transform ran
     assert abs(info["xmax"]) < 100 and abs(info["ymax"]) < 100
-    assert "crs" in results
+    assert results["items"].filter("crs IS NULL").count() == 0
 
     eng.save_catalog(results)
     stac_dir = tmp_path / "stac" / "icecrs"
@@ -237,14 +265,18 @@ def test_rewrite_hrefs_tolerates_regex_metachars(spark):
     """A base URL containing '$' must not throw an illegal-group-
     reference error (regexp_replace replacement semantics) — the
     rewrite is a plain startswith + concat."""
-    from environmental_stac_generator_spark.plans.stac_catalog import rewrite_hrefs
+    import pyspark.sql.functions as F
+
+    from environmental_stac_generator_spark.plans.stac_catalog import served_href
 
     assets = spark.createDataFrame(
         [("./cogs/a.tif",), ("http://kept/as-is.tif",)], "href string"
     )
     got = {
         r["href"]
-        for r in rewrite_hrefs(assets, "https://host/files$v1\\x").collect()
+        for r in assets.select(
+            served_href(F.col("href"), "https://host/files$v1\\x").alias("href")
+        ).collect()
     }
     assert got == {
         "https://host/files$v1\\x/cogs/a.tif",

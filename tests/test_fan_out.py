@@ -58,3 +58,36 @@ def test_fanned_results_identical(spark, sf_dir, name, monkeypatch):
     plain = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
     assert fanned == plain
     assert len(fanned) > 0
+
+
+class _NoRdd:
+    """A frame stand-in whose ``.rdd`` raises ``error``."""
+
+    def __init__(self, error: Exception):
+        self.error = error
+
+    @property
+    def rdd(self):
+        raise self.error
+
+    def repartition(self, n):  # pragma: no cover - must not be reached
+        raise AssertionError("fanned a frame with no partition count")
+
+
+def test_fan_out_frame_passes_through_backend_without_rdd():
+    # Spark Connect frames raise PySparkNotImplementedError on .rdd
+    from pyspark.errors import PySparkNotImplementedError
+
+    df = _NoRdd(
+        PySparkNotImplementedError(
+            errorClass="NOT_IMPLEMENTED", messageParameters={"feature": "rdd"}
+        )
+    )
+    assert tables.fan_out_frame(df) is df
+
+
+def test_fan_out_frame_propagates_other_errors():
+    # any other failure (a planning or analysis error) must surface,
+    # not silently skip the fan
+    with pytest.raises(RuntimeError, match="planning failed"):
+        tables.fan_out_frame(_NoRdd(RuntimeError("planning failed")))

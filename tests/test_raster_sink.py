@@ -345,3 +345,15 @@ def test_valid_time_matches_leadtime_offset_microseconds(spark):
             leadtime_offset("ts", unit, float(lead) * step).alias("t")
         ).first()["t"]
         assert pd.Timestamp(col) == kernel, (unit, step, lead, col, kernel)
+
+
+def test_building_sinks_emits_no_user_warning(grids, tmp_path):
+    """The grouped-map closures carry no partial type hints, so
+    building either sink's plan warns nothing (PySpark warns when it
+    cannot infer an eval type from incomplete hints)."""
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        raster.encode_cogs(grids, tmp_path)
+        raster.write_netcdf_slices(grids, tmp_path)

@@ -25,12 +25,17 @@ def long_df(spark, tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
-def info(long_df):
-    return fc.forecast_info(long_df)
+def summary(long_df):
+    return fc.slab_summary(long_df).persist()
 
 
-def test_build_collections(info):
-    rows = sc.build_collections(info, license="MIT").collect()
+@pytest.fixture(scope="module")
+def catalog(summary):
+    return sc.build_catalog(summary)
+
+
+def test_build_collections(summary):
+    rows = sc.build_catalog(summary, license="MIT")["collections"].collect()
     assert len(rows) == 1
     r = rows[0]
     assert r["collection_id"] == "icenet_test"
@@ -39,10 +44,10 @@ def test_build_collections(info):
     assert len(r["bbox"]) == 4
 
 
-def test_merge_collections_extent(spark, info):
+def test_merge_collections_extent(spark, catalog):
     import pyspark.sql.functions as F
 
-    base = sc.build_collections(info)
+    base = catalog["collections"]
     newer = base.withColumn("extent_end", F.expr("extent_end + INTERVAL 30 DAY")).withColumn(
         "title", F.lit("SHOULD_NOT_WIN")
     )
@@ -53,9 +58,8 @@ def test_merge_collections_extent(spark, info):
     assert merged["extent_end"] == base_row["extent_end"] + pd.Timedelta(days=30)  # J8
 
 
-def test_build_items_and_merge(long_df, info):
-    times = fc.leadtime_counts(long_df)
-    items = sc.build_items(times, info, leadtime_unit="days")
+def test_build_items_and_merge(long_df, catalog):
+    items = catalog["items"]
     rows = items.collect()
     assert len(rows) == long_df.select("forecast_reference_time").distinct().count()
     r = rows[0]
@@ -67,13 +71,10 @@ def test_build_items_and_merge(long_df, info):
     assert sc.merge_items(items, items).count() == len(rows)
 
 
-def test_cog_assets_band_meta(long_df, info):
-    stats = fc.band_statistics(long_df)
-    times = fc.leadtime_counts(long_df)
-    items = sc.build_items(times, info)
-    cogs = sc.build_cog_assets(stats, items)
+def test_cog_assets_band_meta(catalog):
+    cogs = catalog["assets"].filter("leadtime_idx IS NOT NULL")
     rows = cogs.collect()
-    n_items = len(items.collect())
+    n_items = len(catalog["items"].collect())
     assert len(rows) == n_items * 3  # 3 leadtimes per item
     r = min(rows, key=lambda r: (r["item_id"], r["leadtime_idx"]))
     bands = r["band_meta"]
@@ -83,67 +84,64 @@ def test_cog_assets_band_meta(long_df, info):
     assert "Variables: sic_mean, sic_stddev" == r["description"]
 
 
-def test_thumbnails_first_wins(long_df, info):
-    stats = fc.band_statistics(long_df)
-    items = sc.build_items(fc.leadtime_counts(long_df), info)
-    cogs = sc.build_cog_assets(stats, items)
-    thumbs = sc.build_thumbnail_assets(cogs)
+def test_thumbnails_first_wins(catalog):
+    thumbs = catalog["assets"].filter("asset_key = 'thumbnail'")
     per_item = thumbs.filter("item_id IS NOT NULL").collect()
     coll_level = thumbs.filter("item_id IS NULL").collect()
-    assert len(per_item) == items.count()  # leadtime-0 thumb per item
+    assert len(per_item) == catalog["items"].count()  # leadtime-0 thumb per item
     assert len(coll_level) == 1  # J9: one promoted per collection
     assert coll_level[0]["href"].endswith(".jpg")
+    # the promoted one is the first item's, by item id
+    first = min(per_item, key=lambda r: r["item_id"])
+    assert coll_level[0]["href"] == first["href"]
 
 
-def test_href_rewrite(spark, long_df, info):
-    stats = fc.band_statistics(long_df)
-    items = sc.build_items(fc.leadtime_counts(long_df), info)
-    cogs = sc.build_cog_assets(stats, items)
-    rewritten = sc.rewrite_hrefs(cogs, "https://files.example.com")  # no trailing /
+def test_href_rewrite(summary):
+    assets = sc.build_catalog(summary, file_server_url="https://files.example.com")[
+        "assets"
+    ].collect()  # no trailing /
+    assert {r["asset_key"] for r in assets} >= {"netcdf", "thumbnail"}
+    assert all(r["href"].startswith("https://files.example.com/") for r in assets)
     assert all(
         r["href"].startswith("https://files.example.com/cogs/")
-        for r in rewritten.collect()
+        for r in assets
+        if r["leadtime_idx"] is not None
     )
 
 
-def test_items_to_json_valid_stac(long_df, info):
-    stats = fc.band_statistics(long_df)
-    items = sc.build_items(fc.leadtime_counts(long_df), info)
-    cogs = sc.build_cog_assets(stats, items)
-    nc = sc.build_netcdf_assets(items)
-    assets = cogs.unionByName(nc).unionByName(sc.build_thumbnail_assets(cogs))
-    docs = sc.items_to_json(items, assets).collect()
+def test_items_to_json_valid_stac(catalog):
+    docs = sc.items_to_json(catalog["items"]).collect()
     for d in docs:
         doc = json.loads(d["json"])
         assert doc["type"] == "Feature"
         assert doc["stac_version"] == "1.0.0"
         assert doc["id"] == d["item_id"]
         assert set(doc["assets"]) >= {"netcdf", "thumbnail"}
+        assert list(doc["assets"]) == sorted(doc["assets"])
         assert doc["properties"]["forecast:leadtime_length"] == 3
+        assert "stac_extensions" not in doc  # no CRS known
         geom = json.loads(doc["geometry"]) if isinstance(doc["geometry"], str) else doc["geometry"]
         assert geom["type"] == "Polygon"
 
 
-def test_collections_to_json(info):
-    colls = sc.build_collections(info)
-    doc = json.loads(sc.collections_to_json(colls).first()["json"])
+def test_collections_to_json(catalog):
+    doc = json.loads(sc.collections_to_json(catalog["collections"]).first()["json"])
     assert doc["type"] == "Collection"
     assert doc["extent"]["temporal"]["interval"][0][0].endswith("Z")
+    assert list(doc["assets"]) == ["thumbnail"]  # the promoted first-item thumbnail
 
 
-def test_catalog_roundtrip_traversal(spark, long_df, info, tmp_path):
-    from environmental_stac_generator_spark.operators import forecast as fc
+def test_catalog_roundtrip_traversal(spark, catalog, tmp_path):
     from environmental_stac_generator_spark.sinks import stac_json as sj
 
-    items = sc.build_items(fc.leadtime_counts(long_df), info)
-    cogs = sc.build_cog_assets(fc.band_statistics(long_df), items)
     out = tmp_path / "catalog"
-    sj.save_items(sc.items_to_json(items, cogs), out)
-    sj.save_collections(sc.collections_to_json(sc.build_collections(info)), out)
+    sj.save_items(sc.items_to_json(catalog["items"]), out)
+    ids = sj.save_collections(sc.collections_to_json(catalog["collections"]), out)
+    assert ids == ["icenet_test"]
     tree = sj.load_catalog_tree(spark, out)
     types = {r["type"] for r in tree.select("type").distinct().collect()}
     assert types == {"Feature", "Collection"}
-    n_items = items.count()
+    n_items = catalog["items"].count()
     joined = (
         tree.filter(tree.type == "Feature")
         .select("id", "collection")
@@ -156,6 +154,37 @@ def test_catalog_roundtrip_traversal(spark, long_df, info, tmp_path):
     )
     # every item's collection link resolves in the read-back tree
     assert joined.count() == n_items
+
+
+def test_catalog_metadata_matches_relational_operators(long_df):
+    """The chain's per-collection and per-item values equal the
+    standalone operators over the cells, including the valid-band
+    rule: a degenerate variable present at one leadtime only is
+    dropped from valid_bands (its COG band metadata stays)."""
+    cells = long_df.unionByName(
+        long_df.filter("leadtime_idx = 0").withColumn("variable", F.lit("latlon_2d"))
+    )
+    cat = sc.build_catalog(fc.slab_summary(cells))
+    info = cat["info"].first()
+    assert info["valid_bands"] == sorted(
+        r["variable"] for r in fc.infer_valid_bands(cells).collect()
+    ) == ["sic_mean", "sic_stddev"]
+    bbox = fc.bbox(cells).first()
+    assert [info[c] for c in ("xmin", "ymin", "xmax", "ymax")] == [
+        bbox[c] for c in ("xmin", "ymin", "xmax", "ymax")
+    ]
+    ext = fc.temporal_extent(cells).first()
+    assert (info["extent_start"], info["extent_end"]) == (
+        ext["extent_start"], ext["extent_end"]
+    )
+    assert info["n_leadtime"] == cells.select("leadtime_idx").distinct().count()
+    assert sorted(map(tuple, cat["leadtime_counts"].collect())) == sorted(
+        map(tuple, fc.leadtime_counts(cells).collect())
+    )
+    lead0 = cat["assets"].filter("leadtime_idx = 0").first()
+    assert [b["name"] for b in lead0["band_meta"]] == [
+        "latlon_2d", "sic_mean", "sic_stddev"
+    ]
 
 
 def test_save_collections_merges_extents_across_runs(spark, tmp_path):
