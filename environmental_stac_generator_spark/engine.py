@@ -107,7 +107,6 @@ class EnvStacEngine:
         """
         step, unit = parse_forecast_frequency(forecast_frequency)
         store_or_validate_config(
-            self.spark,
             Path(self.output_dir) / "config.json",
             {self.catalog_name: {"forecast_frequency": forecast_frequency}},
         )

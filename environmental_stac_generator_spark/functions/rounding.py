@@ -10,6 +10,13 @@ rounded column in the oracle surface instead uses
 
 which is plain IEEE-754 arithmetic evaluated identically by every
 engine — deterministic, rule-free, oracle-safe.
+
+SQL texts write the scale as ``1e2``/``1e4``, never ``100.0``: Spark
+SQL types a plain decimal literal ``100.0`` as DECIMAL, so
+``floor(...) / 100.0`` would return a DECIMAL column where the
+DataFrame-side :func:`rnd` returns DOUBLE. An exponent literal is
+DOUBLE in both Spark and DuckDB, so one text gives one schema in
+both engines.
 """
 
 from __future__ import annotations
@@ -26,6 +33,6 @@ def rnd(col: Column | str, n: int) -> Column:
 
 
 def sql_rnd(expr: str, n: int) -> str:
-    """The DuckDB-side twin of :func:`rnd`."""
-    scale = float(10**n)
-    return f"floor(({expr}) * {scale} + 0.5) / {scale}"
+    """The SQL-text twin of :func:`rnd` (valid in Spark SQL and
+    DuckDB)."""
+    return f"floor(({expr}) * 1e{n} + 0.5) / 1e{n}"

@@ -7,8 +7,8 @@ error class ``stac/utils.py:13-14``). Here the stored config is a
 tiny JSON file of canonical (collection, param, value) rows and drift
 is their two-way multiset difference — empty means consistent. The
 guard runs on the driver over a handful of rows, so it starts no
-Spark job; :func:`config_diff` is the same difference as a relational
-``exceptAll`` for configs held in DataFrames.
+Spark job. The registry's ``config_guard`` query states the same
+difference as SQL ``EXCEPT ALL``.
 """
 
 from __future__ import annotations
@@ -17,31 +17,19 @@ import json
 from collections import Counter
 from pathlib import Path
 
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
-
 
 class ConfigMismatchError(RuntimeError):
     """Raised when the current run's parameters differ from the
     stored configuration (ref ``stac/utils.py:13-14``)."""
 
 
-def config_diff(stored: DataFrame, current: DataFrame) -> DataFrame:
-    """Two-way EXCEPT ALL — the relational DeepDiff (F17)."""
-    added = current.exceptAll(stored).withColumn("drift", F.lit("added"))
-    removed = stored.exceptAll(current).withColumn("drift", F.lit("removed"))
-    return added.unionByName(removed)
-
-
-def store_or_validate_config(
-    spark: SparkSession, config_path: str | Path, current: dict[str, dict]
-) -> None:
+def store_or_validate_config(config_path: str | Path, current: dict[str, dict]) -> None:
     """First run: persist. Later runs: raise on drift — but, like the
     reference's ``_store_config`` (``stac/generator.py:440-459``),
     only the collections the CURRENT run touches are validated: a
     shared config file holding OTHER collections' entries is not our
     business, and brand-new collections are silently allowed.
-    Driver-side: ``spark`` is not used."""
+    Runs on the driver and starts no Spark job."""
     from environmental_stac_generator_spark.sinks.stac_json import (
         _atomic_write_text,
     )

@@ -10,8 +10,9 @@ Reference kernels re-expressed as built-in Spark aggregations:
 - A7 overview pyramid       (ref ``cog.py:89-117``; hierarchical
   windowed average at /2 and /4)
 
-All are single-shuffle ``groupBy().agg()`` plans with map-side
-partial aggregation; at 100 TB the only cost is one exchange on the
+A1, A3, A5, A6 and the Q1 flagship are plain SQL texts
+(``register_sql``); A2 and A7 keep DataFrame bodies. All are
+single-shuffle aggregate plans with map-side partial aggregation; at 100 TB the only cost is one exchange on the
 (low-cardinality) group keys, and AQE coalesces the post-shuffle
 partitions.
 """
@@ -22,48 +23,31 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from environmental_stac_generator_spark.functions.rounding import rnd
-from environmental_stac_generator_spark.registry import register
+from environmental_stac_generator_spark.registry import register, register_sql
 from environmental_stac_generator_spark.tables import load
 
 
-@register(
+register_sql(
     "q1_pricing_summary",
     """
     SELECT l_returnflag, l_linestatus,
-           floor((CAST(sum(l_quantity) AS DOUBLE)) * 100.0 + 0.5) / 100.0      AS sum_qty,
-           floor((CAST(sum(l_extendedprice) AS DOUBLE)) * 100.0 + 0.5) / 100.0 AS sum_base_price,
-           floor((CAST(sum(l_extendedprice * (1 - l_discount)) AS DOUBLE)) * 100.0 + 0.5) / 100.0 AS sum_disc_price,
-           floor((CAST(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)) AS DOUBLE)) * 100.0 + 0.5) / 100.0 AS sum_charge,
-           floor((avg(l_quantity)) * 10000.0 + 0.5) / 10000.0      AS avg_qty,
-           floor((avg(l_extendedprice)) * 10000.0 + 0.5) / 10000.0 AS avg_price,
-           floor((avg(l_discount)) * 10000.0 + 0.5) / 10000.0      AS avg_disc,
+           floor((CAST(sum(l_quantity) AS DOUBLE)) * 1e2 + 0.5) / 1e2      AS sum_qty,
+           floor((CAST(sum(l_extendedprice) AS DOUBLE)) * 1e2 + 0.5) / 1e2 AS sum_base_price,
+           floor((CAST(sum(l_extendedprice * (1 - l_discount)) AS DOUBLE)) * 1e2 + 0.5) / 1e2 AS sum_disc_price,
+           floor((CAST(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)) AS DOUBLE)) * 1e2 + 0.5) / 1e2 AS sum_charge,
+           floor((avg(l_quantity)) * 1e4 + 0.5) / 1e4      AS avg_qty,
+           floor((avg(l_extendedprice)) * 1e4 + 0.5) / 1e4 AS avg_price,
+           floor((avg(l_discount)) * 1e4 + 0.5) / 1e4      AS avg_disc,
            count(*) AS count_order
-    FROM lineitem
+    FROM {lineitem}
     WHERE l_shipdate <= TIMESTAMP '1998-09-02'
     GROUP BY l_returnflag, l_linestatus
     """,
     doc="Flagship: TPC-H Q1-shaped pricing summary (A3 stats family).",
 )
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            rnd(F.sum("l_quantity"), 2).alias("sum_qty"),
-            rnd(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            rnd(F.sum(disc_price), 2).alias("sum_disc_price"),
-            rnd(F.sum(disc_price * (1 + F.col("l_tax"))), 2).alias("sum_charge"),
-            rnd(F.avg("l_quantity"), 4).alias("avg_qty"),
-            rnd(F.avg("l_extendedprice"), 4).alias("avg_price"),
-            rnd(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
 
 
-@register(
+register_sql(
     "bbox_agg",
     """
     SELECT l_returnflag,
@@ -71,19 +55,11 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
            min(l_extendedprice) AS ymin,
            max(l_quantity)      AS xmax,
            max(l_extendedprice) AS ymax
-    FROM lineitem GROUP BY l_returnflag
+    FROM {lineitem} GROUP BY l_returnflag
     """,
     doc="A1 spatial bbox: [min(x), min(y), max(x), max(y)] per group "
     "(ref stac/generator.py:577-579).",
 )
-def bbox_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.min("l_quantity").alias("xmin"),
-        F.min("l_extendedprice").alias("ymin"),
-        F.max("l_quantity").alias("xmax"),
-        F.max("l_extendedprice").alias("ymax"),
-    )
 
 
 @register(
@@ -106,77 +82,52 @@ def temporal_extent(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "band_stats",
     """
     WITH masked AS (
       SELECT event_type,
              CASE WHEN user_id % 7 = 0 THEN NULL ELSE value END AS value
-      FROM events
+      FROM {events}
     )
     SELECT event_type,
            min(value) AS stat_min,
            max(value) AS stat_max,
-           floor((avg(value)) * 10000.0 + 0.5) / 10000.0        AS stat_mean,
-           floor((stddev_pop(value)) * 10000.0 + 0.5) / 10000.0 AS stat_std,
-           floor(100.0 * count(value) / count(*) * 100) / 100 AS valid_pct
+           floor((avg(value)) * 1e4 + 0.5) / 1e4        AS stat_mean,
+           floor((stddev_pop(value)) * 1e4 + 0.5) / 1e4 AS stat_std,
+           floor(1e2 * count(value) / count(*) * 100) / 100 AS valid_pct
     FROM masked GROUP BY event_type
     """,
     doc="A3 per-band stats with NaN/NULL skipping, POPULATION stddev "
     "(numpy np.std semantics, ref utils.py:244-248) and 2dp-FLOORED "
     "valid percent (ref utils.py:250).",
 )
-def band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    masked = ev.withColumn(
-        "value", F.when(F.col("user_id") % 7 == 0, None).otherwise(F.col("value"))
-    )
-    return masked.groupBy("event_type").agg(
-        F.min("value").alias("stat_min"),
-        F.max("value").alias("stat_max"),
-        rnd(F.avg("value"), 4).alias("stat_mean"),
-        rnd(F.stddev_pop("value"), 4).alias("stat_std"),
-        (F.floor(100.0 * F.count("value") / F.count(F.lit(1)) * 100) / 100).alias(
-            "valid_pct"
-        ),
-    )
 
 
-@register(
+register_sql(
     "dir_size_sum",
     """
     SELECT source,
            CAST(sum(n_chars) AS BIGINT) AS total_bytes,
            count(*) AS n_files
-    FROM documents GROUP BY source
+    FROM {documents} GROUP BY source
     """,
     doc="A5 directory size sum: sum(getsize) over a file listing "
     "(ref stac/utils.py:77-85).",
 )
-def dir_size_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    return d.groupBy("source").agg(
-        F.sum("n_chars").alias("total_bytes"), F.count(F.lit(1)).alias("n_files")
-    )
 
 
-@register(
+register_sql(
     "leadtime_count",
     """
     SELECT event_type,
            count(DISTINCT user_id) AS n_distinct,
            count(*) AS n_rows
-    FROM events GROUP BY event_type
+    FROM {events} GROUP BY event_type
     """,
     doc="A6 leadtime count: distinct coordinate count per group "
     "(ref stac/generator.py:647).",
 )
-def leadtime_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("n_distinct"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
 
 
 @register(

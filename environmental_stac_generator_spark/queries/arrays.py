@@ -1,9 +1,10 @@
 """Array / nested / pivot operators (SURVEY §2.6 N1–N6).
 
 Band stacking, explode/flatten, and GeoJSON templating as built-in
-array functions. The pivot keeps an explicit, fixed column list so
-the plan needs no extra distinct-scan job and the output schema is
-deterministic at any scale.
+array functions. The pivots are SQL texts (``register_sql``) with an
+explicit, fixed column list per pivot value, so the plan needs no
+extra distinct-scan job and the output schema is deterministic at
+any scale.
 """
 
 from __future__ import annotations
@@ -12,53 +13,40 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from environmental_stac_generator_spark.functions.rounding import rnd
-from environmental_stac_generator_spark.registry import register
+from environmental_stac_generator_spark.registry import register, register_sql
 from environmental_stac_generator_spark.tables import load
 
-EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-@register(
+register_sql(
     "band_pivot",
     """
     SELECT user_id % 10 AS user_bucket,
-           floor((avg(CASE WHEN event_type = 'click'    THEN value END)) * 10000.0 + 0.5) / 10000.0 AS click,
-           floor((avg(CASE WHEN event_type = 'error'    THEN value END)) * 10000.0 + 0.5) / 10000.0 AS error,
-           floor((avg(CASE WHEN event_type = 'purchase' THEN value END)) * 10000.0 + 0.5) / 10000.0 AS purchase,
-           floor((avg(CASE WHEN event_type = 'signup'   THEN value END)) * 10000.0 + 0.5) / 10000.0 AS signup,
-           floor((avg(CASE WHEN event_type = 'view'     THEN value END)) * 10000.0 + 0.5) / 10000.0 AS view
-    FROM events GROUP BY user_id % 10
+           floor((avg(CASE WHEN event_type = 'click'    THEN value END)) * 1e4 + 0.5) / 1e4 AS click,
+           floor((avg(CASE WHEN event_type = 'error'    THEN value END)) * 1e4 + 0.5) / 1e4 AS error,
+           floor((avg(CASE WHEN event_type = 'purchase' THEN value END)) * 1e4 + 0.5) / 1e4 AS purchase,
+           floor((avg(CASE WHEN event_type = 'signup'   THEN value END)) * 1e4 + 0.5) / 1e4 AS signup,
+           floor((avg(CASE WHEN event_type = 'view'     THEN value END)) * 1e4 + 0.5) / 1e4 AS view
+    FROM {events} GROUP BY user_id % 10
     """,
     doc="N1 band stacking: long->wide pivot on the variable column "
     "(xr.concat along band dim, ref stac/generator.py:264-308,902-904). "
     "Fixed pivot values => single-pass plan.",
 )
-def band_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    piv = (
-        ev.groupBy((F.col("user_id") % 10).alias("user_bucket"))
-        .pivot("event_type", EVENT_TYPES)
-        .agg(F.avg("value"))
-    )
-    return piv.select(
-        "user_bucket", *[rnd(F.col(t), 4).alias(t) for t in EVENT_TYPES]
-    )
 
 
-@register(
+register_sql(
     "geojson_bbox",
     """
     WITH bbox AS (
-      SELECT r_name AS collection,
+      SELECT /*+ BROADCAST(r) */ r_name AS collection,
              CAST(min(n_nationkey) AS DOUBLE) AS xmin,
              CAST(min(n_regionkey) AS DOUBLE) AS ymin,
              CAST(max(n_nationkey) AS DOUBLE) AS xmax,
              CAST(max(n_regionkey) AS DOUBLE) AS ymax
-      FROM nation JOIN region ON n_regionkey = r_regionkey
+      FROM {nation} n JOIN {region} r ON n_regionkey = r_regionkey
       GROUP BY r_name
     )
     SELECT collection,
-           printf('{"type": "Polygon", "coordinates": [[[%.6f, %.6f], [%.6f, %.6f], [%.6f, %.6f], [%.6f, %.6f], [%.6f, %.6f]]]}',
+           printf('{{"type": "Polygon", "coordinates": [[[%.6f, %.6f], [%.6f, %.6f], [%.6f, %.6f], [%.6f, %.6f], [%.6f, %.6f]]]}}',
                   xmin, ymin, xmax, ymin, xmax, ymax, xmin, ymax, xmin, ymin)
              AS geometry
     FROM bbox
@@ -66,31 +54,6 @@ def band_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="N4 GeoJSON Polygon from bbox corners: shapely.box+mapping as "
     "a pure string template (ref stac/generator.py:584).",
 )
-def geojson_bbox(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n = load(spark, sf_dir, "nation")
-    r = load(spark, sf_dir, "region")
-    bbox = (
-        n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy(F.col("r_name").alias("collection"))
-        .agg(
-            F.min("n_nationkey").cast("double").alias("xmin"),
-            F.min("n_regionkey").cast("double").alias("ymin"),
-            F.max("n_nationkey").cast("double").alias("xmax"),
-            F.max("n_regionkey").cast("double").alias("ymax"),
-        )
-    )
-    tmpl = (
-        '{"type": "Polygon", "coordinates": [[[%.6f, %.6f], [%.6f, %.6f], '
-        "[%.6f, %.6f], [%.6f, %.6f], [%.6f, %.6f]]]}"
-    )
-    return bbox.select(
-        "collection",
-        F.format_string(
-            tmpl,
-            "xmin", "ymin", "xmax", "ymin", "xmax", "ymax", "xmin", "ymax",
-            "xmin", "ymin",
-        ).alias("geometry"),
-    )
 
 
 @register(
@@ -116,27 +79,17 @@ def explode_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "grid_to_wide",
     """
     SELECT l_suppkey % 16 AS yc, l_partkey % 16 AS xc,
-           floor((avg(CASE WHEN l_returnflag = 'A' THEN l_quantity END)) * 10000.0 + 0.5) / 10000.0 AS band_a,
-           floor((avg(CASE WHEN l_returnflag = 'N' THEN l_quantity END)) * 10000.0 + 0.5) / 10000.0 AS band_n,
-           floor((avg(CASE WHEN l_returnflag = 'R' THEN l_quantity END)) * 10000.0 + 0.5) / 10000.0 AS band_r
-    FROM lineitem
+           floor((avg(CASE WHEN l_returnflag = 'A' THEN l_quantity END)) * 1e4 + 0.5) / 1e4 AS band_a,
+           floor((avg(CASE WHEN l_returnflag = 'N' THEN l_quantity END)) * 1e4 + 0.5) / 1e4 AS band_n,
+           floor((avg(CASE WHEN l_returnflag = 'R' THEN l_quantity END)) * 1e4 + 0.5) / 1e4 AS band_r
+    FROM {lineitem}
     GROUP BY l_suppkey % 16, l_partkey % 16
     """,
     doc="N1 long->grid regroup: the cell-level pivot that rebuilds a "
     "(y, x, band) raster tile from tidy rows — the relational half of "
     "the K2 COG regroup (ref stac/generator.py:902-904).",
 )
-def grid_to_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    flags = {"band_a": "A", "band_n": "N", "band_r": "R"}
-    aggs = [
-        rnd(F.avg(F.when(F.col("l_returnflag") == flag, F.col("l_quantity"))), 4).alias(name)
-        for name, flag in flags.items()
-    ]
-    return li.groupBy(
-        (F.col("l_suppkey") % 16).alias("yc"), (F.col("l_partkey") % 16).alias("xc")
-    ).agg(*aggs)

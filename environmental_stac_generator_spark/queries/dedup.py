@@ -20,7 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from environmental_stac_generator_spark.functions.rounding import rnd
-from environmental_stac_generator_spark.registry import register
+from environmental_stac_generator_spark.registry import register, register_sql
 from environmental_stac_generator_spark.tables import load
 
 N_HASHES = 8  # minhash signature length
@@ -64,24 +64,18 @@ _DUCK_SHINGLED = f"""
 """
 
 
-@register(
+register_sql(
     "dedup_exact",
     """
     SELECT md5(text) AS content_hash,
            min(doc_id) AS survivor_doc_id,
            count(*) AS n_copies
-    FROM documents
+    FROM {documents}
     GROUP BY md5(text)
     """,
     doc="Exact dedup: hash-groupBy on content, deterministic survivor "
     "= min(doc_id). One shuffle on the hash.",
 )
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    return d.groupBy(F.md5(F.col("text").cast("binary")).alias("content_hash")).agg(
-        F.min("doc_id").alias("survivor_doc_id"),
-        F.count(F.lit(1)).alias("n_copies"),
-    )
 
 
 # MinHash universal-hash family h_k(x) = (a_k·x + b_k) mod P over a

@@ -5,7 +5,8 @@
 kernel passes floats through bit-exact, so the DuckDB oracle is the
 plain aggregation. The foreign-CRS branch (injected transform) is
 covered by tests/test_geo.py. ``ensure_utc_ts`` checks F4 against
-DuckDB's UTC rendering of the same timestamps.
+DuckDB's UTC rendering of the same timestamps. ``zorder_spatial`` is
+one SQL text run by both engines.
 """
 
 from __future__ import annotations
@@ -15,8 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from environmental_stac_generator_spark.functions import zorder
 from environmental_stac_generator_spark.functions.geo import ensure_utc, reproject_bbox
-from environmental_stac_generator_spark.functions.rounding import rnd, sql_rnd
-from environmental_stac_generator_spark.registry import register
+from environmental_stac_generator_spark.functions.rounding import sql_rnd
+from environmental_stac_generator_spark.registry import register, register_sql
 from environmental_stac_generator_spark.tables import load
 
 
@@ -71,19 +72,17 @@ def ensure_utc_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "zorder_spatial",
-    # the oracle is GENERATED from the same quantize/morton helpers
-    # the Spark side uses (functions/zorder.py exists precisely
-    # because its SQL is identical in both engines): a hand-copied
-    # bit ladder had already drifted textually and would silently
-    # keep validating the old ladder after any BITS/mask change
+    # the text is GENERATED from the quantize/morton helpers
+    # (functions/zorder.py), whose SQL is identical in both engines:
+    # a hand-copied bit ladder had already drifted textually
     f"""
     WITH q AS (
       SELECT {zorder.quantize_sql("value", 0.0, 500.0)} AS xq,
              {zorder.quantize_sql("CAST(user_id AS DOUBLE)", 0.0, 256.0)} AS yq,
              value
-      FROM events
+      FROM {{events}}
     )
     SELECT CAST({zorder.morton_sql("xq", "yq")} >> 10 AS BIGINT) AS z_bucket,
            CAST(count(*) AS BIGINT) AS n_rows,
@@ -97,16 +96,3 @@ def ensure_utc_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "column clusters 2-D neighborhoods so parquet min/max stats prune "
     "spatial range scans (the lakehouse Z-ORDER technique).",
 )
-def zorder_spatial(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from environmental_stac_generator_spark.functions.zorder import zorder_col
-
-    ev = load(spark, sf_dir, "events")
-    z = zorder_col("value", "cast(user_id as double)", (0.0, 500.0), (0.0, 256.0))
-    return (
-        ev.withColumn("z", z)
-        .groupBy(F.expr("z >> 10").cast("bigint").alias("z_bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            rnd(F.avg("value"), 4).alias("avg_value"),
-        )
-    )

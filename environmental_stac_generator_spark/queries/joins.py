@@ -3,10 +3,11 @@
 The reference's per-key ``SELECT EXISTS`` probes
 (``stac/dataloader.py:54-100``) and linear catalog searches
 (``stac/generator.py:175-177,243``) are re-expressed as bulk
-anti-joins and left-anti + union upserts. At 100 TB the "existing
-keys" side is orders of magnitude smaller than the incoming side, so
-AQE turns every one of these into a broadcast join — no shuffle of
-the big side at all.
+anti-joins and left-anti + union upserts, each written as one SQL
+text (``register_sql``) except the two-level ``extent_merge``. At
+100 TB the "existing keys" side is orders of magnitude smaller than
+the incoming side, so AQE turns every one of these into a broadcast
+join — no shuffle of the big side at all.
 """
 
 from __future__ import annotations
@@ -14,19 +15,19 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from environmental_stac_generator_spark.functions.rounding import rnd
-from environmental_stac_generator_spark.registry import register
+from environmental_stac_generator_spark.registry import register, register_sql
 from environmental_stac_generator_spark.tables import load
 
-
-@register(
+register_sql(
     "skip_existing_collections",
+    # unhinted: the existing-key set is catalog-scale, not a fixed
+    # dimension — AQE runtime-sizes the anti-join
     """
     WITH existing AS (
-      SELECT o_orderkey FROM orders WHERE o_orderkey % 3 = 0
+      SELECT o_orderkey FROM {orders} WHERE o_orderkey % 3 = 0
     )
     SELECT o.o_orderstatus, count(*) AS n_new
-    FROM orders o
+    FROM {orders} o
     WHERE NOT EXISTS (SELECT 1 FROM existing e WHERE e.o_orderkey = o.o_orderkey)
     GROUP BY o.o_orderstatus
     """,
@@ -34,23 +35,16 @@ from environmental_stac_generator_spark.tables import load
     "replacing one SELECT EXISTS round-trip per key "
     "(ref stac/dataloader.py:139-144,54-73).",
 )
-def skip_existing_collections(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load(spark, sf_dir, "orders")
-    existing = o.filter(F.col("o_orderkey") % 3 == 0).select("o_orderkey")
-    # unhinted: the existing-key set is catalog-scale, not a fixed
-    # dimension — AQE runtime-sizes the anti-join
-    new = o.join(existing, "o_orderkey", "left_anti")
-    return new.groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n_new"))
 
 
-@register(
+register_sql(
     "skip_existing_items",
     """
     WITH existing AS (
-      SELECT l_orderkey, l_linenumber FROM lineitem WHERE l_orderkey % 2 = 0
+      SELECT l_orderkey, l_linenumber FROM {lineitem} WHERE l_orderkey % 2 = 0
     )
     SELECT li.l_returnflag, count(*) AS n_new
-    FROM lineitem li
+    FROM {lineitem} li
     WHERE NOT EXISTS (
       SELECT 1 FROM existing e
       WHERE e.l_orderkey = li.l_orderkey AND e.l_linenumber = li.l_linenumber
@@ -60,23 +54,16 @@ def skip_existing_collections(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="J5 skip-existing items: composite-key (id, collection) "
     "left-anti join (ref stac/dataloader.py:146-154,75-100).",
 )
-def skip_existing_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    existing = li.filter(F.col("l_orderkey") % 2 == 0).select(
-        "l_orderkey", "l_linenumber"
-    )
-    new = li.join(existing, ["l_orderkey", "l_linenumber"], "left_anti")
-    return new.groupBy("l_returnflag").agg(F.count(F.lit(1)).alias("n_new"))
 
 
-@register(
+register_sql(
     "get_or_create_collections",
     """
     WITH existing AS (
-      SELECT c_custkey AS id, c_name AS title FROM customer WHERE c_custkey % 2 = 0
+      SELECT c_custkey AS id, c_name AS title FROM {customer} WHERE c_custkey % 2 = 0
     ),
     incoming AS (
-      SELECT c_custkey AS id, c_name AS title FROM customer
+      SELECT c_custkey AS id, c_name AS title FROM {customer}
       WHERE c_mktsegment = 'BUILDING'
     )
     SELECT id, title, 'existing' AS origin FROM existing
@@ -89,29 +76,17 @@ def skip_existing_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     "unionByName — the idempotent catalog upsert "
     "(ref stac/generator.py:144-209,211-262).",
 )
-def get_or_create_collections(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load(spark, sf_dir, "customer")
-    existing = c.filter(F.col("c_custkey") % 2 == 0).select(
-        F.col("c_custkey").alias("id"), F.col("c_name").alias("title")
-    )
-    incoming = c.filter(F.col("c_mktsegment") == "BUILDING").select(
-        F.col("c_custkey").alias("id"), F.col("c_name").alias("title")
-    )
-    created = incoming.join(existing.select("id"), "id", "left_anti")
-    return existing.withColumn("origin", F.lit("existing")).unionByName(
-        created.withColumn("origin", F.lit("created"))
-    )
 
 
-@register(
+register_sql(
     "upsert_merge",
     """
     WITH base AS (
-      SELECT c_custkey, c_nationkey, c_acctbal FROM customer
+      SELECT c_custkey, c_nationkey, c_acctbal FROM {customer}
     ),
     updates AS (
       SELECT c_custkey, c_nationkey, c_acctbal + 100 AS c_acctbal
-      FROM customer WHERE c_custkey % 5 = 0
+      FROM {customer} WHERE c_custkey % 5 = 0
     ),
     merged AS (
       SELECT * FROM updates
@@ -119,7 +94,7 @@ def get_or_create_collections(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT b.* FROM base b
       WHERE NOT EXISTS (SELECT 1 FROM updates u WHERE u.c_custkey = b.c_custkey)
     )
-    SELECT c_nationkey, floor((CAST(sum(c_acctbal) AS DOUBLE)) * 100.0 + 0.5) / 100.0 AS total_bal,
+    SELECT c_nationkey, floor((CAST(sum(c_acctbal) AS DOUBLE)) * 1e2 + 0.5) / 1e2 AS total_bal,
            count(*) AS n
     FROM merged GROUP BY c_nationkey
     """,
@@ -127,18 +102,6 @@ def get_or_create_collections(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the relational form of INSERT..ON CONFLICT DO UPDATE "
     "(ref stac/dataloader.py:171,174-189).",
 )
-def upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load(spark, sf_dir, "customer")
-    base = c.select("c_custkey", "c_nationkey", "c_acctbal")
-    updates = c.filter(F.col("c_custkey") % 5 == 0).select(
-        "c_custkey", "c_nationkey", (F.col("c_acctbal") + 100).alias("c_acctbal")
-    )
-    kept = base.join(updates.select("c_custkey"), "c_custkey", "left_anti")
-    merged = updates.unionByName(kept)
-    return merged.groupBy("c_nationkey").agg(
-        rnd(F.sum("c_acctbal"), 2).alias("total_bal"),
-        F.count(F.lit(1)).alias("n"),
-    )
 
 
 @register(
@@ -184,44 +147,32 @@ def extent_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "star_join_enrich",
     """
-    SELECT r.r_name AS region_name, n.n_name AS nation_name,
-           floor((CAST(sum(c.c_acctbal) AS DOUBLE)) * 100.0 + 0.5) / 100.0 AS total_bal,
+    SELECT /*+ BROADCAST(n, r) */
+           r.r_name AS region_name, n.n_name AS nation_name,
+           floor((CAST(sum(c.c_acctbal) AS DOUBLE)) * 1e2 + 0.5) / 1e2 AS total_bal,
            count(*) AS n_customers
-    FROM customer c
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    JOIN region r ON n.n_regionkey = r.r_regionkey
+    FROM {customer} c
+    JOIN {nation} n ON c.c_nationkey = n.n_nationkey
+    JOIN {region} r ON n.n_regionkey = r.r_regionkey
     GROUP BY r.r_name, n.n_name
     """,
     doc="J3 collection lookup generalized: fact-to-dimension lookup "
     "joins, broadcast on the small side (ref stac/generator.py:333-346).",
 )
-def star_join_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load(spark, sf_dir, "customer")
-    n = load(spark, sf_dir, "nation")
-    r = load(spark, sf_dir, "region")
-    return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy(F.col("r_name").alias("region_name"), F.col("n_name").alias("nation_name"))
-        .agg(
-            rnd(F.sum("c_acctbal"), 2).alias("total_bal"),
-            F.count(F.lit(1)).alias("n_customers"),
-        )
-    )
 
 
-@register(
+register_sql(
     "orders_lineitem_join",
     """
     SELECT o.o_orderpriority,
-           floor((CAST(sum(l.l_extendedprice * (1 - l.l_discount)) AS DOUBLE)) * 100.0 + 0.5) / 100.0
+           floor((CAST(sum(l.l_extendedprice * (1 - l.l_discount)) AS DOUBLE)) * 1e2 + 0.5) / 1e2
              AS revenue,
            count(*) AS n_lines
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
+    FROM {lineitem} l
+    JOIN {orders} o ON l.l_orderkey = o.o_orderkey
     WHERE o.o_orderstatus = 'F'
     GROUP BY o.o_orderpriority
     """,
@@ -229,14 +180,3 @@ def star_join_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the join; the skeleton of the reference's item↔asset assembly at "
     "scale (ref stac/generator.py:736-751).",
 )
-def orders_lineitem_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("o_orderpriority")
-        .agg(
-            rnd(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )

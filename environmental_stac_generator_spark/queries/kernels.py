@@ -83,18 +83,43 @@ from functools import lru_cache
 
 @lru_cache(maxsize=8)
 def _fake_landing(n_files: int = 2) -> str:
-    """Cached per (n_files, session lifetime): the fake decoder seeds
-    its synthetic init dates on md5(file path), so a FRESH random
-    tempdir per invocation made repeated runs of the same kernel emit
-    different item sets (row counts drifting 3<->4 between otherwise
-    identical calls). One stable landing path per process keeps every
-    re-invocation byte-deterministic — and stops re-creating scratch
-    dirs the sweep would otherwise accumulate."""
+    """One landing dir per (n_files, process), so re-invocations stop
+    re-creating scratch dirs the sweep would otherwise accumulate."""
     d = Path(_scratch_dir("envstac_kernel_")) / "icenet_demo"
     d.mkdir(parents=True)
     for i in range(n_files):
         (d / f"fc{i}.nc").write_bytes(bytes([i]))
     return str(d)
+
+
+def _seed_path(path: str) -> str:
+    """A landing file's collection dir and name. The fake decoders
+    seed values and init dates on md5 of the path they are given; the
+    landing root is a fresh temp dir per process, so seeding on the
+    full path made the kernels return 1 or 2 items depending on the
+    process."""
+    return "/".join(path.split("/")[-2:])
+
+
+def _landing_decoder():
+    """``netcdf.fake_decoder`` seeded on :func:`_seed_path`; the
+    chunks keep the real path."""
+    from environmental_stac_generator_spark.sources import netcdf
+
+    inner = netcdf.fake_decoder()
+
+    def decode(path: str, content: bytes):
+        for chunk in inner(_seed_path(path), content):
+            yield chunk.assign(path=path)
+
+    return decode
+
+
+def _landing_meta_decoder(path: str, content: bytes | None = None) -> dict:
+    """``netcdf.fake_meta_decoder`` seeded on :func:`_seed_path`."""
+    from environmental_stac_generator_spark.sources import netcdf
+
+    return {**netcdf.fake_meta_decoder(_seed_path(path), content), "path": path}
 
 
 @register(
@@ -107,7 +132,7 @@ def _fake_landing(n_files: int = 2) -> str:
 def netcdf_scan_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     from environmental_stac_generator_spark.sources import netcdf
 
-    return netcdf.scan_netcdf(spark, _fake_landing(), decoder=netcdf.fake_decoder())
+    return netcdf.scan_netcdf(spark, _fake_landing(), decoder=_landing_decoder())
 
 
 @register(
@@ -120,7 +145,7 @@ def netcdf_metadata_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from environmental_stac_generator_spark.sources import netcdf
 
     return netcdf.scan_netcdf_metadata(
-        spark, _fake_landing(), meta_decoder=netcdf.fake_meta_decoder
+        spark, _fake_landing(), meta_decoder=_landing_meta_decoder
     )
 
 
@@ -136,7 +161,7 @@ def cog_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from environmental_stac_generator_spark.sources import netcdf
 
     grids = netcdf.scan_netcdf_grids(
-        spark, _fake_landing(1), decoder=netcdf.fake_decoder()
+        spark, _fake_landing(1), decoder=_landing_decoder()
     )
     out = _scratch_dir("envstac_cogs_")
     return raster.encode_cogs(grids, out).drop("path")  # path is tmp-random
@@ -153,7 +178,7 @@ def netcdf_slice_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     from environmental_stac_generator_spark.sources import netcdf
 
     grids = netcdf.scan_netcdf_grids(
-        spark, _fake_landing(1), decoder=netcdf.fake_decoder()
+        spark, _fake_landing(1), decoder=_landing_decoder()
     )
     out = _scratch_dir("envstac_nc_")
     return raster.write_netcdf_slices(grids, out).drop("path")
@@ -179,7 +204,7 @@ def _assemble_catalog_frames(spark: SparkSession) -> dict[str, DataFrame]:
     from environmental_stac_generator_spark.plans import stac_catalog as sc
     from environmental_stac_generator_spark.sources import netcdf
 
-    long_df = netcdf.scan_netcdf(spark, _fake_landing(), decoder=netcdf.fake_decoder())
+    long_df = netcdf.scan_netcdf(spark, _fake_landing(), decoder=_landing_decoder())
     return sc.build_catalog(fc.slab_summary(long_df))
 
 

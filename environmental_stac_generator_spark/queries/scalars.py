@@ -1,8 +1,11 @@
 """Scalar functions & predicates (SURVEY §2.3 P3–P8, C1; §2.7 F1–F17).
 
-Every kernel here is pure built-in column expressions — no Python
-UDFs — so the whole map stage stays inside whole-stage codegen and
-scales linearly with input bytes at 100 TB.
+Every kernel here is pure built-in expressions — no Python UDFs —
+so the whole map stage stays inside whole-stage codegen and scales
+linearly with input bytes at 100 TB. The per-row classifiers and
+string kernels are single SQL texts (``register_sql``); the
+frequency parser, datetime suite and JSON extractors keep DataFrame
+bodies that share column helpers with the engine.
 """
 
 from __future__ import annotations
@@ -16,8 +19,7 @@ from environmental_stac_generator_spark.functions.frequency import (
     freq_value,
 )
 from environmental_stac_generator_spark.functions.rounding import rnd
-from environmental_stac_generator_spark.plans.config_guard import config_diff
-from environmental_stac_generator_spark.registry import register
+from environmental_stac_generator_spark.registry import register, register_sql
 from environmental_stac_generator_spark.tables import load
 
 
@@ -70,14 +72,14 @@ def freq_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "hemisphere",
     """
     WITH src AS (
       SELECT l_orderkey, l_linenumber,
              CASE WHEN l_orderkey % 50 = 0 THEN NULL
                   ELSE CAST(l_partkey % 181 AS DOUBLE) - 90 END AS lat_min
-      FROM lineitem
+      FROM {lineitem}
     )
     SELECT CASE WHEN lat_min IS NULL THEN ''
                 WHEN lat_min BETWEEN 0 AND 90 THEN 'north'
@@ -89,33 +91,20 @@ def freq_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="P7 hemisphere classification: [0,90]->north, [-90,0)->south, "
     "missing->'' (ref utils.py:47-82).",
 )
-def hemisphere(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    lat = F.when(F.col("l_orderkey") % 50 == 0, None).otherwise(
-        (F.col("l_partkey") % 181).cast("double") - 90
-    )
-    src = li.select(lat.alias("lat_min"))
-    hemi = (
-        F.when(F.col("lat_min").isNull(), "")
-        .when(F.col("lat_min").between(0, 90), "north")
-        .when((F.col("lat_min") >= -90) & (F.col("lat_min") < 0), "south")
-        .otherwise("invalid")
-    )
-    return src.groupBy(hemi.alias("hemisphere")).agg(F.count(F.lit(1)).alias("n"))
 
 
-@register(
+register_sql(
     "unit_rescale",
     """
     WITH src AS (
       SELECT p_partkey, p_retailprice AS coord,
              CASE CAST(p_partkey % 3 AS INT)
                WHEN 0 THEN 'km' WHEN 1 THEN '1000 meter' ELSE 'm' END AS units
-      FROM part
+      FROM {part}
     )
     SELECT units,
            floor((CAST(sum(CASE WHEN units IN ('km', '1000 meter')
-                          THEN coord * 1000 ELSE coord END) AS DOUBLE)) * 100.0 + 0.5) / 100.0
+                          THEN coord * 1000 ELSE coord END) AS DOUBLE)) * 1e2 + 0.5) / 1e2
              AS total_metres,
            count(*) AS n
     FROM src GROUP BY units
@@ -123,21 +112,6 @@ def hemisphere(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="P8/F16 unit normalization: km / '1000 meter' coords x1000 to "
     "metres (ref stac/generator.py:533-553).",
 )
-def unit_rescale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load(spark, sf_dir, "part")
-    units = (
-        F.when(F.col("p_partkey") % 3 == 0, "km")
-        .when(F.col("p_partkey") % 3 == 1, "1000 meter")
-        .otherwise("m")
-    )
-    src = p.select(F.col("p_retailprice").alias("coord"), units.alias("units"))
-    metres = F.when(
-        F.col("units").isin("km", "1000 meter"), F.col("coord") * 1000
-    ).otherwise(F.col("coord"))
-    return src.groupBy("units").agg(
-        rnd(F.sum(metres), 2).alias("total_metres"),
-        F.count(F.lit(1)).alias("n"),
-    )
 
 
 DATETIME_SCALARS_SQL = """
@@ -192,30 +166,22 @@ def date_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "title_string",
+    # replace() runs over the WHOLE capitalized string: capitalize()
+    # leaves a leading '_' untouched and the reference's replace()
+    # afterwards turns it into a space (same fix as
+    # plans.stac_catalog.title_case)
     """
     SELECT r_regionkey,
            replace(replace(upper(substr(lower(r_name), 1, 1)) ||
              substr(lower(r_name), 2), '_', ' '), '-', ' ') ||
              ' collection' AS title
-    FROM region
+    FROM {region}
     """,
     doc="F6 title derivation: name.capitalize() + '_'/'-'->' ' + "
     "' collection' (ref stac/generator.py:654).",
 )
-def title_string(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = load(spark, sf_dir, "region")
-    low = F.lower(F.col("r_name"))
-    # translate runs over the WHOLE capitalized string: capitalize()
-    # leaves a leading '_' untouched and the reference's replace()
-    # afterwards turns it into a space (same fix as
-    # plans.stac_catalog.title_case)
-    capitalized = F.concat(
-        F.upper(F.substring(low, 1, 1)), F.substring(low, 2, 1 << 30)
-    )
-    title = F.concat(F.translate(capitalized, "_-", "  "), F.lit(" collection"))
-    return r.select("r_regionkey", title.alias("title"))
 
 
 @register(
@@ -268,29 +234,22 @@ def href_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "md5_multihash",
     """
     SELECT doc_id,
            'd50110' || md5(text) AS multihash,
-           length(text) AS n_bytes
-    FROM documents
+           CAST(length(text) AS BIGINT) AS n_bytes
+    FROM {documents}
     """,
     doc="F9/F10 MD5 multihash: varint fn code (0xd5 -> bytes d5 01, "
     "high bit set) + 0x10 length + hex digest — the exact encoding "
     "multihash.digest(data, 'md5') emits; block-wise and whole-file "
     "digests are identical (ref stac/utils.py:17-56).",
 )
-def md5_multihash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.concat(F.lit("d50110"), F.md5(F.col("text").cast("binary"))).alias("multihash"),
-        F.length("text").cast("long").alias("n_bytes"),
-    )
 
 
-@register(
+register_sql(
     "mime_guess",
     """
     WITH files AS (
@@ -298,7 +257,7 @@ def md5_multihash(spark: SparkSession, sf_dir: str) -> DataFrame:
              CASE CAST(doc_id % 5 AS INT)
                WHEN 0 THEN '.tif' WHEN 1 THEN '.jpg' WHEN 2 THEN '.nc'
                WHEN 3 THEN '.json' ELSE '.bin' END AS ext
-      FROM documents
+      FROM {documents}
     )
     SELECT ext,
            CASE ext
@@ -312,43 +271,17 @@ def md5_multihash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="F11 MIME type lookup by extension (ref stac/utils.py:90-93).",
 )
-def mime_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    ext = (
-        F.when(F.col("doc_id") % 5 == 0, ".tif")
-        .when(F.col("doc_id") % 5 == 1, ".jpg")
-        .when(F.col("doc_id") % 5 == 2, ".nc")
-        .when(F.col("doc_id") % 5 == 3, ".json")
-        .otherwise(".bin")
-    )
-    media = (
-        F.when(F.col("ext") == ".tif", "image/tiff; application=geotiff")
-        .when(F.col("ext") == ".jpg", "image/jpeg")
-        .when(F.col("ext") == ".nc", "application/netcdf")
-        .when(F.col("ext") == ".json", "application/json")
-        .otherwise("application/octet-stream")
-    )
-    return (
-        d.select(ext.alias("ext"))
-        .groupBy("ext", media.alias("media_type"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
 
 
-@register(
+register_sql(
     "floor_2dp",
     """
     SELECT event_id, floor(value * 100) / 100 AS value_floored
-    FROM events
+    FROM {events}
     """,
     doc="F15 2dp floor truncation: math.floor(x*100)/100 "
     "(ref utils.py:250).",
 )
-def floor_2dp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    return ev.select(
-        "event_id", (F.floor(F.col("value") * 100) / 100).alias("value_floored")
-    )
 
 
 # Merged per-row datetime/string scalar suite (F2 + F3 + F7): one
@@ -419,7 +352,7 @@ def json_attr_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "coord_coalesce",
     """
     WITH src AS (
@@ -427,7 +360,7 @@ def json_attr_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
              CASE WHEN l_linenumber % 2 = 0 THEN NULL ELSE l_quantity END AS xc,
              CASE WHEN l_linenumber % 3 = 0 THEN NULL ELSE l_quantity * 2 END AS x,
              l_quantity * 4 AS lon
-      FROM lineitem
+      FROM {lineitem}
     )
     SELECT l_orderkey, l_linenumber,
            coalesce(xc, x, lon) AS coord_x
@@ -436,37 +369,19 @@ def json_attr_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="P3 coordinate-name resolution: first present among candidate "
     "columns xc|x|lon (ref utils.py:17-31, stac/generator.py:487-496).",
 )
-def coord_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    src = li.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.when(F.col("l_linenumber") % 2 == 0, None)
-        .otherwise(F.col("l_quantity"))
-        .alias("xc"),
-        F.when(F.col("l_linenumber") % 3 == 0, None)
-        .otherwise(F.col("l_quantity") * 2)
-        .alias("x"),
-        (F.col("l_quantity") * 4).alias("lon"),
-    )
-    return src.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.coalesce("xc", "x", "lon").alias("coord_x"),
-    )
 
 
-@register(
+register_sql(
     "config_guard",
     """
     WITH stored AS (
-      SELECT r_regionkey AS collection, r_name AS forecast_frequency FROM region
+      SELECT r_regionkey AS collection, r_name AS forecast_frequency FROM {region}
     ),
     current AS (
       SELECT r_regionkey AS collection,
              CASE WHEN r_regionkey = 0 THEN 'CHANGED' ELSE r_name END
                AS forecast_frequency
-      FROM region WHERE r_regionkey <> 1
+      FROM {region} WHERE r_regionkey <> 1
     ),
     stored_scoped AS (
       SELECT * FROM stored
@@ -488,26 +403,6 @@ def coord_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     "and brand-new collections are allowed. Drift on a shared "
     "collection (key 0) still surfaces as added+removed rows.",
 )
-def config_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = load(spark, sf_dir, "region")
-    stored = r.select(
-        F.col("r_regionkey").alias("collection"),
-        F.col("r_name").alias("forecast_frequency"),
-    )
-    current = r.filter(F.col("r_regionkey") != 1).select(
-        F.col("r_regionkey").alias("collection"),
-        F.when(F.col("r_regionkey") == 0, "CHANGED")
-        .otherwise(F.col("r_name"))
-        .alias("forecast_frequency"),
-    )
-    # Reference semantics: diff is scoped to the collections this run
-    # touches — stored-only entries are other pipelines' business.
-    stored_scoped = stored.join(
-        F.broadcast(current.select("collection")), "collection", "left_semi"
-    )
-    return config_diff(stored_scoped, current).select(
-        "drift", "collection", "forecast_frequency"
-    )
 
 
 @register(

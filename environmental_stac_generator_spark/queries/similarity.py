@@ -355,6 +355,8 @@ def _id_range_rows(e: DataFrame, hi: int, lo: int | None = None) -> list:
     unchanged."""
     import os as _os
 
+    import pyarrow
+
     path = getattr(e, "_envstac_parquet", None)
     rows = None
     if path is not None:
@@ -377,7 +379,7 @@ def _id_range_rows(e: DataFrame, hi: int, lo: int | None = None) -> list:
                         tb["vec_id"].to_pylist(), tb["embedding"].to_pylist()
                     )
                 ]
-        except Exception:
+        except (OSError, pyarrow.ArrowException):
             rows = None
     if rows is None:
         cond = F.col("vec_id") < hi
@@ -1384,9 +1386,10 @@ def _init_cents_from_parquet(sf_dir: str):
     parquet predicate pushdown — 8 rows through the footer + one row
     group, no Spark job. float32 → Python float is exact, so the
     centroid literals are bit-identical to a Spark collect."""
-    try:
-        import pyarrow.dataset as ds
+    import pyarrow
+    import pyarrow.dataset as ds
 
+    try:
         tb = ds.dataset(f"{sf_dir}/embeddings.parquet").to_table(
             filter=ds.field("vec_id") < K_CLUSTERS,
             columns=["vec_id", "embedding"],
@@ -1403,7 +1406,7 @@ def _init_cents_from_parquet(sf_dir: str):
                 tb["vec_id"].to_pylist(), tb["embedding"].to_pylist()
             )
         )
-    except Exception:
+    except (OSError, pyarrow.ArrowException):
         return None
 
 
@@ -1582,7 +1585,7 @@ def semantic_pairs_of(
     exact K-row sizes aggregate+collect and the assignment checkpoint
     (whose only multi-consumer was the big/small split) are skipped
     and ALL members feed the pair kernel as a single-consumer
-    pipeline. ``"auto"`` derives the bound from its own exact count
+    pipeline. ``"auto"`` tightens the bound to its own exact count
     for free. Unknown bounds (or ``force_scale_plans``) keep the full
     skew-safe routing — the 100 TB posture is unchanged.
     """
@@ -1595,8 +1598,9 @@ def semantic_pairs_of(
 
     if n_clusters == "auto":
         n = max(e.count(), 0)
-        if bound_rows is None:
-            bound_rows = n  # the count IS an exact row bound
+        # the count IS an exact row bound, and tighter than any
+        # looser bound the caller passed
+        bound_rows = n if bound_rows is None else min(bound_rows, n)
         k = max(K_CLUSTERS, math.isqrt(n))
     else:
         k = int(n_clusters) if n_clusters else K_CLUSTERS

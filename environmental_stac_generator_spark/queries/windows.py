@@ -4,7 +4,9 @@ The reference's implicit orderings (time loop, leadtime positional
 index, first-thumbnail-wins) become explicit deterministic window
 functions — ``row_number`` over a total order — so results are stable
 under any partitioning, which the reference's "first wins" logic is
-not (SURVEY §7 hard-point g).
+not (SURVEY §7 hard-point g). The distinct guards, the time-slice
+selection and the band index are single SQL texts
+(``register_sql``).
 """
 
 from __future__ import annotations
@@ -13,7 +15,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from environmental_stac_generator_spark.functions.rounding import rnd, sql_rnd
-from environmental_stac_generator_spark.registry import register
+from environmental_stac_generator_spark.registry import register, register_sql
 from environmental_stac_generator_spark.tables import load
 
 
@@ -76,78 +78,53 @@ def first_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "distinct_keys",
     """
-    SELECT DISTINCT event_type, user_id % 10 AS user_bucket FROM events
+    SELECT DISTINCT event_type, user_id % 10 AS user_bucket FROM {events}
     """,
     doc="W4 distinct keys guard (ref: uniqueness by construction of "
     "get-or-create ids, stac/generator.py:144-262).",
 )
-def distinct_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    return ev.select(
-        "event_type", (F.col("user_id") % 10).alias("user_bucket")
-    ).distinct()
 
 
-@register(
+register_sql(
     "dedupe_guard",
     """
     SELECT count(*) AS n_unique FROM (
-      SELECT DISTINCT l_orderkey, l_linenumber FROM lineitem
+      SELECT DISTINCT l_orderkey, l_linenumber FROM {lineitem}
     )
     """,
     doc="W4 dropDuplicates on the composite item key "
     "(collection_id, item_id).",
 )
-def dedupe_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    return (
-        li.select("l_orderkey", "l_linenumber")
-        .dropDuplicates(["l_orderkey", "l_linenumber"])
-        .agg(F.count(F.lit(1)).alias("n_unique"))
-    )
 
 
-@register(
+register_sql(
     "time_slice_select",
+    # the min date is a scalar subquery inside the same plan (a
+    # map-side partial min), not an eager .first() action
     """
     SELECT o_orderkey, o_custkey, o_orderstatus
-    FROM orders
-    WHERE o_orderdate = (SELECT min(o_orderdate) FROM orders)
+    FROM {orders}
+    WHERE o_orderdate = (SELECT min(o_orderdate) FROM {orders})
     """,
     doc="P4 time equality selection: ds.sel(time=t) as a pushed-down "
     "equality filter (ref stac/generator.py:665).",
 )
-def time_slice_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Lazy single-plan form: the min-date scalar is a broadcast join
-    # against a 1-row aggregate, not an eager .first() action — one
-    # job, and at scale the aggregate side is a map-side partial min.
-    o = load(spark, sf_dir, "orders")
-    min_date = o.agg(F.min("o_orderdate").alias("_min_date"))
-    return (
-        o.join(F.broadcast(min_date), o.o_orderdate == min_date._min_date)
-        .select("o_orderkey", "o_custkey", "o_orderstatus")
-    )
 
 
-@register(
+register_sql(
     "band_index",
     """
     SELECT o_orderpriority, o_orderstatus,
            row_number() OVER (PARTITION BY o_orderpriority
                               ORDER BY o_orderstatus) AS bidx
-    FROM (SELECT DISTINCT o_orderpriority, o_orderstatus FROM orders)
+    FROM (SELECT DISTINCT o_orderpriority, o_orderstatus FROM {orders})
     """,
     doc="N2/W1 1-based band index: enumerate bands (variables) per "
     "group ordered by name (ref stac/generator.py:879-899 bidx).",
 )
-def band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load(spark, sf_dir, "orders")
-    bands = o.select("o_orderpriority", "o_orderstatus").distinct()
-    w = Window.partitionBy("o_orderpriority").orderBy("o_orderstatus")
-    return bands.withColumn("bidx", F.row_number().over(w))
 
 
 # ---- Event-time windows (T-family batch twins) -----------------------

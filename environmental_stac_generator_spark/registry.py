@@ -2,9 +2,23 @@
 
 Every operator from SURVEY.md §2 that is SQL-expressible registers a
 ``QuerySpec`` here: a Spark callable ``(spark, sf_dir) -> DataFrame``
-plus an equivalent DuckDB oracle SQL string. The driver runs both at
-sf=0.01 and compares row count + schema + order-insensitive value
-hash, so every registered query:
+plus an equivalent DuckDB oracle SQL string. Entries come in two
+kinds:
+
+- **SQL-defined** (:func:`register_sql`): a plain relational query
+  has ONE text, which names its tables as ``{lineitem}``-style
+  placeholders. Spark runs that text through ``spark.sql`` with each
+  placeholder bound to its ``tables.load`` frame; the oracle is the
+  same text with bare table names. The DuckDB check is then a
+  two-engine test of one text, not a comparison with an independent
+  twin (COVERAGE.md lists these entries).
+- **body plus oracle** (:func:`register`): a DataFrame body for
+  queries where Spark does more than the SQL says — kernels,
+  salting, bucketed range joins, footer/fan-out gates, checkpoints —
+  next to an oracle SQL that states the result independently.
+
+The driver runs both sides at sf=0.01 and compares row count +
+schema + order-insensitive value hash, so every registered query:
 
 - aliases every computed column identically on both sides,
 - renders timestamps as ISO strings (removes tz-representation
@@ -15,10 +29,14 @@ hash, so every registered query:
 
 from __future__ import annotations
 
+import string
+import sys
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from environmental_stac_generator_spark.tables import load
 
 
 @dataclass(frozen=True)
@@ -29,6 +47,8 @@ class QuerySpec:
 
 
 REGISTRY: dict[str, QuerySpec] = {}
+# names registered through register_sql (one text, two engines)
+SQL_DEFINED: set[str] = set()
 
 
 def register(name: str, sql: str | None, doc: str = ""):
@@ -41,6 +61,27 @@ def register(name: str, sql: str | None, doc: str = ""):
         return fn
 
     return deco
+
+
+def register_sql(name: str, text: str, doc: str) -> None:
+    """Register a query whose single definition is ``text``.
+
+    Tables appear in ``text`` as ``{table}`` placeholders (literal
+    braces are written ``{{``/``}}``). Spark binds each placeholder
+    to its :func:`tables.load` frame through ``spark.sql(text,
+    **frames)``, whose temporary views are dropped before it returns;
+    the oracle SQL is the text rendered with bare table names."""
+    tables = sorted({f for _, f, _, _ in string.Formatter().parse(text) if f})
+
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return spark.sql(text, **{t: load(spark, sf_dir, t) for t in tables})
+
+    # the defining query module, as for a decorated body: callers
+    # group queries by ``spec.fn.__module__``
+    fn.__module__ = sys._getframe(1).f_globals["__name__"]
+    fn.__name__ = fn.__qualname__ = name
+    register(name, text.format(**{t: t for t in tables}), doc)(fn)
+    SQL_DEFINED.add(name)
 
 
 def load_full_registry() -> dict[str, QuerySpec]:

@@ -95,12 +95,13 @@ def _scan_units(sf_dir: str, name: str) -> tuple[int, int] | None:
         return None
     key = (path, st.st_mtime_ns, st.st_size)
     if key not in _FAN_STATS:
-        try:
-            import pyarrow.parquet as pq
+        import pyarrow
+        import pyarrow.parquet as pq
 
+        try:
             meta = pq.read_metadata(path)
             _FAN_STATS[key] = (meta.num_row_groups, st.st_size)
-        except Exception:
+        except (OSError, pyarrow.ArrowException):
             _FAN_STATS[key] = None
     return _FAN_STATS[key]
 
@@ -213,11 +214,12 @@ def table_rows(sf_dir: str, name: str) -> int | None:
     footer-only (no data pages, no Spark job); ``None`` when the file
     is missing or unreadable, so callers degrade to the stats-less
     (scale-safe) plan."""
-    try:
-        import pyarrow.parquet as pq
+    import pyarrow
+    import pyarrow.parquet as pq
 
+    try:
         return pq.read_metadata(f"{sf_dir}/{name}.parquet").num_rows
-    except Exception:
+    except (OSError, pyarrow.ArrowException):
         return None
 
 

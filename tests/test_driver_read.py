@@ -12,8 +12,14 @@ the Spark path.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+from pathlib import Path
 
+import pyarrow.dataset
+import pyarrow.parquet
+import pyspark.sql.functions as F
+import pytest
+
+from environmental_stac_generator_spark import tables
 from environmental_stac_generator_spark.queries import similarity as S
 from environmental_stac_generator_spark.tables import load
 
@@ -73,3 +79,53 @@ def test_oversized_file_falls_back(spark, sf_dir, monkeypatch):
     e = load(spark, sf_dir, "embeddings")
     rows = S._id_range_rows(e, S.N_CENTROIDS)
     assert len(rows) == S.N_CENTROIDS
+
+
+# The four parquet footer reads that degrade to the Spark or
+# stats-less path. Each takes (spark, dir holding embeddings.parquet).
+FOOTER_READS = {
+    "scan_units": lambda spark, d: tables._scan_units(d, "embeddings"),
+    "table_rows": lambda spark, d: tables.table_rows(d, "embeddings"),
+    "init_cents": lambda spark, d: S._init_cents_from_parquet(d),
+    "id_range_rows": lambda spark, d: S._id_range_rows(
+        load(spark, d, "embeddings"), S.N_CENTROIDS
+    ),
+}
+
+
+def _copy(sf_dir: str, tmp_path: Path, truncate: bool) -> str:
+    """embeddings.parquet copied to a fresh dir (fresh footer-cache
+    key); ``truncate`` cuts the copy in half, footer included."""
+    data = (Path(sf_dir) / "embeddings.parquet").read_bytes()
+    d = tmp_path / ("cut" if truncate else "whole")
+    d.mkdir()
+    (d / "embeddings.parquet").write_bytes(data[: len(data) // 2] if truncate else data)
+    return str(d)
+
+
+@pytest.mark.parametrize("read", ["scan_units", "table_rows", "init_cents"])
+def test_truncated_file_degrades_to_none(spark, sf_dir, tmp_path, read):
+    assert FOOTER_READS[read](spark, _copy(sf_dir, tmp_path, truncate=True)) is None
+
+
+def test_truncated_stamped_file_falls_back_to_spark(spark, sf_dir, tmp_path):
+    e = load(spark, sf_dir, "embeddings")
+    e._envstac_parquet = f"{_copy(sf_dir, tmp_path, truncate=True)}/embeddings.parquet"
+    rows = S._id_range_rows(e, S.N_CENTROIDS)  # footer read fails -> collect
+    assert [int(r.vec_id) for r in rows] == list(range(S.N_CENTROIDS))
+
+
+@pytest.mark.parametrize("read", sorted(FOOTER_READS))
+def test_footer_read_propagates_other_errors(spark, sf_dir, tmp_path, monkeypatch, read):
+    """Only file and Arrow errors degrade: a bug inside the read
+    (here a planted TypeError) surfaces instead of silently taking
+    the fallback plan."""
+    d = _copy(sf_dir, tmp_path, truncate=False)
+
+    def planted(*a, **k):
+        raise TypeError("planted")
+
+    monkeypatch.setattr(pyarrow.parquet, "read_metadata", planted)
+    monkeypatch.setattr(pyarrow.dataset, "dataset", planted)
+    with pytest.raises(TypeError, match="planted"):
+        FOOTER_READS[read](spark, d)

@@ -172,3 +172,20 @@ def test_semantic_pairs_gate_skips_sizes_job(spark, sf_dir):
     finally:
         tables.force_scale_plans(False)
     assert "LogicalRDD" in scale_plan  # checkpointed assignment
+
+
+def test_auto_k_loose_bound_takes_small_plan(spark, sf_dir):
+    """Auto-K counts the corpus, and that exact count tightens a
+    looser caller bound: a bound far over ``max_bucket`` on a small
+    input still takes the gated plan (no checkpoint barrier)."""
+    from environmental_stac_generator_spark.queries.similarity import (
+        semantic_pairs_of,
+    )
+
+    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    assert e.count() <= 10_000  # the default max_bucket
+    plan = (
+        semantic_pairs_of(e, n_clusters="auto", bound_rows=10**9)
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert "LogicalRDD" not in plan

@@ -261,3 +261,24 @@ def test_merge_collection_doc_malformed_temporal_is_all_or_nothing():
         "2024-01-01",
         "2024-02-01",
     ]
+
+
+def test_stac_kernel_rows_independent_of_landing_root(spark, sf_dir, tmp_path, monkeypatch):
+    """The registry's STAC kernels seed the fake decoder on each
+    file's collection dir and name, not the landing root: two roots
+    give identical rows. Seeded on the full path, a fresh temp root
+    per process made them return 1 or 2 items."""
+    from environmental_stac_generator_spark.queries import kernels
+    from environmental_stac_generator_spark.registry import load_full_registry
+
+    fn = load_full_registry()["stac_item_documents"].fn
+    out = []
+    for root in ("a", "b/deeper"):
+        d = tmp_path / root / "icenet_demo"
+        d.mkdir(parents=True)
+        for i in range(2):
+            (d / f"fc{i}.nc").write_bytes(bytes([i]))
+        monkeypatch.setattr(kernels, "_fake_landing", lambda n_files=2, d=d: str(d))
+        out.append(sorted(tuple(r) for r in fn(spark, sf_dir).collect()))
+    assert out[0] == out[1]
+    assert len(out[0]) == 2
