@@ -18,6 +18,7 @@ REPO = Path(__file__).resolve().parent
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
+from environmental_stac_generator_spark.plan_policy import scale_plans
 from environmental_stac_generator_spark.registry import load_full_registry
 from environmental_stac_generator_spark.session import (
     DEFAULT_SHUFFLE_PARTITIONS,
@@ -1661,7 +1662,7 @@ def _synthesize_uniform_embeddings_dir(src: str, factor: int) -> str:
 
 # --- natural-regime scale block (VERDICT r6 #1/#3/#5) -------------------
 # The 10x soak corpus (50k docs) sits below every stats gate, so its
-# scale plans only run under the force_scale_plans override. This
+# scale plans only run under the scale_plans() override. This
 # block synthesizes a corpus big enough that the parquet FOOTER STATS
 # flip every gate on their own (>SMALL_INPUT_ROWS documents,
 # >DRIVER_CC_PAIRS duplicate pairs), proving the thresholds are
@@ -2373,11 +2374,9 @@ def soak() -> None:
         _components_label,
         lsh_candidate_pairs,
     )
-    from environmental_stac_generator_spark.tables import force_scale_plans
 
     forced: dict[str, float] = {}
-    force_scale_plans(True)
-    try:
+    with scale_plans():
         for name, must_not in [
             ("token_budget_select", "Exchange SinglePartition"),
             ("sequence_pack", "Exchange SinglePartition"),
@@ -2410,8 +2409,6 @@ def soak() -> None:
             shape_failures.append(
                 "duplicate_clusters: forced gate still took the driver path"
             )
-    finally:
-        force_scale_plans(False)
 
     # the one-call curate chain at 10x (VERDICT r6 #2) — separate key,
     # NOT summed into `value`, so soak totals stay comparable

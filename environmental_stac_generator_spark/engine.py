@@ -56,25 +56,28 @@ class EnvStacEngine:
 
     # ---- scan stage (S1/S2/U1) ----
 
-    def _collection_crs(self, input_path: str) -> DataFrame | None:
-        """(collection, crs) from the attr-only metadata scan — the
+    def _collection_crs(self, input_path: str) -> dict[str, str | None] | None:
+        """collection → crs from the attr-only metadata scan — the
         input to WGS84 bbox reprojection and the item projection
         extension (ref ``stac/generator.py:581-584,255-260``). None
         when no metadata source exists in this environment (no
         injected meta_decoder AND no xarray): the pipeline then keeps
-        its native-coordinate bbox behavior instead of failing."""
+        its native-coordinate bbox behavior instead of failing. Collected
+        once, so catalog actions never re-read the file headers."""
         if self.meta_decoder is None:
             import importlib.util
 
             if importlib.util.find_spec("xarray") is None:
                 return None
-        return (
+        rows = (
             netcdf.scan_netcdf_metadata(
                 self.spark, input_path, meta_decoder=self.meta_decoder
             )
             .groupBy("collection")
             .agg(F.min("crs").alias("crs"))
+            .collect()
         )
+        return {r["collection"]: r["crs"] for r in rows}
 
     # ---- preprocess pipeline ----
 
@@ -116,7 +119,7 @@ class EnvStacEngine:
             ).persist()
         )
         long_df = netcdf.long_from_grids(grids)
-        crs_df = self._collection_crs(input_path)
+        crs = self._collection_crs(input_path)
         # the catalog's ONE pass over the cells: every catalog frame
         # derives from this summary's few rows (one shuffle of one row
         # per slab puts each item's slabs in one partition)
@@ -125,7 +128,7 @@ class EnvStacEngine:
         )
         catalog = sc.build_catalog(
             summary,
-            crs_by_collection=crs_df,
+            crs_by_collection=crs,
             bbox_transform=self.bbox_transform,
             license=self.license,
             leadtime_unit=unit,

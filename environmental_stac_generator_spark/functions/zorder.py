@@ -14,9 +14,6 @@ oracle-checkable.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-from pyspark.sql import Column
-
 BITS = 8  # quantization: 256 x 256 cells
 
 
@@ -51,10 +48,3 @@ def quantize_sql(col: str, lo: float, hi: float, bits: int = BITS) -> str:
         f"least({n - 1}, greatest(0, "
         f"cast(floor(({col} - {lo}) / (({hi} - {lo}) / {n})) as bigint)))"
     )
-
-
-def zorder_col(x_col: str, y_col: str, x_range: tuple[float, float], y_range: tuple[float, float]) -> Column:
-    """Morton index column for two double coordinates."""
-    xq = quantize_sql(x_col, *x_range)
-    yq = quantize_sql(y_col, *y_range)
-    return F.expr(morton_sql(xq, yq))

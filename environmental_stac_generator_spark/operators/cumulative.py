@@ -47,6 +47,8 @@ from functools import reduce
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from environmental_stac_generator_spark.plan_policy import provably_small
+
 _SAMPLE_PER_BUCKET = 20  # sampled keys per target bucket
 _SEED = 42
 
@@ -158,8 +160,6 @@ def global_running_sum(
     the bucketed multi-consuming path then stores it once (lazy
     checkpoint) — the small-path plan consumes it once and never
     materializes."""
-    from environmental_stac_generator_spark.tables import provably_small
-
     keys = _norm_order(order)
     if provably_small(input_rows, SMALL_INPUT_ROWS):
         sort_cols = [k.asc() if asc else k.desc() for k, asc in keys]

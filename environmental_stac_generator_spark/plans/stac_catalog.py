@@ -274,12 +274,13 @@ def _item_rows(cogs: DataFrame, unit: str, step: float, url: str | None) -> Data
 
 
 def _located(
-    rows: DataFrame, crs_by_collection: DataFrame | None, bbox_transform
+    rows: DataFrame, crs_by_collection: dict[str, str | None] | None, bbox_transform
 ) -> DataFrame:
     """``rows``' collection bbox as GeoJSON ``geometry`` (ref
     ``stac/generator.py:555-585``). With ``crs_by_collection``
-    (collection, crs), projected-CRS bboxes reproject to WGS84 BEFORE
-    the geometry is built, exactly like the reference's
+    (collection → crs; a collection it lacks gets a NULL crs),
+    projected-CRS bboxes reproject to WGS84 BEFORE the geometry is
+    built, exactly like the reference's
     ``proj_to_geo`` inside ``_get_bbox_and_geometry`` (``:581-584``),
     and the source CRS becomes ``crs`` (an item's ``proj:code``,
     ``:255-260``); without it the bbox stays in native coordinates
@@ -290,7 +291,11 @@ def _located(
     from environmental_stac_generator_spark.functions import geo
 
     crs = F.col("crs")
-    out = rows.join(F.broadcast(crs_by_collection), "collection", "left")
+    # a literal map, not a join: a broadcast costs a job per action
+    crs_of = F.create_map(
+        *[F.lit(x) for kv in crs_by_collection.items() for x in kv]
+    ).cast("map<string,string>")
+    out = rows.withColumn("crs", crs_of[F.col("collection")])
     # '' (missing attr) and the reference's bare '4326' spelling are
     # both "already WGS84" (ref :582 checks ["EPSG:4326", "4326"]);
     # NULL passes the kernel through. Only '' is an unknown proj:code.
@@ -367,7 +372,7 @@ def _asset_rows(owner: DataFrame) -> DataFrame:
 
 def build_catalog(
     summary: DataFrame,
-    crs_by_collection: DataFrame | None = None,
+    crs_by_collection: dict[str, str | None] | None = None,
     bbox_transform=None,
     license: str = "other",
     leadtime_unit: str = "days",

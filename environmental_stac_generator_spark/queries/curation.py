@@ -36,8 +36,13 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from environmental_stac_generator_spark.plan_policy import (
+    measured_small,
+    provably_small,
+    table_rows,
+)
 from environmental_stac_generator_spark.registry import register
-from environmental_stac_generator_spark.tables import load, table_rows
+from environmental_stac_generator_spark.tables import load
 
 # stratum -> keep percentage (a data-mixing recipe)
 SAMPLE_RATES = {"web": 25, "books": 75, "wiki": 50, "code": 100}
@@ -225,14 +230,13 @@ def token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     # small/large plan choice AND the tokenize-once materialization
     # both live inside global_running_sum (one source of truth);
     # materialize_input declares metrics expensive (it tokenizes)
-    rows = table_rows(sf_dir, "documents")
     ranked = global_running_sum(
         metrics,
         order,
         "n_tokens",
         out_col="cum_tokens",
         boundaries=bounds,
-        input_rows=rows,
+        input_rows=table_rows(sf_dir, "documents"),
         materialize_input=True,
     )
     return (
@@ -284,13 +288,12 @@ def sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents")
     metrics = d.select("doc_id", F.size(F.split("text", " ")).alias("n_tokens"))
-    rows = table_rows(sf_dir, "documents")
     placed = global_running_sum(
         metrics,
         [(F.col("doc_id"), True)],
         "n_tokens",
         out_col="cum",
-        input_rows=rows,
+        input_rows=table_rows(sf_dir, "documents"),
         materialize_input=True,
     ).withColumn("start_off", F.col("cum") - F.col("n_tokens"))
     return (
@@ -535,19 +538,14 @@ def span_dedup(
         # only corpora with measured kilo-scale viral spans pay the
         # skew-safe premium (ADVICE r4: the plan that must survive a
         # viral boilerplate span). Both paths are property-tested
-        # equal, so the gate can never change results.
-        from environmental_stac_generator_spark.tables import (
-            provably_small,
-            scale_plans_forced,
+        # equal, so the gate can never change results; under
+        # scale_plans() neither stage holds and no sampling job runs.
+        skew_safe = not (
+            provably_small(table_rows(sf_dir, "documents"), SMALL_INPUT_ROWS)
+            or measured_small(
+                lambda: span_max_group_bound(d), SPAN_WINDOW_MAX_GROUP
+            )
         )
-
-        rows = table_rows(sf_dir, "documents")
-        if provably_small(rows, SMALL_INPUT_ROWS):
-            skew_safe = False
-        elif scale_plans_forced():
-            skew_safe = True
-        else:
-            skew_safe = span_max_group_bound(d) > SPAN_WINDOW_MAX_GROUP
     toks = (
         d.select("doc_id", "source", F.split("text", " ").alias("w"))
         .filter(F.size("w") >= SPAN_W)

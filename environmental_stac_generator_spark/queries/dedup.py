@@ -20,6 +20,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from environmental_stac_generator_spark.functions.rounding import rnd
+from environmental_stac_generator_spark.plan_policy import (
+    fan_out_frame,
+    provably_small,
+    table_rows,
+)
 from environmental_stac_generator_spark.registry import register, register_sql
 from environmental_stac_generator_spark.tables import load
 
@@ -238,8 +243,8 @@ def bucket_pairs(
     ``members`` PER DISTINCT BUCKET (callers pass the source row
     count: each source row contributes at most one member row per
     bucket key). When stats PROVE it at or under ``max_bucket``
-    (:func:`tables.provably_small` — the shared CBO gate, honoring
-    ``force_scale_plans``), no bucket can be mega, so the whole
+    (:func:`plan_policy.provably_small` — the shared CBO gate, honoring
+    ``scale_plans``), no bucket can be mega, so the whole
     routing apparatus — the tracked persist, the count pass, the
     anti-join, the empty blocked-path union — is provably dead plan
     weight and the collect path runs alone as a single-consumer
@@ -251,7 +256,6 @@ def bucket_pairs(
     from environmental_stac_generator_spark.operators.skew import (
         blocked_self_pairs,
     )
-    from environmental_stac_generator_spark.tables import provably_small
 
     if provably_small(bound_rows, max_bucket):
         return (
@@ -344,8 +348,6 @@ def lsh_candidate_pairs(
     # (band, band_hash) bucket can exceed the document count — footer
     # stats let bucket_pairs drop the mega routing when that bound is
     # proven under the cap.
-    from environmental_stac_generator_spark.tables import table_rows
-
     return bucket_pairs(
         bands, ["band", "band_hash"], "doc_id", max_bucket,
         bound_rows=table_rows(sf_dir, "documents"),
@@ -726,8 +728,6 @@ def _components_label(
     # round without a second materialization job. Lazy: the count
     # below (the small-path gate) is the materializing action.
     pairs = _cut_lineage(_normalize_null_pairs(pairs), eager=False)
-    from environmental_stac_generator_spark.tables import provably_small
-
     if provably_small(pairs.count(), driver_max_pairs):
         return _components_driver(pairs), 0
     edges = pairs.select(
@@ -899,8 +899,6 @@ def _components_star(pairs: DataFrame) -> tuple[DataFrame, int]:
     "verify step costs O(candidates), never O(n^2).",
 )
 def lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from environmental_stac_generator_spark.tables import table_rows
-
     return verified_pairs_of(
         load(spark, sf_dir, "documents", fan_out=True),
         bound_rows=table_rows(sf_dir, "documents"),
@@ -936,8 +934,6 @@ def verified_pairs_of(
     # shingle-set sides as well measured SLOWER — their joins are
     # candidate-narrowed). Already-fanned scans pass through the
     # partition-count gate unchanged, as does any corpus-scale frame.
-    from environmental_stac_generator_spark.tables import fan_out_frame
-
     pairs = bucket_pairs(
         bands_of(fan_out_frame(d)), ["band", "band_hash"], "doc_id",
         max_bucket, bound_rows=bound_rows,

@@ -26,6 +26,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from environmental_stac_generator_spark.functions.rounding import rnd
+from environmental_stac_generator_spark.plan_policy import (
+    driver_readable,
+    provably_small,
+    table_rows,
+)
 from environmental_stac_generator_spark.registry import register
 from environmental_stac_generator_spark.tables import load
 
@@ -336,12 +341,6 @@ def _cluster_pair_cosines(members: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-# Driver-read gate: the footer-predicate fast path below reads at
-# most one bounded file on the driver; past this size the distributed
-# filter+collect stands (same posture as tables.FAN_OUT_MAX_BYTES).
-DRIVER_READ_MAX_BYTES = 256 * 1024 * 1024
-
-
 def _id_range_rows(e: DataFrame, hi: int, lo: int | None = None) -> list:
     """``sorted`` (vec_id, embedding) rows with ``lo <= vec_id < hi``
     (``lo=None`` → no lower bound) — the centroid/plane/codebook
@@ -351,36 +350,33 @@ def _id_range_rows(e: DataFrame, hi: int, lo: int | None = None) -> list:
     pyarrow footer-predicate read: no Spark job, and float32 → Python
     float widening is exact, so values are bit-identical to a collect
     (the `_init_cents_from_parquet` precedent). Any other frame — or
-    an oversized / unreadable file — takes the Spark collect,
-    unchanged."""
-    import os as _os
-
-    import pyarrow
-
+    a file :func:`plan_policy.driver_readable` refuses — takes the
+    Spark collect, unchanged."""
     path = getattr(e, "_envstac_parquet", None)
     rows = None
-    if path is not None:
+    if driver_readable(path):
+        import collections
+
+        import pyarrow
+        import pyarrow.dataset as ds
+
+        flt = ds.field("vec_id") < hi
+        if lo is not None:
+            flt = (ds.field("vec_id") >= lo) & flt
         try:
-            if _os.stat(path).st_size <= DRIVER_READ_MAX_BYTES:
-                import collections
-
-                import pyarrow.dataset as ds
-
-                flt = ds.field("vec_id") < hi
-                if lo is not None:
-                    flt = (ds.field("vec_id") >= lo) & flt
-                tb = ds.dataset(path).to_table(
-                    filter=flt, columns=["vec_id", "embedding"]
-                )
-                R = collections.namedtuple("R", ["vec_id", "embedding"])
-                rows = [
-                    R(i, v)
-                    for i, v in zip(
-                        tb["vec_id"].to_pylist(), tb["embedding"].to_pylist()
-                    )
-                ]
+            tb = ds.dataset(path).to_table(
+                filter=flt, columns=["vec_id", "embedding"]
+            )
         except (OSError, pyarrow.ArrowException):
-            rows = None
+            tb = None
+        if tb is not None:
+            R = collections.namedtuple("R", ["vec_id", "embedding"])
+            rows = [
+                R(i, v)
+                for i, v in zip(
+                    tb["vec_id"].to_pylist(), tb["embedding"].to_pylist()
+                )
+            ]
     if rows is None:
         cond = F.col("vec_id") < hi
         if lo is not None:
@@ -726,12 +722,7 @@ def embedding_near_dup(
     # under max_bucket the big branch is dead plan weight — the
     # grouped relation then has ONE consumer and needs no tracked
     # persist, no size split, no union. Unknown stats (or
-    # force_scale_plans) keep the full skew-safe routing.
-    from environmental_stac_generator_spark.tables import (
-        provably_small,
-        table_rows,
-    )
-
+    # scale_plans) keep the full skew-safe routing.
     if provably_small(table_rows(sf_dir, "embeddings"), max_bucket):
         pairs = (
             grouped_all.select(
@@ -1528,8 +1519,6 @@ _SEMDEDUP_SQL = f"""
 def semdedup_pairs(
     spark: SparkSession, sf_dir: str, max_bucket: int = 10_000
 ) -> DataFrame:
-    from environmental_stac_generator_spark.tables import table_rows
-
     e = load(spark, sf_dir, "embeddings", fan_out=True).select(
         "vec_id", "embedding"
     )
@@ -1586,7 +1575,7 @@ def semantic_pairs_of(
     (whose only multi-consumer was the big/small split) are skipped
     and ALL members feed the pair kernel as a single-consumer
     pipeline. ``"auto"`` tightens the bound to its own exact count
-    for free. Unknown bounds (or ``force_scale_plans``) keep the full
+    for free. Unknown bounds (or ``scale_plans``) keep the full
     skew-safe routing — the 100 TB posture is unchanged.
     """
     import math
@@ -1594,7 +1583,6 @@ def semantic_pairs_of(
     from environmental_stac_generator_spark.operators.lineage import (
         cut_lineage,
     )
-    from environmental_stac_generator_spark.tables import provably_small
 
     if n_clusters == "auto":
         n = max(e.count(), 0)
@@ -1636,7 +1624,7 @@ def semantic_pairs_of(
     # aggregate+collect AND the assignment checkpoint dead weight —
     # the final assignment then has exactly ONE consumer (the pair
     # kernel's cluster-keyed exchange) and streams through it in a
-    # single pipeline. Unknown stats / force_scale_plans keep the
+    # single pipeline. Unknown stats / scale_plans keep the
     # exact-sizes routing below.
     if provably_small(bound_rows, max_bucket):
         return _cluster_pair_cosines(members_of(assigned), threshold)

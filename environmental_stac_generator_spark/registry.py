@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import string
 import sys
+import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -68,13 +69,24 @@ def register_sql(name: str, text: str, doc: str) -> None:
 
     Tables appear in ``text`` as ``{table}`` placeholders (literal
     braces are written ``{{``/``}}``). Spark binds each placeholder
-    to its :func:`tables.load` frame through ``spark.sql(text,
-    **frames)``, whose temporary views are dropped before it returns;
-    the oracle SQL is the text rendered with bare table names."""
+    to its :func:`tables.load` frame through a uniquely named
+    temporary view, dropped again once ``spark.sql`` has analyzed the
+    text; the oracle SQL is the text rendered with bare table
+    names."""
     tables = sorted({f for _, f, _, _ in string.Formatter().parse(text) if f})
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return spark.sql(text, **{t: load(spark, sf_dir, t) for t in tables})
+        views = {t: f"_envstac_{t}_{uuid.uuid4().hex}" for t in tables}
+        for t, view in views.items():
+            load(spark, sf_dir, t).createOrReplaceTempView(view)
+        try:
+            return spark.sql(text.format(**views))
+        finally:
+            # the session catalog's name-only drop: Catalog.dropTempView
+            # (and so spark.sql(text, **frames)) also uncaches the table
+            catalog = spark._jsparkSession.sessionState().catalog()
+            for view in views.values():
+                catalog.dropTempView(view)
 
     # the defining query module, as for a decorated body: callers
     # group queries by ``spec.fn.__module__``

@@ -7,7 +7,7 @@ centroid/plane/codebook/probe fetches through a pyarrow
 footer-predicate read — no Spark job — instead of a collect. The
 fast path must be bit-identical to the collect it replaces, and any
 transformed frame (stamp lost) or oversized file must fall back to
-the Spark path.
+the Spark path (`plan_policy.driver_readable` decides).
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ import pyarrow.parquet
 import pyspark.sql.functions as F
 import pytest
 
-from environmental_stac_generator_spark import tables
+from environmental_stac_generator_spark import plan_policy
 from environmental_stac_generator_spark.queries import similarity as S
 from environmental_stac_generator_spark.tables import load
 
@@ -75,17 +75,17 @@ def test_unstamped_frame_falls_back_to_spark(spark, sf_dir):
 
 
 def test_oversized_file_falls_back(spark, sf_dir, monkeypatch):
-    monkeypatch.setattr(S, "DRIVER_READ_MAX_BYTES", 1)
+    monkeypatch.setattr(plan_policy, "SMALL_FILE_MAX_BYTES", 1)
     e = load(spark, sf_dir, "embeddings")
     rows = S._id_range_rows(e, S.N_CENTROIDS)
     assert len(rows) == S.N_CENTROIDS
 
 
-# The four parquet footer reads that degrade to the Spark or
-# stats-less path. Each takes (spark, dir holding embeddings.parquet).
+# The parquet reads that degrade to the Spark or stats-less path.
+# Each takes (spark, dir holding embeddings.parquet).
 FOOTER_READS = {
-    "scan_units": lambda spark, d: tables._scan_units(d, "embeddings"),
-    "table_rows": lambda spark, d: tables.table_rows(d, "embeddings"),
+    "footer": lambda spark, d: plan_policy.footer(f"{d}/embeddings.parquet"),
+    "table_rows": lambda spark, d: plan_policy.table_rows(d, "embeddings"),
     "init_cents": lambda spark, d: S._init_cents_from_parquet(d),
     "id_range_rows": lambda spark, d: S._id_range_rows(
         load(spark, d, "embeddings"), S.N_CENTROIDS
@@ -103,7 +103,7 @@ def _copy(sf_dir: str, tmp_path: Path, truncate: bool) -> str:
     return str(d)
 
 
-@pytest.mark.parametrize("read", ["scan_units", "table_rows", "init_cents"])
+@pytest.mark.parametrize("read", ["footer", "table_rows", "init_cents"])
 def test_truncated_file_degrades_to_none(spark, sf_dir, tmp_path, read):
     assert FOOTER_READS[read](spark, _copy(sf_dir, tmp_path, truncate=True)) is None
 

@@ -133,6 +133,13 @@ def test_save_catalog_reads_cached_summary(pinned_catalogs):
     assert jobs <= 12, f"save_catalog ran {jobs} jobs"
 
 
+def test_save_catalog_crs_source_adds_no_job(pinned_catalogs):
+    """The CRS is collected once in process: joining the lazy header
+    scan re-read every header per catalog action (11 jobs against 7)."""
+    crs, fake = pinned_catalogs["crs"][1], pinned_catalogs["fake"][1]
+    assert crs <= fake, f"{crs} jobs with a CRS source, {fake} without"
+
+
 def test_process_end_to_end(spark, inputs, tmp_path):
     eng = EnvStacEngine(
         spark,

@@ -4,11 +4,12 @@
 skew-safe mega-bucket routing (count pass + anti-join + blocked/self
 join union). When a driver-known row bound PROVES no bucket can
 exceed the cap, that routing is dead plan weight: the r16 gate drops
-it via the shared `provably_small` CBO predicate. The gate must:
+it via the shared `plan_policy.provably_small` CBO predicate. The
+gate must:
 
 - emit the IDENTICAL pair set on both sides (gated vs forced-scale);
-- keep the skew-safe plan when stats are unknown or the force flag
-  is on (the shared degradation posture);
+- keep the skew-safe plan when stats are unknown or inside
+  `scale_plans()` (the shared degradation posture);
 - actually simplify the plan when it fires (no anti-join, no union).
 """
 
@@ -16,7 +17,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from environmental_stac_generator_spark import tables
+from environmental_stac_generator_spark.plan_policy import scale_plans
 from environmental_stac_generator_spark.queries.dedup import (
     bands_of,
     bucket_pairs,
@@ -38,14 +39,13 @@ def test_gated_pairs_identical_to_scale_plan(spark, sf_dir):
         bucket_pairs(bands, ["band", "band_hash"], "doc_id", bound_rows=5_000)
     )
     try:
-        tables.force_scale_plans(True)  # forces the full routing
-        scale = _pairs(
-            bucket_pairs(
-                bands, ["band", "band_hash"], "doc_id", bound_rows=5_000
+        with scale_plans():  # forces the full routing
+            scale = _pairs(
+                bucket_pairs(
+                    bands, ["band", "band_hash"], "doc_id", bound_rows=5_000
+                )
             )
-        )
     finally:
-        tables.force_scale_plans(False)
         release_tracked()
     assert gated == scale
     assert len(gated) > 0
@@ -108,12 +108,11 @@ def test_embedding_near_dup_gate_parity(spark, sf_dir):
 
     gated = sorted(tuple(r) for r in embedding_near_dup(spark, sf_dir).collect())
     try:
-        tables.force_scale_plans(True)
-        scale = sorted(
-            tuple(r) for r in embedding_near_dup(spark, sf_dir).collect()
-        )
+        with scale_plans():
+            scale = sorted(
+                tuple(r) for r in embedding_near_dup(spark, sf_dir).collect()
+            )
     finally:
-        tables.force_scale_plans(False)
         release_tracked()
     assert gated == scale
     assert len(gated) > 0
@@ -139,10 +138,9 @@ def test_semantic_pairs_gate_identical_to_scale_plan(spark, sf_dir):
     for kw in ({"bound_rows": 5_000}, {"n_clusters": "auto"}):
         gated = rows(semantic_pairs_of(e, **kw))
         try:
-            tables.force_scale_plans(True)
-            scale = rows(semantic_pairs_of(e, **kw))
+            with scale_plans():
+                scale = rows(semantic_pairs_of(e, **kw))
         finally:
-            tables.force_scale_plans(False)
             release_tracked()
         assert gated == scale
         assert len(gated) > 0
@@ -163,14 +161,11 @@ def test_semantic_pairs_gate_skips_sizes_job(spark, sf_dir):
         ._jdf.queryExecution().optimizedPlan().toString()
     )
     assert "LogicalRDD" not in gated_plan  # no checkpoint barrier
-    try:
-        tables.force_scale_plans(True)
+    with scale_plans():
         scale_plan = (
             semantic_pairs_of(e, bound_rows=5_000)
             ._jdf.queryExecution().optimizedPlan().toString()
         )
-    finally:
-        tables.force_scale_plans(False)
     assert "LogicalRDD" in scale_plan  # checkpointed assignment
 
 

@@ -12,6 +12,8 @@ import re
 
 import pytest
 
+from environmental_stac_generator_spark.plan_policy import scale_plans
+from environmental_stac_generator_spark.queries import curation
 from environmental_stac_generator_spark.registry import (
     load_full_registry,
     load_registry,
@@ -140,17 +142,17 @@ def test_soak_join_detector_sees_final_adaptive_plan(spark):
     assert "isFinalPlan=true" in plan
 
 
-def test_forced_scale_gate_flips_every_gated_plan(spark, sf_dir):
-    """force_scale_plans() must flip ALL three stats-gated operators
+def test_forced_scale_gate_flips_every_gated_plan(spark, sf_dir, monkeypatch):
+    """scale_plans() must flip ALL three stats-gated operators
     to their scale-side plan (the soak relies on this to measure both
     gate sides): the prefix-sum queries lose their single-reducer
-    exchange, span_dedup loses its window, and components runs the
-    distributed fixpoint instead of the driver union-find."""
+    exchange, span_dedup loses its window without sampling its span
+    groups, and components runs the distributed fixpoint instead of
+    the driver union-find."""
     from environmental_stac_generator_spark.queries.dedup import (
         _components_label,
         lsh_candidate_pairs,
     )
-    from environmental_stac_generator_spark.tables import force_scale_plans
 
     small = {n: _plan(spark, sf_dir, n) for n in
              ("token_budget_select", "sequence_pack", "span_dedup")}
@@ -160,8 +162,11 @@ def test_forced_scale_gate_flips_every_gated_plan(spark, sf_dir):
     _, rounds_small = _components_label(lsh_candidate_pairs(spark, sf_dir))
     assert rounds_small == 0  # proven-small pairs take the driver path
 
-    force_scale_plans(True)
-    try:
+    def refuse(d):
+        raise AssertionError("span groups sampled inside scale_plans()")
+
+    monkeypatch.setattr(curation, "span_max_group_bound", refuse)
+    with scale_plans():
         forced = {n: _plan(spark, sf_dir, n) for n in
                   ("token_budget_select", "sequence_pack", "span_dedup")}
         assert all("Exchange SinglePartition" not in forced[n]
@@ -169,8 +174,6 @@ def test_forced_scale_gate_flips_every_gated_plan(spark, sf_dir):
         assert "Window [" not in forced["span_dedup"]
         _, rounds_forced = _components_label(lsh_candidate_pairs(spark, sf_dir))
         assert rounds_forced >= 1  # distributed fixpoint ran
-    finally:
-        force_scale_plans(False)
 
 
 def test_span_group_bound_gate(spark, sf_dir, monkeypatch):
@@ -179,9 +182,6 @@ def test_span_group_bound_gate(spark, sf_dir, monkeypatch):
     row count — a large-but-unviral corpus keeps the ~1.7x cheaper
     window plan, and only measured kilo-scale viral spans pay the
     skew-safe premium."""
-    from environmental_stac_generator_spark import tables
-    from environmental_stac_generator_spark.queries import curation
-
     # 1. the estimator separates the regimes: 400k docs sharing ONE
     # text (every window hash a 400k-doc group — past the r13
     # measured cap of 262,144) vs 20k docs of fully id-tagged
@@ -205,7 +205,7 @@ def test_span_group_bound_gate(spark, sf_dir, monkeypatch):
     # cap SPAN_WINDOW_MAX_GROUP = 262,144 — a kilo-viral 10k bound
     # now correctly KEEPS the window plan, per the measured cliff
     # sweep in SOAK r13)
-    monkeypatch.setattr(tables, "provably_small", lambda rows, thr: False)
+    monkeypatch.setattr(curation, "table_rows", lambda sf_dir, name: None)
     monkeypatch.setattr(curation, "span_max_group_bound", lambda d: 300_000)
     assert "Window [" not in _plan(spark, sf_dir, "span_dedup")
     monkeypatch.setattr(curation, "span_max_group_bound", lambda d: 10_000)

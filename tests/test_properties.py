@@ -12,12 +12,14 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from environmental_stac_generator_spark.plan_policy import provably_small, scale_plans
 from environmental_stac_generator_spark.queries.dedup import (
     A_COEF,
     B_COEF,
     MINHASH_P,
     N_HASHES,
 )
+from environmental_stac_generator_spark.tables import load
 
 
 @st.composite
@@ -303,8 +305,6 @@ def test_kmeans_matches_numpy_lloyds(spark, sf_dir):
         KMEANS_ITERS,
         kmeans_clusters,
     )
-    from environmental_stac_generator_spark.tables import load
-
     rows = (
         load(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
@@ -434,19 +434,13 @@ def test_tracked_pair_caches_are_releasable(spark, sf_dir):
     from environmental_stac_generator_spark.queries.dedup import (
         lsh_candidate_pairs,
     )
-
-    from environmental_stac_generator_spark import tables
-
     release_tracked()  # clean slate
     # force the skew-safe routing: the r16 provably-no-mega gate
     # otherwise drops the persist entirely on this small corpus (the
     # releasability invariant under test applies to the path that
     # persists)
-    tables.force_scale_plans(True)
-    try:
+    with scale_plans():
         assert lsh_candidate_pairs(spark, sf_dir).count() > 0
-    finally:
-        tables.force_scale_plans(False)
     assert _tracked_list(), "bucket_pairs must register its persist"
     tracked = list(_tracked_list())
     release_tracked()
@@ -555,8 +549,6 @@ def test_numpy_assignment_kernel_equals_hof_kernel(spark, sf_dir):
     from environmental_stac_generator_spark.queries.similarity import (
         _lloyd_assign,
     )
-    from environmental_stac_generator_spark.tables import load
-
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     out = {}
     for kernel in ("auto", "numpy"):
@@ -687,8 +679,6 @@ def test_semantic_pairs_auto_k(spark, sf_dir):
         SEM_THRESHOLD,
         semantic_pairs_of,
     )
-    from environmental_stac_generator_spark.tables import load
-
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     auto1 = {
         (r["vec_a"], r["vec_b"], r["cosine"])
@@ -762,23 +752,40 @@ def test_sql_rnd_is_the_oracle_rounding_template(spark):
 
 def test_plan_gate_degradation_posture():
     """The shared CBO gate: only proven-small stats pick the small
-    plan; unknown stats and the force-scale override both take the
+    plan; unknown stats and the scale-plan override both take the
     scale-safe side."""
-    from environmental_stac_generator_spark.tables import (
-        force_scale_plans,
-        provably_small,
-    )
-
     assert provably_small(10, 100)
     assert provably_small(100, 100)
     assert not provably_small(101, 100)
     assert not provably_small(None, 100)  # unknown stats are NOT small
-    force_scale_plans(True)
-    try:
+    with scale_plans():
         assert not provably_small(1, 100)  # override forces scale side
-    finally:
-        force_scale_plans(False)
     assert provably_small(1, 100)
+
+
+def test_scale_plans_is_scoped():
+    """scale_plans() holds for the calling context only: not on a
+    thread started inside it, restored after an exception, nestable."""
+    import threading
+
+    def forced() -> bool:
+        return not provably_small(1, 100)
+
+    seen = []
+    with scale_plans():
+        t = threading.Thread(target=lambda: seen.append(forced()))
+        t.start()
+        t.join()
+        with scale_plans():
+            assert forced()
+        assert forced()
+    assert seen == [False] and not forced()
+    try:
+        with scale_plans():
+            raise RuntimeError("boom")
+    except RuntimeError:
+        pass
+    assert not forced()
 
 
 def test_oracle_kmeans_stays_on_bit_exact_kernels():

@@ -5,7 +5,10 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from environmental_stac_generator_spark.functions.zorder import morton_sql, zorder_col
+from environmental_stac_generator_spark.functions.zorder import (
+    morton_sql,
+    quantize_sql,
+)
 
 
 def _py_spread(v: int) -> int:
@@ -44,10 +47,12 @@ def test_morton_is_bijective_on_grid(spark):
 def test_zorder_improves_range_locality(spark):
     # All points in a small 2-D box must fall in a narrow band of the
     # z-curve relative to the full code space — that band is what
-    # parquet min/max pruning skips to.
+    # parquet min/max pruning skips to. The index is built the way
+    # zorder_spatial builds it: morton_sql over quantize_sql cells.
     pts = [(float(x), float(y)) for x in range(16, 32) for y in range(16, 32)]
+    z = morton_sql(quantize_sql("x", 0.0, 256.0), quantize_sql("y", 0.0, 256.0))
     df = spark.createDataFrame(pts, "x double, y double").withColumn(
-        "z", zorder_col("x", "y", (0.0, 256.0), (0.0, 256.0))
+        "z", F.expr(z)
     )
     lo, hi = df.agg(F.min("z"), F.max("z")).first()
     # a 16x16 box aligned to a z-quadrant spans exactly 256 codes
@@ -59,8 +64,6 @@ def test_quantize_rejects_bits_beyond_mask_width():
     silently destroy high bits and collapse distinct cells onto one z
     value — reject instead."""
     import pytest
-
-    from environmental_stac_generator_spark.functions.zorder import quantize_sql
 
     with pytest.raises(ValueError, match=r"\[1, 8\]"):
         quantize_sql("x", 0.0, 1.0, bits=10)
@@ -102,8 +105,6 @@ def test_morton_independent_bitloop_and_literal_anchors(spark):
 
 
 def test_quantize_literal_anchors(spark):
-    from environmental_stac_generator_spark.functions.zorder import quantize_sql
-
     # [0, 500) over 256 cells -> width 1.953125; clamps at both ends
     q = quantize_sql("v", 0.0, 500.0)
     rows = spark.createDataFrame(

@@ -10,11 +10,11 @@ host drift then hits both sides equally.
 Revision isolation (ADVICE r8): each side's modules are swapped into
 sys.modules under their CANONICAL names (and its tree put first on
 sys.path) for the duration of its timed call, then swapped back out.
-Without this, a query whose behavior lives behind a CALL-TIME import
-(e.g. span_dedup's gate does `from ...tables import provably_small`
-inside the function) would resolve that import against whichever
-revision happened to be installed — the old lane silently executing
-NEW code and reporting a false "no regression".
+Without this, a query whose behavior lives in another module (e.g.
+span_dedup's gate calls `plan_policy.provably_small`) would resolve
+that module against whichever revision happened to be installed — the
+old lane silently executing NEW code and reporting a false "no
+regression".
 
 Usage:
     python tools/ab_bench.py <old_rev> <query> [<query> ...]
