@@ -1032,18 +1032,18 @@ def _span_window_cliff_block(
 def _compaction_ingest_block(
     spark, soak_dir: str, n_batches: int = 8, batch_rows: int = 400
 ) -> tuple[dict, list[str]]:
-    """Compaction + 2PC ingest under a REAL multi-batch stream at the
-    10x corpus (VERDICT r10 #5 / r11 #3): N micro-batches through a
-    Structured Streaming query with the exactly-once foreachBatch
-    sink inflate the per-cell file counts and the probe's executed
+    """Compaction + exactly-once ingest under a REAL multi-batch
+    stream at the 10x corpus (VERDICT r10 #5 / r11 #3): N micro-batches
+    through a Structured Streaming query with the foreachBatch sink
+    inflate the per-cell file counts and the probe's executed
     numFiles; compaction restores both, with probe latency recorded
-    before / inflated / after. The r11/r12 single-maintainer guard is
-    exercised in the loop: the guard fires against an in-flight
-    batch's staging marker AND against a crashed-mid-commit pending
-    ledger entry (fault-injected at the first post-commit file move),
-    the stream writer refuses under the maintenance lock, the crashed
-    batch's ledger replay is timed, and the final index is checked
-    duplicate-free (exactly-once across the crash).
+    before / inflated / after. Two guards pin the commit protocol: a
+    batch crashed mid-move (fault-injected at its second landed-file
+    move) stays invisible and its timed replay lands it once, and an
+    append committed between a compaction's rewrite and its epoch
+    commit is rebased into the compaction's epoch, not lost. The
+    final index is checked duplicate-free by a DIRECTORY read
+    (exactly-once across the crash, with no stray files left).
 
     Returns (block, failures) — failures feed plan_shape_failures so
     a guard that does not fire fails the soak run."""
@@ -1102,7 +1102,7 @@ def _compaction_ingest_block(
 
     # one parquet FILE per micro-batch: maxFilesPerTrigger=1 +
     # availableNow makes the file-source stream deliver exactly
-    # n_batches micro-batches through the 2PC sink
+    # n_batches micro-batches through the exactly-once sink
     src = AI.Path(out) / "stream_src"
     src.mkdir()
     sample = e.orderBy("vec_id").limit(batch_rows).select("vec_id", "embedding")
@@ -1135,35 +1135,21 @@ def _compaction_ingest_block(
     )
     q.awaitTermination()
     block["stream_ingest_sec"] = round(time.perf_counter() - t0, 3)
-    led = json.loads((AI.Path(idx) / "_ann_batches.json").read_text())
-    block["batches_committed"] = len(led["committed"])
-    if len(led["committed"]) != n_batches:
+    committed = int(AI._load_current(AI.Path(idx)).get("batch", -1)) + 1
+    block["batches_committed"] = committed
+    if committed != n_batches:
         failures.append(
-            f"compaction block: {len(led['committed'])} committed "
-            f"batches, expected {n_batches}"
+            f"compaction block: {committed} committed batches, "
+            f"expected {n_batches}"
         )
     block["files_per_cell_inflated"] = _files_per_cell()
     block["probe_adc_sec_inflated"] = _probe_sec()
     block["probe_files_inflated"] = _probe_files()
 
-    # guard 1: an in-flight batch (staging marker present) refuses
-    # compaction — and the lock never survives the refusal
-    marker = AI.Path(idx) / "_staging" / "999"
-    marker.mkdir(parents=True)
-    try:
-        AI.compact_ann_index(spark, idx)
-        failures.append("compaction block: guard missed staging marker")
-        block["guard_fired_inflight"] = False
-    except RuntimeError:
-        block["guard_fired_inflight"] = True
-    AI.shutil.rmtree(marker.parent)
-    block["lock_released_after_refusal"] = not (
-        AI.Path(idx) / AI.MAINT_LOCK
-    ).exists()
-
-    # guard 2: a crash at the first post-commit file move leaves a
-    # REAL pending ledger entry; compaction must refuse until the
-    # stream's replay rolls it forward (replay timed)
+    # guard 1: a batch crashed at its second landed-file move is
+    # invisible (its epoch was never committed); the stream's replay
+    # drops the crashed attempt's files and lands it once (timed; the
+    # exactly-once check below counts it)
     crash_batch = sample.select(
         (F.col("vec_id") + base + n_batches * batch_rows).alias("vec_id"),
         "embedding",
@@ -1178,6 +1164,7 @@ def _compaction_ingest_block(
             raise RuntimeError("injected crash (soak fault injection)")
         return real_replace(*a, **k)
 
+    epoch = int(AI._load_current(AI.Path(idx))["epoch"])
     AI.os.replace = _crashing_replace
     try:
         w(crash_batch, n_batches)
@@ -1186,29 +1173,14 @@ def _compaction_ingest_block(
         pass
     finally:
         AI.os.replace = real_replace
-    led = json.loads((AI.Path(idx) / "_ann_batches.json").read_text())
-    block["pending_after_crash"] = sorted(led["pending"])
-    try:
-        AI.compact_ann_index(spark, idx)
-        failures.append("compaction block: guard missed pending ledger entry")
-        block["guard_fired_pending"] = False
-    except RuntimeError:
-        block["guard_fired_pending"] = True
+    block["crashed_batch_invisible"] = (
+        int(AI._load_current(AI.Path(idx))["epoch"]) == epoch
+    )
+    if not block["crashed_batch_invisible"]:
+        failures.append("compaction block: crashed batch committed an epoch")
     t0 = time.perf_counter()
     w(crash_batch, n_batches)  # the stream's replay path
-    block["ledger_replay_sec"] = round(time.perf_counter() - t0, 3)
-
-    # guard 3: the writer side of the handshake — a batch must refuse
-    # while the maintenance lock is held
-    AI._acquire_maintenance_lock(AI.Path(idx))
-    try:
-        w(crash_batch.select(F.col("vec_id") + 10_000_000, "embedding"), 99)
-        failures.append("compaction block: writer ignored maintenance lock")
-        block["writer_refused_under_lock"] = False
-    except RuntimeError:
-        block["writer_refused_under_lock"] = True
-    finally:
-        AI._release_maintenance_lock(AI.Path(idx))
+    block["replay_sec"] = round(time.perf_counter() - t0, 3)
 
     t0 = time.perf_counter()
     block["compact"] = AI.compact_ann_index(spark, idx)
@@ -1221,10 +1193,50 @@ def _compaction_ingest_block(
             "compaction block: compaction did not restore probe numFiles"
         )
 
+    # guard 2: an append committed while a compaction runs is rebased,
+    # not lost — the append lands between the compaction's rewrite and
+    # its epoch commit, which must then build on the append's epoch
+    extra = sample.select(
+        (F.col("vec_id") + base + (n_batches + 1) * batch_rows).alias("vec_id"),
+        "embedding",
+    )
+    AI.append_ann_index(spark, extra, idx)  # cells over threshold again
+    late = sample.select(
+        (F.col("vec_id") + base + (n_batches + 2) * batch_rows).alias("vec_id"),
+        "embedding",
+    )
+    real_land = AI._land
+
+    def _land_then_append(frame, root, stage, prefix):
+        adds = real_land(frame, root, stage, prefix)
+        if prefix == "compact-":
+            AI._land = real_land
+            AI.append_ann_index(spark, late, idx)
+        return adds
+
+    epoch = int(AI._load_current(AI.Path(idx))["epoch"])
+    AI._land = _land_then_append
+    try:
+        AI.compact_ann_index(spark, idx)
+    finally:
+        AI._land = real_land
+    # the late append took epoch + 1, the compaction rebased onto it
+    cur = AI._load_current(AI.Path(idx))
+    late_rows = AI._read_index(spark, idx).filter(
+        F.col("vec_id") >= base + (n_batches + 2) * batch_rows
+    ).count()
+    block["append_rebased"] = (
+        int(cur["epoch"]) == epoch + 2 and late_rows == batch_rows
+    )
+    if not block["append_rebased"]:
+        failures.append(
+            "compaction block: an append committed mid-compaction was lost"
+        )
+
     # exactly-once across the whole sequence: every ingested id lands
     # exactly once (the crashed batch included, via replay)
     total = spark.read.parquet(idx).count()
-    expected = corpus_n + (n_batches + 1) * batch_rows
+    expected = corpus_n + (n_batches + 3) * batch_rows
     dups = (
         spark.read.parquet(idx)
         .groupBy("vec_id")
@@ -1245,13 +1257,12 @@ def _compaction_ingest_block(
 
 def _manifest_commit_curve_block() -> dict:
     """VERDICT r13 #6: the manifest-commit cost curve the module doc
-    hand-waved — ``_commit_current`` wall time and ``_current.json``
+    hand-waved — ``_commit_current`` wall time and epoch document
     size vs live-file count (synthetic manifests, ~1 file/cell, so
     the file count IS the cell count K). Every index mutation pays
-    one commit; a compaction pays one PER CELL APPLY — the rendered
-    PLANS.md block carries the go/no-go note on Iceberg's split
-    manifest-list layout at the measured cadence. Driver-only
-    (pure JSON I/O), no Spark session involved."""
+    one commit — the rendered PLANS.md block carries the go/no-go
+    note on Iceberg's split manifest-list layout at the measured
+    cadence. Driver-only (pure JSON I/O), no Spark session involved."""
     import tempfile as _tf
 
     from environmental_stac_generator_spark.queries import ann_index as AI
@@ -1264,10 +1275,12 @@ def _manifest_commit_curve_block() -> dict:
                 f"cell={c}": [f"part-{c:05d}-0000.snappy.parquet"]
                 for c in range(n_files)
             }
-            AI._commit_current(root, files)  # creation commit
-            # steady-state commit: parse prev epoch + write history +
-            # swap — the exact per-mutation (and per-cell-apply) cost
-            sec = _best_of(lambda: AI._commit_current(root, files))
+            AI._commit_current(root, lambda prev: {"files": files})
+            # steady-state commit: parse prev epoch + put the next one
+            # + write the hint — the exact per-mutation cost
+            sec = _best_of(
+                lambda: AI._commit_current(root, lambda prev: {"files": files})
+            )
             rows.append({
                 "files": n_files,
                 "commit_sec": sec,
@@ -2461,8 +2474,8 @@ def soak() -> None:
     finally:
         shutil.rmtree(uni_dir, ignore_errors=True)
 
-    # compaction + 2PC exactly-once under a real multi-batch stream at
-    # 10x, with the single-maintainer guard exercised in the loop
+    # compaction + exactly-once ingest under a real multi-batch stream
+    # at 10x, with the commit protocol's guards exercised in the loop
     # (VERDICT r10 #5 / r11 #3). An exception here must not take the
     # whole soak artifact down with it — record it as a failure.
     try:

@@ -348,10 +348,9 @@ def _id_range_rows(e: DataFrame, hi: int, lo: int | None = None) -> list:
     UNMODIFIED frame of a single bounded parquet file
     (``tables.load`` stamps it), the rows come through a driver-side
     pyarrow footer-predicate read: no Spark job, and float32 → Python
-    float widening is exact, so values are bit-identical to a collect
-    (the `_init_cents_from_parquet` precedent). Any other frame — or
-    a file :func:`plan_policy.driver_readable` refuses — takes the
-    Spark collect, unchanged."""
+    float widening is exact, so values are bit-identical to a collect.
+    Any other frame — or a file :func:`plan_policy.driver_readable`
+    refuses — takes the Spark collect, unchanged."""
     path = getattr(e, "_envstac_parquet", None)
     rows = None
     if driver_readable(path):
@@ -1357,10 +1356,9 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keeps the update's float partial-agg grouping deterministic,
     # and the 6-dp centroid rounding is oracle-checked at 3 SFs
     # (semdedup_pairs' fanned _lloyd_assign shares this grouping).
-    e = load(spark, sf_dir, "embeddings", fan_out=True).select(
-        "vec_id", "embedding"
-    )
-    assigned, _ = _lloyd_assign(e, init_cents=_init_cents_from_parquet(sf_dir))
+    base = load(spark, sf_dir, "embeddings", fan_out=True)
+    e = base.select("vec_id", "embedding")
+    assigned, _ = _lloyd_assign(e, init_cents=_init_cents(base))
     if assigned is None:  # empty corpus: nothing to cluster
         return e.select(
             "vec_id",
@@ -1372,33 +1370,15 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("vec_id")
 
 
-def _init_cents_from_parquet(sf_dir: str):
-    """Bootstrap centroids (vec_id < K_CLUSTERS) read driver-side via
-    parquet predicate pushdown — 8 rows through the footer + one row
-    group, no Spark job. float32 → Python float is exact, so the
-    centroid literals are bit-identical to a Spark collect."""
-    import pyarrow
-    import pyarrow.dataset as ds
-
-    try:
-        tb = ds.dataset(f"{sf_dir}/embeddings.parquet").to_table(
-            filter=ds.field("vec_id") < K_CLUSTERS,
-            columns=["vec_id", "embedding"],
-        )
-        if tb.num_rows == 0:
-            # ids don't start at 0 (offset/non-contiguous corpora):
-            # an empty bootstrap must fall through to _lloyd_assign's
-            # orderBy().limit() scan, NOT masquerade as an empty
-            # corpus — [] is falsy but is not None there
-            return None
-        return sorted(
-            (int(i), [float(v) for v in emb])
-            for i, emb in zip(
-                tb["vec_id"].to_pylist(), tb["embedding"].to_pylist()
-            )
-        )
-    except (OSError, pyarrow.ArrowException):
-        return None
+def _init_cents(e: DataFrame):
+    """Bootstrap centroids (vec_id < K_CLUSTERS) of the UNMODIFIED
+    ``tables.load`` frame ``e``, through :func:`_id_range_rows` (no
+    Spark job on a small single-file corpus). None when no id is below
+    K_CLUSTERS (offset/non-contiguous corpora): an empty bootstrap
+    must fall through to _lloyd_assign's orderBy().limit() scan, NOT
+    masquerade as an empty corpus — [] is falsy but is not None
+    there."""
+    return _id_range_rows(e, K_CLUSTERS) or None
 
 
 def _lloyd_assign(
@@ -1519,13 +1499,11 @@ _SEMDEDUP_SQL = f"""
 def semdedup_pairs(
     spark: SparkSession, sf_dir: str, max_bucket: int = 10_000
 ) -> DataFrame:
-    e = load(spark, sf_dir, "embeddings", fan_out=True).select(
-        "vec_id", "embedding"
-    )
+    base = load(spark, sf_dir, "embeddings", fan_out=True)
     return semantic_pairs_of(
-        e,
+        base.select("vec_id", "embedding"),
         max_bucket=max_bucket,
-        init_cents=_init_cents_from_parquet(sf_dir),
+        init_cents=_init_cents(base),
         bound_rows=table_rows(sf_dir, "embeddings"),
     ).orderBy("vec_a", "vec_b")
 

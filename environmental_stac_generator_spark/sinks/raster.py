@@ -480,15 +480,6 @@ def passthrough_grid_reproject(
     )
 
 
-def default_grid_reproject(
-    arr: np.ndarray, ys: np.ndarray, xs: np.ndarray, meta: dict
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, dict]:
-    try:
-        return rasterio_grid_reproject(arr, ys, xs, meta)
-    except NotImplementedError:
-        return passthrough_grid_reproject(arr, ys, xs, meta)
-
-
 def _valid_time(ref: pd.Timestamp, lead: int, unit: str, step: float) -> pd.Timestamp:
     """Kernel-side twin of operators.forecast.valid_time (F2), same
     relativedelta semantics as functions.frequency.leadtime_offset:

@@ -439,9 +439,9 @@ def test_index_rebuilds_on_corpus_change(spark, tmp_path):
 
 class _CrashAt:
     """os.replace wrapper raising at the Nth call — the fault
-    injector for the ingest crash-window tests (the ingest path's
-    call order is pinned: 1 = the ledger commit, 2 = first staged
-    move, ...)."""
+    injector for the ingest crash-window tests (the stream writer's
+    first calls are its landed-file moves: 1 = the first, 2 = the
+    second, ...)."""
 
     def __init__(self, real, n):
         self.real, self.n, self.count = real, n, 0
@@ -454,17 +454,15 @@ class _CrashAt:
 
 
 class _CrashAtSite:
-    """os.replace wrapper raising at the Nth call whose DESTINATION
-    matches a semantic commit site — the compaction fault injector.
-    Classifying by path instead of global call count keeps the sweep
-    pinned to the commit protocol's sites (pending-manifest commit,
-    add-move, epoch-history write, _current.json swap) no matter how
-    many cells the run touches (r15: the single-epoch commit made
-    the add-move count data-dependent). The lease heartbeat is NOT a
-    site: it is advisory metadata on os.rename, fault-injected by
-    the dedicated lease tests."""
+    """os.replace / os.link wrapper raising at the Nth call whose
+    DESTINATION matches a semantic commit site. Classifying by path
+    instead of global call count keeps a sweep pinned to the commit
+    protocol's sites no matter how many cells a run touches: "move"
+    (a landed file renamed into its cell dir, os.replace), "history"
+    (the epoch put, os.link) and "swap" (the ``_current.json`` hint
+    write after it, os.replace)."""
 
-    SITES = ("pending", "move", "history", "swap")
+    SITES = ("move", "history", "swap")
 
     def __init__(self, real, site, nth=1):
         self.real, self.site, self.nth, self.count = real, site, nth, 0
@@ -472,15 +470,11 @@ class _CrashAtSite:
     @staticmethod
     def classify(dst) -> str:
         p = AI.Path(dst)
-        if p.name == AI.PENDING_NAME:
-            return "pending"
         if p.name == AI.CURRENT_NAME:
             return "swap"
         if p.parent.name == AI.EPOCHS_DIR:
             return "history"
-        if p.parent.name.startswith("cell=") and p.name.startswith(
-            "compact-"
-        ):
+        if p.parent.name.startswith("cell="):
             return "move"
         return "other"
 
@@ -491,12 +485,25 @@ class _CrashAtSite:
                 raise RuntimeError("injected crash")
         return self.real(src, dst, *a, **k)
 
+    @classmethod
+    def patch(cls, monkeypatch, site, nth=1) -> "_CrashAtSite":
+        """Install the injector on the os call that ``site`` uses;
+        ``monkeypatch.setattr(AI.os, crash.fn, crash.real)`` undoes
+        it."""
+        fn = "link" if site == "history" else "replace"
+        crash = cls(getattr(AI.os, fn), site, nth)
+        crash.fn = fn
+        monkeypatch.setattr(AI.os, fn, crash)
+        return crash
+
 
 def _ingest_crash_roundtrip(spark, tmp_path, monkeypatch, crash_at):
     """Shared body: seed an index, crash the stream writer at the
-    given os.replace call (1 = the ledger commit point itself,
-    2 = first file move after commit, 3 = mid-/post-move), then
-    replay the SAME batch id and assert exactly-once landing."""
+    given point — an int N is its Nth os.replace (1 = the first
+    landed-file move, 2 = the next, 3 = mid-move), a site name one of
+    :class:`_CrashAtSite`'s ("history" = the epoch put, "swap" = the
+    hint write after it) — then replay the SAME batch id and assert
+    exactly-once landing."""
     corpus = str(tmp_path / "c")
     _synth_embeddings(spark, range(0, 80)).coalesce(1).write.parquet(
         f"{corpus}/embeddings.parquet"
@@ -505,11 +512,15 @@ def _ingest_crash_roundtrip(spark, tmp_path, monkeypatch, crash_at):
     assert AI.build_ann_index(spark, corpus, idx) is not None
     batch = _synth_embeddings(spark, range(1000, 1030), shift=3)
     w = AI.ann_index_stream_writer(idx)
-    crash = _CrashAt(AI.os.replace, crash_at)
-    monkeypatch.setattr(AI.os, "replace", crash)
+    if isinstance(crash_at, int):
+        crash = _CrashAt(AI.os.replace, crash_at)
+        crash.fn = "replace"
+        monkeypatch.setattr(AI.os, "replace", crash)
+    else:
+        crash = _CrashAtSite.patch(monkeypatch, crash_at)
     with pytest.raises(RuntimeError, match="injected"):
         w(batch, 7)
-    monkeypatch.setattr(AI.os, "replace", crash.real)
+    monkeypatch.setattr(AI.os, crash.fn, crash.real)
     # the crashed batch either never became visible (pre-commit) or
     # is recoverable (post-commit) — never partially double-visible
     # after replay:
@@ -529,36 +540,16 @@ def _ingest_crash_roundtrip(spark, tmp_path, monkeypatch, crash_at):
     assert spark.read.parquet(idx).count() == 80 + 30
 
 
-@pytest.mark.parametrize("crash_at", [1, 2, 3])
+@pytest.mark.parametrize("crash_at", [1, 2, 3, "history", "swap"])
 def test_stream_writer_crash_windows_land_exactly_once(
     spark, tmp_path, monkeypatch, crash_at
 ):
     """VERDICT r9 #5: the r9 sink documented a crash window between
     parquet append and ledger record that duplicated the batch on
-    replay. The staged two-phase commit closes it — a crash at the
-    ledger commit point, at the first post-commit file move, or
-    mid-move must all land the batch exactly once after replay."""
+    replay. The epoch commit closes it — a crash at the first or a
+    later landed-file move, at the epoch put, or at the hint write
+    after it must all land the batch exactly once after replay."""
     _ingest_crash_roundtrip(spark, tmp_path, monkeypatch, crash_at)
-
-
-def test_stream_writer_reads_pre_r10_ledger(spark, tmp_path):
-    """The pre-r10 ledger was a bare list of committed ids; the 2PC
-    writer must still honor it (skip committed, append new)."""
-    import json as _json
-    from pathlib import Path as _P
-
-    corpus = str(tmp_path / "c")
-    _synth_embeddings(spark, range(0, 80)).coalesce(1).write.parquet(
-        f"{corpus}/embeddings.parquet"
-    )
-    idx = str(tmp_path / "idx")
-    assert AI.build_ann_index(spark, corpus, idx) is not None
-    (_P(idx) / "_ann_batches.json").write_text(_json.dumps([0, 1]))
-    w = AI.ann_index_stream_writer(idx)
-    w(_synth_embeddings(spark, range(1000, 1010), shift=3), 0)  # committed
-    assert spark.read.parquet(idx).count() == 80
-    w(_synth_embeddings(spark, range(1000, 1010), shift=3), 2)  # new
-    assert spark.read.parquet(idx).count() == 90
 
 
 def test_compact_restores_probe_numfiles(spark, tmp_path):
@@ -595,159 +586,6 @@ def test_compact_restores_probe_numfiles(spark, tmp_path):
     assert _rows(AI.index_probe_adc(spark, corpus, nprobe=S.NPROBE, idx_dir=idx)) == before_adc
     # idempotent: a second pass finds nothing over-threshold
     assert AI.compact_ann_index(spark, idx)["cells_compacted"] == 0
-
-
-def test_compact_crash_rolls_forward(spark, tmp_path, monkeypatch):
-    """A compaction interrupted between its manifest commit and the
-    apply must complete (roll forward) on the next call with no row
-    loss or duplication."""
-    corpus = str(tmp_path / "c")
-    _synth_embeddings(spark, range(0, 120)).coalesce(1).write.parquet(
-        f"{corpus}/embeddings.parquet"
-    )
-    idx = str(tmp_path / "idx")
-    assert AI.build_ann_index(spark, corpus, idx) is not None
-    w = AI.ann_index_stream_writer(idx)
-    for i in range(2):
-        w(_synth_embeddings(spark, range(1000 + 40 * i, 1040 + 40 * i), shift=3), i)
-    n_rows = spark.read.parquet(idx).count()
-    before = _rows(AI.index_probe_exact(spark, corpus, nprobe=S.NPROBE, idx_dir=idx))
-    # crash at the first add-move: the single pending manifest is
-    # committed, the apply is interrupted
-    crash = _CrashAtSite(AI.os.replace, "move", 1)
-    monkeypatch.setattr(AI.os, "replace", crash)
-    with pytest.raises(RuntimeError, match="injected"):
-        AI.compact_ann_index(spark, idx)
-    monkeypatch.setattr(AI.os, "replace", crash.real)
-    assert (AI.Path(idx) / "_ann_compaction.json").exists()
-    AI.compact_ann_index(spark, idx)
-    assert not (AI.Path(idx) / "_ann_compaction.json").exists()
-    assert spark.read.parquet(idx).count() == n_rows
-    assert _rows(AI.index_probe_exact(spark, corpus, nprobe=S.NPROBE, idx_dir=idx)) == before
-    scans = AI.executed_scan_metrics(
-        AI.index_probe_exact(spark, corpus, nprobe=S.NPROBE, idx_dir=idx)
-    )
-    assert scans[0]["num_files"] == S.NPROBE, scans
-
-
-def test_compact_refuses_while_ingest_pending_or_staged(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r10: the single-maintainer contract is now mechanical —
-    compaction must refuse while the ingest ledger has pending batches
-    or _staging holds batch dirs (an in-flight or crashed-mid-commit
-    writer), and run normally once the replay completes."""
-    corpus = str(tmp_path / "c")
-    _synth_embeddings(spark, range(0, 80)).coalesce(1).write.parquet(
-        f"{corpus}/embeddings.parquet"
-    )
-    idx = str(tmp_path / "idx")
-    assert AI.build_ann_index(spark, corpus, idx) is not None
-    batch = _synth_embeddings(spark, range(1000, 1020), shift=3)
-    # crash the writer AT the atomic ledger commit (os.replace call 1
-    # is the temp->ledger rename itself): NO pending entry lands, the
-    # guard trips on the staged batch dir alone (ADVICE r11 #3)
-    crash = _CrashAt(AI.os.replace, 1)
-    monkeypatch.setattr(AI.os, "replace", crash)
-    with pytest.raises(RuntimeError, match="injected"):
-        AI.ann_index_stream_writer(idx)(batch, 5)
-    monkeypatch.setattr(AI.os, "replace", crash.real)
-    led = AI.json.loads((AI.Path(idx) / "_ann_batches.json").read_text()) \
-        if (AI.Path(idx) / "_ann_batches.json").exists() else {}
-    assert not led.get("pending")  # the commit itself was the crash
-    with pytest.raises(RuntimeError, match="ingest in progress"):
-        AI.compact_ann_index(spark, idx)
-    # bare staging garbage (no ledger at all) also refuses
-    (AI.Path(idx) / "_ann_batches.json").unlink(missing_ok=True)
-    with pytest.raises(RuntimeError, match="ingest in progress"):
-        AI.compact_ann_index(spark, idx)
-    # replaying the batch completes the commit and clears the guard
-    AI.ann_index_stream_writer(idx)(batch, 5)
-    assert spark.read.parquet(idx).count() == 80 + 20
-    AI.compact_ann_index(spark, idx)  # runs clean now
-    assert not (AI.Path(idx) / AI.MAINT_LOCK).exists()  # lock released
-    # crash the writer just AFTER the commit (os.replace call 2 = the
-    # first staged-file move): a REAL pending ledger entry stays, and
-    # the guard must trip on the pending branch with no staging left
-    # ambiguity (ADVICE r11 #3 — the branch the old test never hit)
-    batch2 = _synth_embeddings(spark, range(2000, 2020), shift=3)
-    crash2 = _CrashAt(AI.os.replace, 2)
-    monkeypatch.setattr(AI.os, "replace", crash2)
-    with pytest.raises(RuntimeError, match="injected"):
-        AI.ann_index_stream_writer(idx)(batch2, 6)
-    monkeypatch.setattr(AI.os, "replace", crash2.real)
-    led = AI.json.loads((AI.Path(idx) / "_ann_batches.json").read_text())
-    assert "6" in led["pending"]  # the commit landed before the crash
-    with pytest.raises(RuntimeError, match="ingest in progress"):
-        AI.compact_ann_index(spark, idx)
-    AI.ann_index_stream_writer(idx)(batch2, 6)  # replay rolls forward
-    AI.compact_ann_index(spark, idx)  # clean again
-
-
-def test_maintenance_lock_mutual_exclusion(spark, tmp_path, monkeypatch):
-    """ADVICE r11 #1: the check-then-act window is closed by a
-    two-sided handshake — the stream writer refuses while the
-    maintenance lock exists (including when the lock lands AFTER the
-    writer's initial check but before its staging write), a second
-    maintainer cannot acquire the held lock, and the lock never
-    outlives a compaction (success or refusal)."""
-    corpus = str(tmp_path / "c")
-    _synth_embeddings(spark, range(0, 80)).coalesce(1).write.parquet(
-        f"{corpus}/embeddings.parquet"
-    )
-    idx = str(tmp_path / "idx")
-    assert AI.build_ann_index(spark, corpus, idx) is not None
-    root = AI.Path(idx)
-    batch = _synth_embeddings(spark, range(1000, 1020), shift=3)
-    # maintainer holds the lock -> writer refuses up front
-    AI._acquire_maintenance_lock(root)
-    # staleness metadata (VERDICT r12 #4): owner pid/host/acquire time
-    # are in the lock body, and refusal messages quote them
-    info = AI.maintenance_lock_info(root)
-    assert info["pid"] == AI.os.getpid()
-    assert info["host"] == AI.socket.gethostname()
-    AI.datetime.fromisoformat(info["acquired_utc"])  # parses
-    with pytest.raises(RuntimeError, match=f"pid {AI.os.getpid()}"):
-        AI.ann_index_stream_writer(idx)(batch, 1)
-    with pytest.raises(RuntimeError, match="maintenance in progress"):
-        AI.ann_index_stream_writer(idx)(batch, 1)
-    # a second maintainer cannot acquire it (message quotes the owner)
-    with pytest.raises(RuntimeError, match="another maintainer"):
-        AI._acquire_maintenance_lock(root)
-    with pytest.raises(RuntimeError, match=f"pid {AI.os.getpid()}"):
-        AI._acquire_maintenance_lock(root)
-    AI._release_maintenance_lock(root)
-    # the TOCTOU interleaving itself: the lock lands AFTER the
-    # writer's up-front check — simulate by acquiring it from inside
-    # the first post-check filesystem op (the staging-marker mkdir),
-    # exactly where a concurrent compactor could slot in. The writer's
-    # re-check must abort the batch and remove its marker.
-    real_mkdir = AI.Path.mkdir
-
-    def _mkdir_then_lock(self, *a, **k):
-        real_mkdir(self, *a, **k)
-        # mkdir(parents=True) re-enters for the target after creating
-        # the parent — acquire once, not per re-entry
-        if (self.name == "1" and self.parent.name == "_staging"
-                and not (root / AI.MAINT_LOCK).exists()):
-            AI._acquire_maintenance_lock(root)
-
-    monkeypatch.setattr(AI.Path, "mkdir", _mkdir_then_lock)
-    with pytest.raises(RuntimeError, match="maintenance in progress"):
-        AI.ann_index_stream_writer(idx)(batch, 1)
-    monkeypatch.setattr(AI.Path, "mkdir", real_mkdir)
-    assert not (root / "_staging" / "1").exists()  # marker cleaned up
-    AI._release_maintenance_lock(root)
-    # nothing landed: the aborted batch replays cleanly afterwards
-    AI.ann_index_stream_writer(idx)(batch, 1)
-    assert spark.read.parquet(idx).count() == 80 + 20
-    assert not (root / AI.MAINT_LOCK).exists()
-    # a refused compaction (ingest pending) also releases the lock
-    (root / "_staging" / "garbage").mkdir(parents=True)
-    with pytest.raises(RuntimeError, match="ingest in progress"):
-        AI.compact_ann_index(spark, idx)
-    assert not (root / AI.MAINT_LOCK).exists()
-    AI.shutil.rmtree(root / "_staging")
 
 
 def test_probe_id_parameter(spark, tmp_path):
@@ -988,17 +826,30 @@ def _manifest_reader_rows(spark, idx):
     )
 
 
+_SEED: dict = {}
+
+
 def _seeded_multi_file_index(spark, tmp_path):
-    corpus = str(tmp_path / "c")
-    _synth_embeddings(spark, range(0, 120)).coalesce(1).write.parquet(
-        f"{corpus}/embeddings.parquet"
-    )
-    idx = str(tmp_path / "idx")
-    assert AI.build_ann_index(spark, corpus, idx) is not None
-    w = AI.ann_index_stream_writer(idx)
-    for i in range(2):
-        w(_synth_embeddings(spark, range(1000 + 40 * i, 1040 + 40 * i), shift=3), i)
-    return corpus, idx
+    """A 120-row build plus two streamed 40-row batches (epochs 1-3,
+    ~3 files per populated cell) — built once per test session, then
+    copied into ``tmp_path`` (copytree keeps the epochs and file
+    mtimes), so every test mutates its own copy."""
+    if "dir" not in _SEED:
+        import tempfile
+
+        seed = AI.Path(tempfile.mkdtemp(prefix="ann_seed_"))
+        AI._SCRATCH.append(str(seed))
+        _synth_embeddings(spark, range(0, 120)).coalesce(1).write.parquet(
+            str(seed / "c" / "embeddings.parquet")
+        )
+        assert AI.build_ann_index(spark, str(seed / "c"), str(seed / "idx"))
+        w = AI.ann_index_stream_writer(str(seed / "idx"))
+        for i in range(2):
+            w(_synth_embeddings(spark, range(1000 + 40 * i, 1040 + 40 * i), shift=3), i)
+        _SEED["dir"] = seed
+    for name in ("c", "idx"):
+        AI.shutil.copytree(_SEED["dir"] / name, tmp_path / name)
+    return str(tmp_path / "c"), str(tmp_path / "idx")
 
 
 def test_epoch_manifest_written_and_resolves_exact_files(spark, tmp_path):
@@ -1033,24 +884,24 @@ def test_reader_snapshot_isolation_mid_compaction_apply(
     root = AI.Path(idx)
     expected = _manifest_reader_rows(spark, idx)
     assert len(expected) == 200 == len({v for v, _ in expected})
+    e0 = int(AI._load_current(root)["epoch"])
 
-    # (a) crash at the first add-move (the pending manifest is
-    # committed; the manifest still names the old files, all on disk)
+    # (a) crash at the first add-move (nothing committed; the
+    # manifest still names the old files, all on disk)
     crash = _CrashAtSite(AI.os.replace, "move", 1)
     monkeypatch.setattr(AI.os, "replace", crash)
     with pytest.raises(RuntimeError, match="injected"):
         AI.compact_ann_index(spark, idx)
     monkeypatch.setattr(AI.os, "replace", crash.real)
-    AI._release_maintenance_lock(root)  # owner "died"; operator recovery
     assert _manifest_reader_rows(spark, idx) == expected
-    assert (root / "_ann_compaction.json").exists()
+    assert int(AI._load_current(root)["epoch"]) == e0
 
     # (b) crash immediately after the epoch swap, before deletes
     real_commit = AI._commit_current
     calls = {"n": 0}
 
-    def _commit_then_crash(r, files, retired=None):
-        real_commit(r, files, retired=retired)
+    def _commit_then_crash(r, step):
+        real_commit(r, step)
         calls["n"] += 1
         raise RuntimeError("injected post-swap crash")
 
@@ -1058,7 +909,6 @@ def test_reader_snapshot_isolation_mid_compaction_apply(
     with pytest.raises(RuntimeError, match="post-swap"):
         AI.compact_ann_index(spark, idx)
     monkeypatch.setattr(AI, "_commit_current", real_commit)
-    AI._release_maintenance_lock(root)
     assert calls["n"] == 1
     # the compacted cell's adds are live, its doomed files still on
     # disk — the manifest must hide them: exactly one copy of each row
@@ -1066,10 +916,9 @@ def test_reader_snapshot_isolation_mid_compaction_apply(
     listing_rows = spark.read.parquet(idx).count()
     assert listing_rows > len(expected), "double-copy state must exist on disk"
 
-    # roll forward to completion: same rows, pruned probe restored
+    # a rerun finds nothing left to do: same rows, pruned probe
     AI.compact_ann_index(spark, idx)
     assert _manifest_reader_rows(spark, idx) == expected
-    assert not (root / "_ann_compaction.json").exists()
     scans = AI.executed_scan_metrics(
         AI.index_probe_exact(spark, corpus, nprobe=S.NPROBE, idx_dir=idx)
     )
@@ -1094,14 +943,14 @@ def test_stream_batch_visible_only_at_manifest_commit(
 
     real_commit = AI._commit_current
 
-    def _crash_commit(r, files, retired=None):
+    def _crash_commit(r, step):
         raise RuntimeError("injected pre-commit crash")
 
     monkeypatch.setattr(AI, "_commit_current", _crash_commit)
     with pytest.raises(RuntimeError, match="pre-commit"):
         AI.ann_index_stream_writer(idx)(batch, 3)
     monkeypatch.setattr(AI, "_commit_current", real_commit)
-    # files are on disk, ledger still pending — manifest readers see
+    # files are on disk, no epoch names them — manifest readers see
     # the pre-batch snapshot
     assert spark.read.parquet(idx).count() == 110
     assert _manifest_reader_rows(spark, idx) == before
@@ -1111,79 +960,12 @@ def test_stream_batch_visible_only_at_manifest_commit(
     assert len(after) == 110 == len({v for v, _ in after})
 
 
-def test_append_refuses_under_maintenance_lock(spark, tmp_path):
-    corpus = str(tmp_path / "c")
-    _synth_embeddings(spark, range(0, 80)).coalesce(1).write.parquet(
-        f"{corpus}/embeddings.parquet"
-    )
-    idx = str(tmp_path / "idx")
-    assert AI.build_ann_index(spark, corpus, idx) is not None
-    AI._acquire_maintenance_lock(AI.Path(idx))
-    try:
-        with pytest.raises(RuntimeError, match="maintenance in progress"):
-            AI.append_ann_index(
-                spark, _synth_embeddings(spark, range(1000, 1010), shift=3), idx
-            )
-    finally:
-        AI._release_maintenance_lock(AI.Path(idx))
-
-
-def test_release_stale_maintenance_lock_contract(tmp_path):
-    """The staleness recovery contract (VERDICT r12 #4): refuse while
-    the recorded owner is alive; release on a provably dead pid, an
-    exceeded age bound, or an explicit force; a metadata-less lock
-    needs force."""
-    import json as _json
-    import subprocess
-
-    root = AI.Path(tmp_path)
-    # live owner (this process): refuse
-    AI._acquire_maintenance_lock(root)
-    with pytest.raises(RuntimeError, match="not provably dead"):
-        AI.release_stale_maintenance_lock(root)
-    assert (root / AI.MAINT_LOCK).exists()
-    # dead pid on this host: release
-    p = subprocess.Popen(["true"])
-    p.wait()
-    (root / AI.MAINT_LOCK).write_text(
-        _json.dumps({
-            "pid": p.pid,
-            "host": AI.socket.gethostname(),
-            "acquired_utc": "2026-08-16T00:00:00+00:00",
-        })
-    )
-    info = AI.release_stale_maintenance_lock(root)
-    assert info["pid"] == p.pid
-    assert not (root / AI.MAINT_LOCK).exists()
-    # other-host lock: pid liveness unverifiable -> age bound decides
-    (root / AI.MAINT_LOCK).write_text(
-        _json.dumps({
-            "pid": 1,
-            "host": "some-other-host",
-            "acquired_utc": "2020-01-01T00:00:00+00:00",
-        })
-    )
-    with pytest.raises(RuntimeError, match="not provably dead"):
-        AI.release_stale_maintenance_lock(root)
-    AI.release_stale_maintenance_lock(root, max_age_sec=3600)
-    assert not (root / AI.MAINT_LOCK).exists()
-    # metadata-less (pre-r13 / mid-acquire) lock: force required
-    (root / AI.MAINT_LOCK).touch()
-    with pytest.raises(RuntimeError, match="not provably dead"):
-        AI.release_stale_maintenance_lock(root)
-    AI.release_stale_maintenance_lock(root, force=True)
-    assert not (root / AI.MAINT_LOCK).exists()
-    # no lock at all: distinct error
-    with pytest.raises(RuntimeError, match="no _maintenance.lock"):
-        AI.release_stale_maintenance_lock(root)
-
-
 def test_vacuum_grace_compaction_lifecycle(spark, tmp_path):
     """Grace-period compaction (the vacuum knob): replaced files are
     RETIRED — on disk, dead to every manifest reader — until
-    vacuum_ann_index reclaims those past the epoch horizon. A
-    walk-derived epoch rebuild (append) must never resurrect retired
-    files, and a second compaction must fold in live files only."""
+    vacuum_ann_index reclaims those past the epoch horizon. A later
+    commit (append) must never resurrect retired files, and a second
+    compaction must fold in live files only."""
     corpus, idx = _seeded_multi_file_index(spark, tmp_path)
     root = AI.Path(idx)
     expected = _manifest_reader_rows(spark, idx)
@@ -1205,9 +987,8 @@ def test_vacuum_grace_compaction_lifecycle(spark, tmp_path):
     )
     assert scans[0]["num_files"] == S.NPROBE, scans
 
-    # a walk-derived rebuild (append commits a fresh epoch from the
-    # directory listing) must exclude retired files and carry the
-    # retired ledger forward
+    # a later commit (append) must exclude retired files and carry
+    # the retired ledger forward
     AI.append_ann_index(
         spark, _synth_embeddings(spark, range(3000, 3040), shift=3), idx
     )
@@ -1247,55 +1028,40 @@ def test_vacuum_grace_compaction_lifecycle(spark, tmp_path):
     assert on_disk == in_manifest
     assert _manifest_reader_rows(spark, idx) == after_append
 
-    # vacuum is a maintenance op: it refuses while another maintainer
-    # holds the lock
-    AI._acquire_maintenance_lock(root)
-    try:
-        with pytest.raises(RuntimeError, match="another maintainer"):
-            AI.vacuum_ann_index(idx)
-    finally:
-        AI._release_maintenance_lock(root)
-
 
 @pytest.mark.parametrize(
     "site,nth",
     [
-        ("pending", 1),   # the single pending-manifest commit itself
-        ("move", 1),      # first add-move of the apply
+        ("move", 1),      # first add-move
         ("move", 2),      # mid-move
         ("move", 3),      # later move (another cell's add)
-        ("history", 1),   # the one epoch-history write
-        ("swap", 1),      # the one _current.json visibility swap
+        ("history", 1),   # the one epoch put (os.link)
+        ("swap", 1),      # the _current.json hint write after it
         ("none", 1),      # no crash: the completed run, same asserts
     ],
 )
 def test_compaction_crash_sweep_exactly_once(
     spark, tmp_path, monkeypatch, site, nth
 ):
-    """Systematic fault injection at every semantic os.replace site of
-    the SINGLE-EPOCH commit protocol (r15: one pending manifest naming
-    every cell's adds/deletes, all moves, ONE history write, ONE
-    _current.json swap — sites classified by destination path, so the
+    """Systematic fault injection at every semantic site of the
+    SINGLE-EPOCH commit protocol (all add-moves, ONE epoch put, the
+    hint write after it — sites classified by destination path, so the
     sweep is invariant to how many cells a run touches): a compaction
     crashed at each site must leave a manifest reader seeing exactly
-    one copy of every row, and roll forward to a clean pruned index on
-    the next call. The CATALOG route is swept too (VERDICT r13 #1): a
-    view registered at each crash point resolves the same exactly-once
-    snapshot through spark.table. The lease heartbeat is not a site —
-    it is advisory metadata (os.rename), covered by the lease tests."""
+    one copy of every row, and the next call must leave a clean pruned
+    index. The CATALOG route is swept too (VERDICT r13 #1): a view
+    registered at each crash point resolves the same exactly-once
+    snapshot through spark.table."""
     corpus, idx = _seeded_multi_file_index(spark, tmp_path)
     root = AI.Path(idx)
     expected = _manifest_reader_rows(spark, idx)
-    crash = _CrashAtSite(AI.os.replace, site, nth)
-    monkeypatch.setattr(AI.os, "replace", crash)
+    crash = _CrashAtSite.patch(monkeypatch, site, nth)
     try:
         AI.compact_ann_index(spark, idx)
         assert site == "none", f"expected a crash at {site}/{nth}"
     except RuntimeError as exc:
         assert "injected" in str(exc)
-    monkeypatch.setattr(AI.os, "replace", crash.real)
-    if (root / AI.MAINT_LOCK).exists():  # only on a non-finally death
-        AI.release_stale_maintenance_lock(root, force=True)
+    monkeypatch.setattr(AI.os, crash.fn, crash.real)
     assert _manifest_reader_rows(spark, idx) == expected, (site, nth)
     AI.register_index_view(spark, idx, "sweep_view")
     assert sorted(
@@ -1303,9 +1069,8 @@ def test_compaction_crash_sweep_exactly_once(
         for r in spark.table("sweep_view").select("vec_id", "cell").collect()
     ) == expected, (site, nth)
     AI.drop_index_view(spark, "sweep_view")
-    AI.compact_ann_index(spark, idx)  # roll forward / finish
+    AI.compact_ann_index(spark, idx)  # a rerun finishes the job
     assert _manifest_reader_rows(spark, idx) == expected, (site, nth)
-    assert not (root / AI.PENDING_NAME).exists()
     scans = AI.executed_scan_metrics(
         AI.index_probe_exact(spark, corpus, nprobe=S.NPROBE, idx_dir=idx)
     )
@@ -1495,22 +1260,21 @@ def test_catalog_view_snapshot_isolation_mid_apply(
 
     real_commit = AI._commit_current
 
-    def _commit_then_crash(r, files, retired=None):
-        real_commit(r, files, retired=retired)
+    def _commit_then_crash(r, step):
+        real_commit(r, step)
         raise RuntimeError("injected post-swap crash")
 
     monkeypatch.setattr(AI, "_commit_current", _commit_then_crash)
     with pytest.raises(RuntimeError, match="post-swap"):
         AI.compact_ann_index(spark, idx, vacuum_grace=True)
     monkeypatch.setattr(AI, "_commit_current", real_commit)
-    AI._release_maintenance_lock(root)
     # double-copy state exists on disk; BOTH views must hide it
     assert spark.read.parquet(idx).count() > len(expected)
     AI.register_index_view(spark, idx, "mid_view")
     assert _view_rows(spark, "mid_view") == expected
     assert _view_rows(spark, "pre_view") == expected
-    # roll forward to completion: grace retention keeps the pre-apply
-    # view's files on disk, so it STILL reads its snapshot
+    # a rerun finds nothing left to do; grace retention keeps the
+    # pre-apply view's files on disk, so it STILL reads its snapshot
     AI.compact_ann_index(spark, idx, vacuum_grace=True)
     assert _view_rows(spark, "pre_view") == expected
     fresh_epoch = AI.register_index_view(spark, idx, "post_view")
@@ -1518,97 +1282,6 @@ def test_catalog_view_snapshot_isolation_mid_apply(
     assert fresh_epoch == int(AI._load_current(root)["epoch"])
     for v in ("pre_view", "mid_view", "post_view"):
         spark.catalog.dropTempView(v)
-
-
-def test_heartbeat_lease_contract(tmp_path):
-    """VERDICT r13 #3 + ADVICE r13 #1: max_age_sec is a true LEASE
-    measured from the last heartbeat, applied ONLY where liveness is
-    unverifiable — a heartbeating owner survives an age-based release
-    attempt, a non-heartbeating one is released, and a same-host
-    VERIFIED-ALIVE owner is never releasable by age at all."""
-    import json as _json
-    import time as _time
-
-    root = AI.Path(tmp_path)
-    # same-host ALIVE pid: age bound must NOT apply (ADVICE r13 #1)
-    AI._acquire_maintenance_lock(root)
-    with pytest.raises(RuntimeError, match="VERIFIED ALIVE"):
-        AI.release_stale_maintenance_lock(root, max_age_sec=0.0)
-    assert (root / AI.MAINT_LOCK).exists()
-    # the owner's heartbeat refreshes heartbeat_utc, not acquired_utc
-    info0 = AI.maintenance_lock_info(root)
-    _time.sleep(1.1)  # timespec is seconds
-    AI._heartbeat_lock(root)
-    info1 = AI.maintenance_lock_info(root)
-    assert info1["acquired_utc"] == info0["acquired_utc"]
-    assert info1["heartbeat_utc"] > info0["heartbeat_utc"]
-    AI._release_maintenance_lock(root)
-    # other-host owner, ancient acquire, FRESH heartbeat: the lease
-    # holds — an age-based release attempt must refuse
-    now = AI.datetime.now(AI.timezone.utc).isoformat(timespec="seconds")
-    (root / AI.MAINT_LOCK).write_text(
-        _json.dumps({
-            "pid": 1,
-            "host": "some-other-host",
-            "acquired_utc": "2020-01-01T00:00:00+00:00",
-            "heartbeat_utc": now,
-        })
-    )
-    with pytest.raises(RuntimeError, match="not provably dead"):
-        AI.release_stale_maintenance_lock(root, max_age_sec=3600)
-    # same lock, STALE heartbeat: the lease expired — released
-    (root / AI.MAINT_LOCK).write_text(
-        _json.dumps({
-            "pid": 1,
-            "host": "some-other-host",
-            "acquired_utc": "2020-01-01T00:00:00+00:00",
-            "heartbeat_utc": "2020-01-01T01:00:00+00:00",
-        })
-    )
-    info = AI.release_stale_maintenance_lock(root, max_age_sec=3600)
-    assert info["pid"] == 1
-    assert not (root / AI.MAINT_LOCK).exists()
-
-
-def test_committers_refuse_on_pending_compaction(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r13 #3: after an operator releases a DEAD compactor's
-    lock, the half-applied compaction (committed pending manifest) is
-    exactly the state where a committer's walk-derived epoch would
-    fold both copies of a row into the live set — append and the
-    stream sink must refuse until compact_ann_index replays it."""
-    corpus, idx = _seeded_multi_file_index(spark, tmp_path)
-    root = AI.Path(idx)
-    expected = _manifest_reader_rows(spark, idx)
-    # kill the compactor at its first add-move: pending manifest
-    # committed, adds partially moved in, lock held by the corpse
-    crash = _CrashAtSite(AI.os.replace, "move", 1)
-    monkeypatch.setattr(AI.os, "replace", crash)
-    with pytest.raises(RuntimeError, match="injected"):
-        AI.compact_ann_index(spark, idx)
-    monkeypatch.setattr(AI.os, "replace", crash.real)
-    # the in-process finally already dropped the lock (a real crash
-    # leaves it for release_stale_maintenance_lock); the half-applied
-    # manifest is the state committers must now refuse on
-    if (root / AI.MAINT_LOCK).exists():
-        AI.release_stale_maintenance_lock(root, force=True)
-    assert (root / AI.PENDING_NAME).exists()
-    batch = _synth_embeddings(spark, range(7000, 7020), shift=3)
-    with pytest.raises(RuntimeError, match="compaction manifest is pending"):
-        AI.append_ann_index(spark, batch, idx)
-    with pytest.raises(RuntimeError, match="compaction manifest is pending"):
-        AI.ann_index_stream_writer(idx)(batch, 9)
-    assert not (root / "_staging" / "9").exists()  # marker cleaned up
-    # the documented recovery order: compact replays under the lock,
-    # then ingest resumes — exactly-once throughout
-    AI.compact_ann_index(spark, idx)
-    assert not (root / AI.PENDING_NAME).exists()
-    assert _manifest_reader_rows(spark, idx) == expected
-    AI.append_ann_index(spark, batch, idx)
-    after = _manifest_reader_rows(spark, idx)
-    assert len(after) == len(expected) + 20
-    assert len({v for v, _ in after}) == len(after)
 
 
 def test_vacuum_keep_age_sec_horizon(spark, tmp_path):
@@ -1702,130 +1375,6 @@ def test_compaction_commits_one_epoch(spark, tmp_path):
     ]
     assert len(new_entries) == 1
     assert len(new_entries[0]["files"]) >= res["cells_compacted"]
-
-
-def test_lease_heartbeat_covers_batched_rewrite(spark, tmp_path, monkeypatch):
-    """ADVICE r14 #1 (the medium): the longest un-checkpointed phase —
-    the ONE Spark job rewriting all cells — is now covered by a
-    background lease heartbeat, so an age-based release attempt
-    DURING a long rewrite finds a fresh heartbeat (and a same-host
-    release attempt finds a verified-alive pid) and refuses. Asserted
-    from inside a slowed rewrite."""
-    import time as _time
-
-    corpus, idx = _seeded_multi_file_index(spark, tmp_path)
-    root = AI.Path(idx)
-    real_rewrite = AI._rewrite_cells
-    seen = {}
-
-    def slow_rewrite(spark_, root_, to_do, tmp_root):
-        before = AI.maintenance_lock_info(root_)["heartbeat_utc"]
-        _time.sleep(1.3)  # heartbeat timespec is seconds
-        # mid-rewrite, same-host operator: refused on verified liveness
-        with pytest.raises(RuntimeError, match="VERIFIED ALIVE"):
-            AI.release_stale_maintenance_lock(root_, max_age_sec=0.0)
-        info = AI.maintenance_lock_info(root_)
-        seen["before"], seen["during"] = before, info["heartbeat_utc"]
-        # the lease math a CROSS-host operator would apply: the last
-        # heartbeat is fresh (age well under any sane max_age_sec),
-        # not the job-start stamp — the r14 blind spot closed
-        age = (
-            AI.datetime.now(AI.timezone.utc)
-            - AI.datetime.fromisoformat(info["heartbeat_utc"])
-        ).total_seconds()
-        seen["age"] = age
-        return real_rewrite(spark_, root_, to_do, tmp_root)
-
-    monkeypatch.setattr(AI, "_rewrite_cells", slow_rewrite)
-    expected = _manifest_reader_rows(spark, idx)
-    res = AI.compact_ann_index(spark, idx, heartbeat_interval_sec=0.05)
-    assert res["cells_compacted"] > 0
-    assert seen["during"] > seen["before"], seen
-    assert seen["age"] < 1.5, seen
-    assert _manifest_reader_rows(spark, idx) == expected
-    assert not (root / AI.MAINT_LOCK).exists()
-
-
-def test_compaction_aborts_on_lease_ownership_loss(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r14 #1 (the split-brain half): if the lease is lost
-    mid-rewrite — an operator force-released the lock and a SECOND
-    maintainer acquired it — the first compactor must abort BEFORE
-    its commit point (zero pending manifest, zero epoch commits) and
-    must NOT release the new owner's lock on the way out."""
-    import json as _json
-
-    corpus, idx = _seeded_multi_file_index(spark, tmp_path)
-    root = AI.Path(idx)
-    expected = _manifest_reader_rows(spark, idx)
-    e0 = int(AI._load_current(root)["epoch"])
-    real_rewrite = AI._rewrite_cells
-
-    def hijacked_rewrite(spark_, root_, to_do, tmp_root):
-        real_rewrite(spark_, root_, to_do, tmp_root)
-        # operator force-release + a second maintainer's acquire,
-        # landing while the first compactor's job was running
-        (root_ / AI.MAINT_LOCK).write_text(
-            _json.dumps({
-                "pid": 1,
-                "host": "second-maintainer-host",
-                "acquired_utc": "2026-01-01T00:00:00+00:00",
-                "heartbeat_utc": "2026-01-01T00:00:00+00:00",
-            })
-        )
-
-    monkeypatch.setattr(AI, "_rewrite_cells", hijacked_rewrite)
-    # raised by the main-thread ownership-verifying heartbeat that
-    # opens the commit sequence, or (if a background tick noticed
-    # first) by the hb.check() wrapper — both before any commit
-    with pytest.raises(
-        RuntimeError, match="ownership lost|heartbeat failed"
-    ):
-        AI.compact_ann_index(spark, idx)
-    monkeypatch.setattr(AI, "_rewrite_cells", real_rewrite)
-    # zero commits: no pending manifest, epoch unmoved, rows intact
-    assert not (root / AI.PENDING_NAME).exists()
-    assert int(AI._load_current(root)["epoch"]) == e0
-    assert _manifest_reader_rows(spark, idx) == expected
-    # the new owner's lock survived the aborting compactor's finally
-    info = AI.maintenance_lock_info(root)
-    assert info and info["pid"] == 1
-    assert info["host"] == "second-maintainer-host"
-    # recovery: the (dead) second maintainer's lock is releasable by
-    # the lease, and a clean rerun compacts normally
-    AI.release_stale_maintenance_lock(root, max_age_sec=3600)
-    res = AI.compact_ann_index(spark, idx)
-    assert res["cells_compacted"] > 0 and res["epochs_committed"] == 1
-    assert _manifest_reader_rows(spark, idx) == expected
-
-
-def test_heartbeat_lock_refuses_without_metadata_or_lock(tmp_path):
-    """ADVICE r14 'wrong #2': a heartbeat against a metadata-less lock
-    must refuse rather than blind-rewrite it with only heartbeat_utc
-    (which would strip release_stale_maintenance_lock's same-host
-    liveness check); a heartbeat against a MISSING lock means the
-    lease was lost and must raise too."""
-    root = AI.Path(tmp_path)
-    (root / AI.MAINT_LOCK).write_text("")
-    with pytest.raises(RuntimeError, match="no owner metadata"):
-        AI._heartbeat_lock(root)
-    assert (root / AI.MAINT_LOCK).read_text() == ""  # preserved
-    (root / AI.MAINT_LOCK).unlink()
-    with pytest.raises(RuntimeError, match="no longer exists"):
-        AI._heartbeat_lock(root)
-    # and a lock someone else owns is never heartbeat-rewritten
-    import json as _json
-
-    (root / AI.MAINT_LOCK).write_text(
-        _json.dumps({"pid": 1, "host": "elsewhere"})
-    )
-    with pytest.raises(RuntimeError, match="ownership lost"):
-        AI._heartbeat_lock(root)
-    assert AI.maintenance_lock_info(root)["pid"] == 1
-    # _release_owned_lock leaves a foreign lock in place
-    AI._release_owned_lock(root)
-    assert (root / AI.MAINT_LOCK).exists()
 
 
 def test_refresh_index_view_and_auto_refresh(spark, tmp_path):
@@ -1962,8 +1511,10 @@ def test_empty_manifest_resolves_empty_not_retired(spark, tmp_path):
     ]
     AI._commit_current(
         root,
-        {},
-        retired=[{"epoch": int(cur["epoch"]) + 1, "files": all_files}],
+        lambda prev: {
+            "files": {},
+            "retired": [{"epoch": int(prev["epoch"]) + 1, "files": all_files}],
+        },
     )
     assert spark.read.parquet(idx).count() == 80  # retired bytes exist
     assert AI._read_index(spark, idx).count() == 0
@@ -1974,42 +1525,6 @@ def test_empty_manifest_resolves_empty_not_retired(spark, tmp_path):
     assert AI.register_index_view(spark, idx, "rv_empty") == epoch
     assert spark.table("rv_empty").count() == 0
     AI.drop_index_view(spark, "rv_empty")
-
-
-def test_vacuum_lease_covers_reclaim_loop(spark, tmp_path, monkeypatch):
-    """The reclaim loop (O(retired files) of unlinks — minutes at
-    real retention scopes) carries the same background lease refresh
-    as compaction's rewrite: during a slowed reclaim the lock's
-    heartbeat stays fresh, so an age-based release can never yank a
-    live vacuum; and the ledger commit opens with an ownership-
-    verifying heartbeat."""
-    import time as _time
-
-    corpus, idx = _seeded_multi_file_index(spark, tmp_path)
-    root = AI.Path(idx)
-    AI.compact_ann_index(spark, idx, vacuum_grace=True)
-    expected = _manifest_reader_rows(spark, idx)
-    real_load_epoch = AI._load_epoch
-    seen = {}
-
-    def slow_load_epoch(r, epoch):
-        # called once per retired entry when keep_age_sec is set —
-        # the injection point inside the reclaim loop
-        before = AI.maintenance_lock_info(root)["heartbeat_utc"]
-        _time.sleep(1.3)  # heartbeat timespec is seconds
-        info = AI.maintenance_lock_info(root)
-        seen["before"], seen["during"] = before, info["heartbeat_utc"]
-        return real_load_epoch(r, epoch)
-
-    monkeypatch.setattr(AI, "_load_epoch", slow_load_epoch)
-    out = AI.vacuum_ann_index(
-        idx, keep_epochs=0, keep_age_sec=0.0, heartbeat_interval_sec=0.05
-    )
-    monkeypatch.setattr(AI, "_load_epoch", real_load_epoch)
-    assert out["files_removed"] > 0
-    assert seen["during"] > seen["before"], seen
-    assert _manifest_reader_rows(spark, idx) == expected
-    assert not (root / AI.MAINT_LOCK).exists()
 
 
 def test_auto_refresh_failure_drops_pin_not_commit(spark, tmp_path):
@@ -2049,108 +1564,7 @@ def test_auto_refresh_failure_drops_pin_not_commit(spark, tmp_path):
     spark.catalog.dropTempView("rv_broken")
 
 
-def _stage_committed_pending(spark, tmp_path, monkeypatch):
-    """Seed an index and crash a compaction at its first add-move,
-    leaving a committed pending manifest for replay tests."""
-    corpus, idx = _seeded_multi_file_index(spark, tmp_path)
-    root = AI.Path(idx)
-    crash = _CrashAtSite(AI.os.replace, "move", 1)
-    monkeypatch.setattr(AI.os, "replace", crash)
-    with pytest.raises(RuntimeError, match="injected"):
-        AI.compact_ann_index(spark, idx)
-    monkeypatch.setattr(AI.os, "replace", crash.real)
-    assert (root / AI.PENDING_NAME).exists()
-    return idx, root
-
-
-def test_apply_lease_tick_keeps_heartbeat_fresh(spark, tmp_path, monkeypatch):
-    """The apply/replay path (moves + O(manifest files) unlinks — the
-    same minutes-at-scale class as the rewrite and reclaim loops)
-    carries its own lease tick: during a slowed replay the lock's
-    heartbeat stays fresh."""
-    import time as _time
-
-    idx, root = _stage_committed_pending(spark, tmp_path, monkeypatch)
-    expected = _manifest_reader_rows(spark, idx)
-    AI._acquire_maintenance_lock(root)
-    real_load = AI._load_current
-    seen = {}
-
-    def slow_load(r):
-        if "during" not in seen:
-            before = AI.maintenance_lock_info(root)["heartbeat_utc"]
-            _time.sleep(1.3)
-            seen["before"] = before
-            seen["during"] = AI.maintenance_lock_info(root)["heartbeat_utc"]
-        return real_load(r)
-
-    monkeypatch.setattr(AI, "_load_current", slow_load)
-    try:
-        AI._apply_compaction(
-            root,
-            AI.json.loads((root / AI.PENDING_NAME).read_text()),
-            heartbeat_interval_sec=0.05,
-        )
-    finally:
-        monkeypatch.setattr(AI, "_load_current", real_load)
-        AI._release_maintenance_lock(root)
-    assert seen["during"] > seen["before"], seen
-    assert _manifest_reader_rows(spark, idx) == expected
-    assert not (root / AI.PENDING_NAME).exists()
-
-
-def test_apply_rolls_forward_despite_lease_loss(spark, tmp_path, monkeypatch):
-    """Best-effort semantics past the commit point: a lease lost
-    MID-APPLY must not abort the roll-forward — the manifest is
-    committed and idempotent, so the apply completes (a racing second
-    replayer would recompute the identical state); contrast with the
-    pre-commit phases, which abort with zero commits."""
-    import json as _json
-    import time as _time
-
-    idx, root = _stage_committed_pending(spark, tmp_path, monkeypatch)
-    expected = _manifest_reader_rows(spark, idx)
-    AI._acquire_maintenance_lock(root)
-    real_load = AI._load_current
-    hijacked = {}
-
-    def hijack_load(r):
-        if not hijacked:
-            (root / AI.MAINT_LOCK).write_text(
-                _json.dumps({"pid": 1, "host": "other-host"})
-            )
-            hijacked["done"] = True
-            _time.sleep(0.3)  # give the tick a chance to notice
-        return real_load(r)
-
-    monkeypatch.setattr(AI, "_load_current", hijack_load)
-    try:
-        AI._apply_compaction(  # must NOT raise
-            root,
-            AI.json.loads((root / AI.PENDING_NAME).read_text()),
-            heartbeat_interval_sec=0.05,
-        )
-    finally:
-        monkeypatch.setattr(AI, "_load_current", real_load)
-        AI._release_maintenance_lock(root)
-    assert _manifest_reader_rows(spark, idx) == expected
-    assert not (root / AI.PENDING_NAME).exists()
-
-
 # ---- r16: ADVICE closures + view-pin lifecycle ---------------------
-
-
-def test_epochs_committed_counts_replay(spark, tmp_path, monkeypatch):
-    """ADVICE r15 #4: a compact call that first replays a dead
-    maintainer's pending manifest commits an epoch for the replay —
-    epochs_committed must equal the measured epoch delta, replay
-    included, not just the fresh compaction's count."""
-    idx, root = _stage_committed_pending(spark, tmp_path, monkeypatch)
-    e0 = int(AI._load_current(root)["epoch"])
-    res = AI.compact_ann_index(spark, idx)
-    e1 = int(AI._load_current(root)["epoch"])
-    assert res["epochs_committed"] == e1 - e0
-    assert res["epochs_committed"] >= 1  # the replay itself committed
 
 
 def test_vacuum_tolerates_already_unlinked_retired(spark, tmp_path):
@@ -2190,8 +1604,10 @@ def test_empty_manifest_resolves_after_physical_vacuum(spark, tmp_path):
     ]
     AI._commit_current(
         root,
-        {},
-        retired=[{"epoch": int(cur["epoch"]) + 1, "files": all_files}],
+        lambda prev: {
+            "files": {},
+            "retired": [{"epoch": int(prev["epoch"]) + 1, "files": all_files}],
+        },
     )
     AI.vacuum_ann_index(idx, keep_epochs=0)  # physically reclaim all
     assert not list(root.glob("cell=*/*.parquet"))
@@ -2201,51 +1617,6 @@ def test_empty_manifest_resolves_after_physical_vacuum(spark, tmp_path):
     ):
         assert df.count() == 0
         assert df.columns == ["vec_id", "norm", "embedding", "codes", "cell"]
-
-
-def test_heartbeat_refuses_on_foreign_token(tmp_path):
-    """ADVICE r15 #1 (fencing token): a lock naming THIS pid/host but
-    carrying a different acquire-generation token — a recycled pid,
-    or a force-release + re-acquire — must refuse the heartbeat and
-    survive _release_owned_lock; pre-r16 token-less locks keep the
-    pid/host-only contract."""
-    import json as _json
-    import os as _os
-    import socket as _socket
-
-    root = AI.Path(tmp_path)
-    body = {
-        "pid": _os.getpid(),
-        "host": _socket.gethostname(),
-        "acquired_utc": "2020-01-01T00:00:00+00:00",
-        "heartbeat_utc": "2020-01-01T00:00:00+00:00",
-        "token": "not-this-acquires-token",
-    }
-    (root / AI.MAINT_LOCK).write_text(_json.dumps(body))
-    with pytest.raises(RuntimeError, match="token"):
-        AI._heartbeat_lock(root)
-    AI._release_owned_lock(root)  # foreign token: left in place
-    assert (root / AI.MAINT_LOCK).exists()
-    # token-less (pre-r16) lock: pid/host contract still applies
-    del body["token"]
-    (root / AI.MAINT_LOCK).write_text(_json.dumps(body))
-    AI._heartbeat_lock(root)  # must not raise
-    AI._release_owned_lock(root)
-    assert not (root / AI.MAINT_LOCK).exists()
-
-
-def test_acquire_release_roundtrips_token(tmp_path):
-    """The normal lifecycle: acquire writes the fencing token, the
-    heartbeat verifies it, the owned release removes the lock and
-    forgets the token."""
-    root = AI.Path(tmp_path)
-    AI._acquire_maintenance_lock(root)
-    key = str(root.resolve())
-    assert AI.maintenance_lock_info(root)["token"] == AI._LOCK_TOKENS[key]
-    AI._heartbeat_lock(root)  # token matches: refresh succeeds
-    AI._release_owned_lock(root)
-    assert not (root / AI.MAINT_LOCK).exists()
-    assert key not in AI._LOCK_TOKENS
 
 
 def test_view_pin_dropped_when_session_collected(spark, tmp_path):
@@ -2299,61 +1670,76 @@ def test_drop_index_view_detaches_finalizer(spark, tmp_path):
     assert not fin.alive
 
 
-# ---- r16: single-appender lease (VERDICT r15 #2) --------------------
+# ---- put-if-absent epoch commits: concurrent writers ---------------
 
 
-def test_append_refuses_while_appender_lease_held(spark, tmp_path):
-    """A second appender must refuse while the lease is held — the
-    single-writer contract enforced mechanically instead of by
-    docstring."""
-    corpus, idx = _seeded_multi_file_index(spark, tmp_path)
-    root = AI.Path(idx)
-    with AI._appender_lease(root):
-        batch = _synth_embeddings(spark, range(5000, 5010), shift=3)
-        with pytest.raises(RuntimeError, match="another appender"):
-            AI.append_ann_index(spark, batch, idx)
-        with pytest.raises(RuntimeError, match="another appender"):
-            AI.ann_index_stream_writer(idx)(batch, 41)
-    assert not (root / AI.APPEND_LOCK).exists()  # exit released it
-    AI.append_ann_index(spark, batch, idx)  # and appends resume
+def _commit_worker(idx, w):
+    """One of the multi-process committers (module level, so the
+    spawn start method can pickle it by name)."""
+    for i in range(25):
+        AI._commit_current(
+            AI.Path(idx), AI._adding({f"cell={i % 4}": [f"w{w}-{i}.parquet"]})
+        )
 
 
-def test_maintenance_refuses_while_appender_lease_held(spark, tmp_path):
-    """Maintainer side of the handshake: compaction/vacuum under the
-    maintenance lock must refuse while a LIVE appender holds the
-    lease (a dead owner's lease is ignored — and reclaimed by the
-    next appender)."""
-    corpus, idx = _seeded_multi_file_index(spark, tmp_path)
-    root = AI.Path(idx)
-    with AI._appender_lease(root):
-        with pytest.raises(RuntimeError, match="appender holds"):
-            AI.compact_ann_index(spark, idx)
-        with pytest.raises(RuntimeError, match="appender holds"):
-            AI.vacuum_ann_index(idx)
-    assert not (root / AI.MAINT_LOCK).exists()  # aborts released it
-    AI.compact_ann_index(spark, idx)  # lease gone: maintenance runs
+def test_put_if_absent_commits_from_four_processes(tmp_path):
+    """The commit point itself, no Spark: four processes commit 25
+    epochs each with distinct adds. Every put that loses a race
+    rebases onto the winner, so the epochs are contiguous 1..101 and
+    the final epoch names every add exactly once — no commit is lost
+    to a read-modify-write race."""
+    import multiprocessing
+
+    root = tmp_path / "idx"
+    root.mkdir()
+    AI._commit_current(root, lambda prev: {"files": {"cell=0": ["seed.parquet"]}})
+    ctx = multiprocessing.get_context("spawn")
+    procs = [
+        ctx.Process(target=_commit_worker, args=(str(root), w)) for w in range(4)
+    ]
+    for p in procs:
+        p.start()
+    for p in procs:
+        p.join(300)
+    assert [p.exitcode for p in procs] == [0] * 4
+    assert AI.index_epochs(str(root)) == list(range(1, 102))
+    assert sorted(f.name for f in (root / AI.EPOCHS_DIR).glob("epoch-*.json")) == [
+        f"epoch-{n:08d}.json" for n in range(1, 102)
+    ]
+    names = [n for v in AI._load_current(root)["files"].values() for n in v]
+    assert sorted(names) == sorted(
+        ["seed.parquet"] + [f"w{w}-{i}.parquet" for w in range(4) for i in range(25)]
+    )
 
 
-def test_concurrent_appenders_exactly_one_wins_no_loss(spark, tmp_path):
-    """Two appenders racing the same index: one commits, the other
-    refuses on the lease; retrying the loser lands its batch too —
-    no batch lost, no duplicate ids (the VERDICT r15 #2 done
-    clause)."""
+def test_concurrent_appenders_both_commit_no_loss(spark, tmp_path, monkeypatch):
+    """Two appenders racing the same index: both derive their epoch
+    from the same predecessor, one put wins, the other collides and
+    rebases onto the winner — both batches land, no duplicate ids."""
     import threading
 
     corpus, idx = _seeded_multi_file_index(spark, tmp_path)
+    root = AI.Path(idx)
     before = len(_manifest_reader_rows(spark, idx))
-    gate = threading.Barrier(2, timeout=30)
-    real_meta = AI.load_meta
+    e0 = int(AI._load_current(root)["epoch"])
+    real = AI._commit_current
+    gate = threading.Barrier(2, timeout=120)
+    prevs = []
 
-    def slow_meta(d):
-        gate.wait()  # both threads inside their append attempt
-        import time as _t
+    def commit(r, step):
+        attempts = []
 
-        _t.sleep(0.3)  # hold the lease long enough to overlap
-        return real_meta(d)
+        def synced(prev):
+            prevs.append(int(prev["epoch"]))
+            attempts.append(prev)
+            out = step(prev)
+            if len(attempts) == 1:
+                gate.wait()  # both appenders hold a step on one epoch
+            return out
 
-    AI.load_meta = slow_meta
+        return real(r, synced)
+
+    monkeypatch.setattr(AI, "_commit_current", commit)
     errors: list[BaseException] = []
 
     def run(lo):
@@ -2364,101 +1750,181 @@ def test_concurrent_appenders_exactly_one_wins_no_loss(spark, tmp_path):
         except BaseException as exc:  # noqa: BLE001
             errors.append(exc)
 
-    try:
-        # one thread reaches slow_meta (lease held), the other hits
-        # the lease before the barrier would release it — so release
-        # the barrier from the loser's refusal instead: run the
-        # loser's attempt AFTER the winner is provably inside
-        t1 = threading.Thread(target=run, args=(6000,))
-        t1.start()
-        gate.wait()  # winner is inside its lease now
-        run_err_before = len(errors)
-        run(6100)  # second appender: must refuse on the lease
-        assert len(errors) == run_err_before + 1
-        assert "another appender" in str(errors[-1])
-        t1.join(timeout=120)
-        assert not t1.is_alive()
-    finally:
-        AI.load_meta = real_meta
-    assert len(errors) == 1  # the winner committed
-    # retry the loser — both batches land exactly once
-    AI.append_ann_index(
-        spark, _synth_embeddings(spark, range(6100, 6110), shift=3), idx
-    )
+    threads = [threading.Thread(target=run, args=(lo,)) for lo in (6000, 6100)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(300)
+    monkeypatch.setattr(AI, "_commit_current", real)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert sorted(prevs) == [e0, e0, e0 + 1]  # one collision, one rebase
+    assert int(AI._load_current(root)["epoch"]) == e0 + 2
     after = _manifest_reader_rows(spark, idx)
     assert len(after) == before + 20
     assert len({v for v, _ in after}) == len(after)  # no dup vec_ids
 
 
-def test_dead_appender_lease_auto_reclaimed(spark, tmp_path):
-    """A crashed appender's lease (provably-dead pid on this host)
-    must not brick ingest: the next acquire claims it atomically and
-    proceeds."""
-    import json as _json
-    import socket as _socket
-    import subprocess
+def test_append_racing_compaction_rebases_no_loss(spark, tmp_path, monkeypatch):
+    """An append and a compaction racing on one index, in two threads:
+    the compaction derives its epoch from the pre-append snapshot, the
+    append then takes that epoch number, and the compaction's put
+    collides — it rebases onto the append's epoch (every file it
+    replaces is still live) instead of overwriting it. Every row lands
+    once, and a second compaction folds the appended files in."""
+    import threading
 
     corpus, idx = _seeded_multi_file_index(spark, tmp_path)
     root = AI.Path(idx)
-    p = subprocess.Popen(["true"])  # a pid that has provably exited
-    p.wait()
-    (root / AI.APPEND_LOCK).write_text(
-        _json.dumps({
-            "pid": p.pid,
-            "host": _socket.gethostname(),
-            "acquired_utc": "2020-01-01T00:00:00+00:00",
-        })
+    before = _manifest_reader_rows(spark, idx)
+    e0 = int(AI._load_current(root)["epoch"])
+    real = AI._commit_current
+    stepped, appended = threading.Event(), threading.Event()
+    seen = []
+
+    def commit(r, step):
+        if threading.current_thread().name == "appender":
+            stepped.wait(120)  # the compaction has derived its epoch
+            out = real(r, step)
+            appended.set()
+            return out
+
+        def step_then_yield(prev):
+            seen.append(int(prev["epoch"]))
+            out = step(prev)
+            stepped.set()
+            appended.wait(120)  # ...and the append takes its number
+            return out
+
+        return real(r, step_then_yield)
+
+    monkeypatch.setattr(AI, "_commit_current", commit)
+    errors: list[BaseException] = []
+    batch = _synth_embeddings(spark, range(7000, 7030), shift=3)
+
+    def run(fn):
+        try:
+            fn()
+        except BaseException as exc:  # noqa: BLE001
+            errors.append(exc)
+            stepped.set()
+            appended.set()
+
+    threads = [
+        threading.Thread(
+            name="appender",
+            target=run,
+            args=(lambda: AI.append_ann_index(spark, batch, idx),),
+        ),
+        threading.Thread(
+            name="compactor",
+            target=run,
+            args=(lambda: AI.compact_ann_index(spark, idx),),
+        ),
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(300)
+    monkeypatch.setattr(AI, "_commit_current", real)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert seen == [e0, e0 + 1]  # collided once, rebased onto the append
+    assert int(AI._load_current(root)["epoch"]) == e0 + 2
+    after = _manifest_reader_rows(spark, idx)
+    assert len(after) == len(before) + 30
+    assert len({v for v, _ in after}) == len(after)
+    AI.compact_ann_index(spark, idx)
+    assert _manifest_reader_rows(spark, idx) == after
+    scans = AI.executed_scan_metrics(
+        AI.index_probe_exact(spark, corpus, nprobe=S.NPROBE, idx_dir=idx)
     )
+    assert scans[0]["num_files"] == S.NPROBE, scans
+
+
+def _named_and_on_disk(root):
+    cur = AI._load_current(root)
+    named = {f"{c}/{n}" for c, v in cur["files"].items() for n in v}
+    on_disk = {f"{f.parent.name}/{f.name}" for f in root.glob("cell=*/*.parquet")}
+    return named, on_disk
+
+
+def test_compaction_aborts_when_its_deletes_are_gone(spark, tmp_path, monkeypatch):
+    """A compaction whose input files a rival compaction replaced
+    first cannot rebase: it unlinks its own compacted files and
+    raises, committing nothing — the rival's epoch stands, the disk
+    holds exactly what it names, every row once."""
+    corpus, idx = _seeded_multi_file_index(spark, tmp_path)
+    root = AI.Path(idx)
+    expected = _manifest_reader_rows(spark, idx)
+    e0 = int(AI._load_current(root)["epoch"])
+    real = AI._commit_current
+
+    def rival_first(r, step):
+        monkeypatch.setattr(AI, "_commit_current", real)
+        assert AI.compact_ann_index(spark, idx)["epochs_committed"] == 1
+        return real(r, step)
+
+    monkeypatch.setattr(AI, "_commit_current", rival_first)
+    with pytest.raises(RuntimeError, match="concurrent compaction"):
+        AI.compact_ann_index(spark, idx)
+    assert int(AI._load_current(root)["epoch"]) == e0 + 1
+    named, on_disk = _named_and_on_disk(root)
+    assert on_disk == named
+    assert _manifest_reader_rows(spark, idx) == expected
+
+
+def test_uncommitted_files_never_fold_into_later_epochs(
+    spark, tmp_path, monkeypatch
+):
+    """Files a crashed writer landed but never committed stay out of
+    every later epoch: a compaction crashed at its epoch put leaves
+    ``compact-*`` files a later append does not pick up; a stream
+    batch crashed at its put leaves ``b5-*`` files a compaction does
+    not fold in, and its replay lands it once. Vacuum reclaims such
+    files (and stale ``_staging`` dirs) only with ``keep_age_sec`` set,
+    and only once they are that old."""
+    corpus, idx = _seeded_multi_file_index(spark, tmp_path)
+    root = AI.Path(idx)
+    expected = _manifest_reader_rows(spark, idx)
+
+    def crash_at_put(fn):
+        crash = _CrashAtSite.patch(monkeypatch, "history")
+        with pytest.raises(RuntimeError, match="injected"):
+            fn()
+        monkeypatch.setattr(AI.os, crash.fn, crash.real)
+
+    crash_at_put(lambda: AI.compact_ann_index(spark, idx))
     AI.append_ann_index(
-        spark, _synth_embeddings(spark, range(6200, 6210), shift=3), idx
-    )  # reclaims and proceeds
-    assert not (root / AI.APPEND_LOCK).exists()
-
-
-def test_release_stale_append_lock_contract(tmp_path):
-    """Alive same-host owner: refuse. Dead pid: release. Other-host
-    within age lease: refuse; past it: release. force: release."""
-    import json as _json
-    import os as _os
-    import socket as _socket
-    import subprocess
-
-    root = AI.Path(tmp_path)
-    with pytest.raises(RuntimeError, match="no _append.lock"):
-        AI.release_stale_append_lock(root)
-    # alive owner (this process) refuses
-    (root / AI.APPEND_LOCK).write_text(
-        _json.dumps({"pid": _os.getpid(), "host": _socket.gethostname()})
+        spark, _synth_embeddings(spark, range(7000, 7020), shift=3), idx
     )
-    with pytest.raises(RuntimeError, match="VERIFIED ALIVE"):
-        AI.release_stale_append_lock(root, max_age_sec=0.0)
-    AI.release_stale_append_lock(root, force=True)
-    # dead pid releases without force
-    p = subprocess.Popen(["true"])
-    p.wait()
-    (root / AI.APPEND_LOCK).write_text(
-        _json.dumps({"pid": p.pid, "host": _socket.gethostname()})
-    )
-    info = AI.release_stale_append_lock(root)
-    assert info["pid"] == p.pid
-    # other host: age lease applies from acquired_utc
-    (root / AI.APPEND_LOCK).write_text(
-        _json.dumps({
-            "pid": 1,
-            "host": "some-other-host",
-            "acquired_utc": AI.datetime.now(AI.timezone.utc).isoformat(
-                timespec="seconds"
-            ),
-        })
-    )
-    with pytest.raises(RuntimeError, match="not provably dead"):
-        AI.release_stale_append_lock(root, max_age_sec=3600)
-    (root / AI.APPEND_LOCK).write_text(
-        _json.dumps({
-            "pid": 1,
-            "host": "some-other-host",
-            "acquired_utc": "2020-01-01T00:00:00+00:00",
-        })
-    )
-    AI.release_stale_append_lock(root, max_age_sec=3600)
-    assert not (root / AI.APPEND_LOCK).exists()
+    after_append = _manifest_reader_rows(spark, idx)
+    assert len(after_append) == len(expected) + 20
+    assert len({v for v, _ in after_append}) == len(after_append)
+    batch = _synth_embeddings(spark, range(8000, 8020), shift=3)
+    crash_at_put(lambda: AI.ann_index_stream_writer(idx)(batch, 5))
+    AI.compact_ann_index(spark, idx)
+    assert _manifest_reader_rows(spark, idx) == after_append
+    AI.ann_index_stream_writer(idx)(batch, 5)  # the replay
+    final = _manifest_reader_rows(spark, idx)
+    assert len(final) == len(after_append) + 20
+    assert len({v for v, _ in final}) == len(final)
+    # the crashed compaction's files: named by no epoch, kept until
+    # they are keep_age_sec old
+    named, on_disk = _named_and_on_disk(root)
+    orphans = on_disk - named
+    assert orphans and all(o.split("/")[1].startswith("compact-") for o in orphans)
+    assert AI.vacuum_ann_index(idx)["files_removed"] == 0
+    assert AI.vacuum_ann_index(idx, keep_age_sec=3600)["files_removed"] == 0
+    for o in orphans:
+        AI.os.utime(root / o, (0, 0))
+    # a hard-killed writer's staging dir goes by the same age rule
+    stale = root / AI.STAGING_DIR / "append-killed"
+    stale.mkdir(parents=True)
+    AI.os.utime(stale, (0, 0))
+    out = AI.vacuum_ann_index(idx, keep_age_sec=3600)
+    assert out["files_removed"] == len(orphans)
+    assert not stale.exists()
+    named, on_disk = _named_and_on_disk(root)
+    assert on_disk == named
+    assert _manifest_reader_rows(spark, idx) == final

@@ -86,7 +86,7 @@ def test_oversized_file_falls_back(spark, sf_dir, monkeypatch):
 FOOTER_READS = {
     "footer": lambda spark, d: plan_policy.footer(f"{d}/embeddings.parquet"),
     "table_rows": lambda spark, d: plan_policy.table_rows(d, "embeddings"),
-    "init_cents": lambda spark, d: S._init_cents_from_parquet(d),
+    "init_cents": lambda spark, d: S._init_cents(load(spark, d, "embeddings")),
     "id_range_rows": lambda spark, d: S._id_range_rows(
         load(spark, d, "embeddings"), S.N_CENTROIDS
     ),
@@ -103,7 +103,7 @@ def _copy(sf_dir: str, tmp_path: Path, truncate: bool) -> str:
     return str(d)
 
 
-@pytest.mark.parametrize("read", ["footer", "table_rows", "init_cents"])
+@pytest.mark.parametrize("read", ["footer", "table_rows"])
 def test_truncated_file_degrades_to_none(spark, sf_dir, tmp_path, read):
     assert FOOTER_READS[read](spark, _copy(sf_dir, tmp_path, truncate=True)) is None
 
