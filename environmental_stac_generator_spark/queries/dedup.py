@@ -691,23 +691,24 @@ def _components_driver(pairs: DataFrame) -> DataFrame:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo  # min stays root → root == component min
     id_type = pairs.schema["doc_a"].dataType
+    import pyarrow as pa
     from pyspark.sql.types import StructField, StructType
 
     schema = StructType(
         [StructField("doc_id", id_type), StructField("cluster_id", id_type)]
     )
-    data = [(x, find(x)) for x in sorted(nodes)]
+    ids = sorted(nodes)
     spark = pairs.sparkSession
-    # bounded slice count: the default parallelize spreads a
-    # <=DRIVER_CC_PAIRS-row result over defaultParallelism slices, so
-    # every downstream job (the orderBy's range sample, the sort, the
-    # sink) schedules a full task wave for a few thousand rows; ~64k
-    # rows per slice keeps task count proportional to the data (r16)
+    # bounded slice count: the result is <=DRIVER_CC_PAIRS rows, and a
+    # full task wave per downstream job (the orderBy's range sample,
+    # the sort, the sink) for a few thousand rows is pure scheduling;
+    # ~64k rows per slice keeps task count proportional to the data
+    # (r16). The rows ship as one Arrow table: a Python row list or
+    # RDD converts in the RDD path's own Python worker pool.
     slices = max(1, min(spark.sparkContext.defaultParallelism,
-                        len(data) // 65_536 + 1))
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(data, slices), schema
-    )
+                        len(ids) // 65_536 + 1))
+    table = pa.table({"doc_id": ids, "cluster_id": [find(x) for x in ids]})
+    return spark.createDataFrame(table, schema).coalesce(slices)
 
 
 def _components_label(

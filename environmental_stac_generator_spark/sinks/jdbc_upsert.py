@@ -9,8 +9,11 @@ flaw (SURVEY §3.2). Here:
   the skip decision is a distributed broadcast anti-join;
 - inserts go through ``df.write.jdbc`` (append);
 - upserts build ``INSERT ... ON CONFLICT (keys) DO UPDATE`` executed
-  in ``foreachPartition`` (the JDBC writer has no MERGE), batched per
-  partition — N_partitions round trips total, not N_rows;
+  in a ``mapInArrow`` operator (the JDBC writer has no MERGE), batched
+  per partition — N_partitions round trips total, not N_rows. The
+  operator shares the Python worker pool of the scan and raster
+  sinks; the RDD path's ``foreachPartition`` would fork a second
+  ``pyspark.daemon``;
 - FK ordering preserved: collections before items
   (ref ``stac/dataloader.py:173-189``).
 
@@ -91,7 +94,7 @@ def sqlite_connection_factory(dsn: str):
     """Embedded ON CONFLICT engine for tests/dev: sqlite3 (qmark
     paramstyle) speaks the identical ``INSERT ... ON CONFLICT (keys)
     DO UPDATE SET c = EXCLUDED.c`` dialect as Postgres (since SQLite
-    3.24), so the REAL ``upsert_partition`` path — batching, conflict
+    3.24), so the REAL ``upsert_dataframe`` path — batching, conflict
     resolution, FK ordering — executes against a live database in
     stock pytest. ``dsn`` is the database file path. The long timeout
     serializes concurrent partition writers on the file lock."""
@@ -119,43 +122,42 @@ def upsert_dataframe(
     psycopg against live pgSTAC in production, sqlite3 in the
     embedded test lane. At most N_non_empty_partitions round trips —
     empty partitions (common when shuffle partitions exceed row
-    count) never open a connection. Returns the number of rows
-    written (accumulator-counted on the same execution, so callers
-    don't pay a separate .count() recomputation of the plan)."""
-    from itertools import chain
+    count) never open a connection. Each partition commits once and
+    yields one row counting what it wrote; the driver's sum of those
+    rows is the return value, so callers pay no separate ``.count()``
+    recomputation of the plan.
 
+    Values bind as Arrow's Python natives: a ``timestamp`` column
+    binds tz-aware ``datetime`` values in the session time zone (a
+    ``Row`` bound naive local ones)."""
     columns = df.columns
     sql = build_upsert_sql(
         table, columns, key_columns, _PARAMSTYLE_PLACEHOLDER[paramstyle]
     )
-    written = df.sparkSession.sparkContext.accumulator(0)
 
-    def upsert_partition(rows: Iterator) -> None:
-        first = next(rows, None)
-        if first is None:
-            return  # empty partition: no connection round trip
-        # resolve column POSITIONS once: Row["name"] does a linear
-        # __fields__ scan per cell, O(n_cols²) per row in the hot loop
-        idx = [first.__fields__.index(c) for c in columns]
-        conn = connection_factory(dsn)
+    def upsert_partition(batches: Iterator) -> Iterator:
+        import pyarrow as pa
+
+        conn, written = None, 0
         try:
-            cur = conn.cursor()
-            batch = []
-            for row in chain([first], rows):
-                batch.append(tuple(row[i] for i in idx))
-                if len(batch) >= batch_size:
-                    cur.executemany(sql, batch)
-                    written.add(len(batch))
-                    batch.clear()
-            if batch:
-                cur.executemany(sql, batch)
-                written.add(len(batch))
-            conn.commit()
+            for batch in batches:
+                for off in range(0, batch.num_rows, batch_size):
+                    chunk = batch.slice(off, batch_size)
+                    if conn is None:  # empty partition: no round trip
+                        conn = connection_factory(dsn)
+                        cur = conn.cursor()
+                    values = [chunk.column(c).to_pylist() for c in columns]
+                    cur.executemany(sql, list(zip(*values)))
+                    written += chunk.num_rows
+            if conn is not None:
+                conn.commit()
         finally:
-            conn.close()
+            if conn is not None:
+                conn.close()
+        yield pa.RecordBatch.from_pydict({"n": [written]})
 
-    df.foreachPartition(upsert_partition)
-    return written.value
+    counts = df.mapInArrow(upsert_partition, "n long").collect()
+    return sum(r["n"] for r in counts)
 
 
 def ingest_catalog(
@@ -204,7 +206,7 @@ def ingest_catalog(
         items.write.jdbc(jdbc_url, "items", mode="append", properties=properties)
         counts = {"collections": coll_obs.get["n"], "items": item_obs.get["n"]}
     else:
-        # counts come from the upsert's own accumulator — a separate
+        # counts come from the upsert's own partition rows — a separate
         # .count() would execute every source plan a second time (the
         # double-execution the non-overwrite branch's observe() note
         # calls out), and could disagree with the rows actually

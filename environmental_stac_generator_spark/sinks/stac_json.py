@@ -9,10 +9,13 @@ them out as
     out_dir/<collection_id>/collection.json
     out_dir/<collection_id>/<item_id>/<item_id>.json
 
-Items are written partition-parallel via ``foreachPartition`` (one
-tiny JSON per item — at 100 TB of rasters the catalog is still only
-~1 row per item, so this is the cheap part); the few collection
-documents and the catalog root are driver-side writes.
+Items are written partition-parallel by a ``mapInArrow`` operator
+that yields no rows, run by ``collect()`` (one tiny JSON per item —
+at 100 TB of rasters the catalog is still only ~1 row per item, so
+this is the cheap part). The operator runs in the same Python worker
+pool as the scan and raster sinks; the RDD path's ``foreachPartition``
+would fork a second ``pyspark.daemon`` with its own workers. The few
+collection documents and the catalog root are driver-side writes.
 """
 
 from __future__ import annotations
@@ -50,13 +53,17 @@ def save_items(items_json: DataFrame, out_dir: str | Path) -> None:
     need the all-or-nothing guarantee most)."""
     out = str(out_dir)
 
-    def write_partition(rows) -> None:
-        for row in rows:
-            d = Path(out) / row["collection_id"] / row["item_id"]
-            d.mkdir(parents=True, exist_ok=True)
-            _atomic_write_text(d / f"{row['item_id']}.json", row["json"])
+    def write_partition(batches):
+        for batch in batches:
+            for row in batch.to_pylist():
+                d = Path(out) / row["collection_id"] / row["item_id"]
+                d.mkdir(parents=True, exist_ok=True)
+                _atomic_write_text(d / f"{row['item_id']}.json", row["json"])
+        yield from ()  # a sink: the operator emits no rows
 
-    items_json.foreachPartition(write_partition)
+    items_json.select("collection_id", "item_id", "json").mapInArrow(
+        write_partition, "n long"
+    ).collect()
 
 
 def _merge_collection_doc(old: dict, new: dict) -> dict:

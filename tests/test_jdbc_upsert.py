@@ -168,12 +168,12 @@ def test_fk_order_items_before_collections_fails(spark, stac_db):
     """The reference loads collections before items because the FK
     demands it (stac/dataloader.py:173-189); the embedded engine
     enforces the same constraint, so writing items first is an error."""
-    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PythonException
 
     items = spark.createDataFrame(
         [("i1", "nope", "v")], "id string, collection string, payload string"
     ).coalesce(1)
-    with pytest.raises(Py4JJavaError):
+    with pytest.raises(PythonException, match="FOREIGN KEY constraint failed"):
         upsert_dataframe(
             items, stac_db, "items", ["id", "collection"],
             connection_factory=sqlite_connection_factory, paramstyle="qmark",
@@ -238,3 +238,79 @@ def test_ingest_catalog_dedups_incoming_keys(spark, stac_db):
         ("i1", "c1"),
         ("i2", "c2"),
     ]
+
+
+def test_upsert_empty_partitions_open_no_connection(spark, stac_db, tmp_path):
+    """Eight partitions, seven of them empty: the exact row count comes
+    back from the partitions' count rows, and only the one non-empty
+    partition opens a connection."""
+    marks = tmp_path / "connections"
+    marks.mkdir()
+
+    def counting_factory(dsn):
+        import uuid
+
+        (marks / uuid.uuid4().hex).touch()
+        return sqlite_connection_factory(dsn)
+
+    upsert_dataframe(
+        spark.createDataFrame([("c1", "t")], "id string, title string"),
+        stac_db, "collections", ["id"],
+        connection_factory=sqlite_connection_factory, paramstyle="qmark",
+    )
+    items = (
+        spark.createDataFrame(
+            [(f"i{n}", "c1", f"v{n}") for n in range(25)],
+            "id string, collection string, payload string",
+        )
+        .repartition(8, "collection")  # one key: one non-empty partition
+    )
+    assert items.rdd.getNumPartitions() == 8
+    n = upsert_dataframe(
+        items, stac_db, "items", ["id", "collection"], batch_size=4,
+        connection_factory=counting_factory, paramstyle="qmark",
+    )
+    assert n == 25
+    assert len(list(marks.iterdir())) == 1
+    assert len(_rows(stac_db, "SELECT id FROM items")) == 25
+
+
+def test_upsert_binds_timestamps_as_utc_aware_datetimes(spark, tmp_path):
+    """Arrow hands the upsert tz-aware datetimes in the session time
+    zone (UTC here), not the naive local ones a ``Row`` carried; a
+    psycopg bind of such a value is a ``timestamptz``."""
+    import datetime as dt
+    import pickle
+
+    log = str(tmp_path / "bound.pkl")
+
+    def recording_factory(dsn):
+        class Recorder:  # DB-API stand-in that keeps what each row binds
+            def cursor(self):
+                return self
+
+            def executemany(self, sql, rows):
+                with open(log, "ab") as f:
+                    pickle.dump(list(rows), f)
+
+            def commit(self):
+                pass
+
+            def close(self):
+                pass
+
+        return Recorder()
+
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    df = spark.sql(
+        "SELECT 'k' AS id, TIMESTAMP'2024-01-01 12:00:00' AS ts"
+    ).coalesce(1)
+    upsert_dataframe(
+        df, "unused", "t", ["id"],
+        connection_factory=recording_factory, paramstyle="qmark",
+    )
+    with open(log, "rb") as f:
+        [(key, ts)] = pickle.load(f)
+    assert key == "k"
+    assert ts == dt.datetime(2024, 1, 1, 12, tzinfo=dt.timezone.utc)
+    assert ts.utcoffset() == dt.timedelta(0)

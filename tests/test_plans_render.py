@@ -74,3 +74,27 @@ def test_plans_ann_block_matches_committed_artifact():
         "PLANS.md ann-index block drifted from the committed artifact — "
         "run `python tools/plan_audit.py --render-soak`"
     )
+
+
+def test_ann_block_renders_put_if_absent_soak_keys(tmp_path):
+    """A soak artifact written since the put-if-absent epoch commits
+    carries the crash/rebase guard keys, not the lock protocol's: the
+    compaction line renders them and no guard reads as ``None``."""
+    import json
+
+    pa = _plan_audit()
+    legacy = {
+        "guard_fired_inflight", "lock_released_after_refusal",
+        "pending_after_crash", "guard_fired_pending", "ledger_replay_sec",
+        "writer_refused_under_lock",
+    }
+    r15 = json.loads((REPO / "SOAK_r15.json").read_text())["ann_compaction_ingest"]
+    ci = {k: v for k, v in r15.items() if k not in legacy}
+    ci.update(crashed_batch_invisible=True, replay_sec=0.42, append_rebased=True)
+    soak = tmp_path / "SOAK_r99.json"
+    soak.write_text(json.dumps({"ann_compaction_ingest": ci}))
+    block = pa.render_ann_block(soak)
+    assert "None" not in block
+    assert "crashed batch invisible **True**" in block
+    assert "append rebased **True**" in block
+    assert "replay **0.42 s**" in block

@@ -451,6 +451,21 @@ def render_ann_block(soak_path: Path | None = None) -> str:
             )
     ci = doc.get("ann_compaction_ingest") or {}
     if ci.get("probe_adc_sec_fresh") is not None:
+        # r15 artifacts carry the lock protocol's guards; since the
+        # put-if-absent epoch commits the soak writes the crash and
+        # rebase facts instead
+        guards_txt = (
+            f"guards: crashed batch invisible "
+            f"**{ci['crashed_batch_invisible']}**, mid-compaction "
+            f"append rebased **{ci.get('append_rebased')}**; "
+            f"replay **{ci.get('replay_sec')} s**"
+            if "crashed_batch_invisible" in ci
+            else f"guards fired: in-flight "
+            f"staging **{ci.get('guard_fired_inflight')}**, pending "
+            f"ledger **{ci.get('guard_fired_pending')}**, writer under "
+            f"maintenance lock **{ci.get('writer_refused_under_lock')}**; "
+            f"ledger replay **{ci.get('ledger_replay_sec')} s**"
+        )
         lines.append(
             f"- compaction + 2PC ingest at 10x ({ci['n_batches']} "
             f"stream micro-batches of {ci['batch_rows']} rows): "
@@ -463,11 +478,7 @@ def render_ann_block(soak_path: Path | None = None) -> str:
             f"{ci['probe_adc_sec_compacted']} s** with executed "
             f"numFiles **{ci['probe_files_fresh']} → "
             f"{ci['probe_files_inflated']} → "
-            f"{ci['probe_files_compacted']}**; guards fired: in-flight "
-            f"staging **{ci.get('guard_fired_inflight')}**, pending "
-            f"ledger **{ci.get('guard_fired_pending')}**, writer under "
-            f"maintenance lock **{ci.get('writer_refused_under_lock')}**; "
-            f"ledger replay **{ci.get('ledger_replay_sec')} s**; "
+            f"{ci['probe_files_compacted']}**; {guards_txt}; "
             f"exactly-once: **{ci.get('rows_total')}/"
             f"{ci.get('rows_expected')}** rows, "
             f"**{ci.get('duplicate_vec_ids')}** duplicate ids"
