@@ -31,12 +31,12 @@ def entry(spark: SparkSession) -> DataFrame:
 def _drain_then(fn: Callable) -> Callable:
     """Release the PREVIOUS query's tracked cache pins before building
     the next one. Some registry queries persist a multi-consumed
-    relation (dedup.bucket_pairs, skew_report) whose pin can only be
-    released AFTER the caller's action; a long-lived external loop
-    (the correctness driver collects all 50 in one session) would
-    otherwise accumulate one corpus-sized pin per query with nothing
-    draining them (ADVICE r6). Draining on next-entry bounds the
-    outstanding pins to a single query's."""
+    relation (dedup.bucket_pairs, similarity.embedding_near_dup) whose
+    pin can only be released AFTER the caller's action; a long-lived
+    external loop (the correctness driver collects all 50 in one
+    session) would otherwise accumulate one corpus-sized pin per query
+    with nothing draining them (ADVICE r6). Draining on next-entry
+    bounds the outstanding pins to a single query's."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
         from environmental_stac_generator_spark.operators.lineage import (

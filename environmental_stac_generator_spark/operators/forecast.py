@@ -16,35 +16,6 @@ from pyspark.sql import Column, DataFrame
 ISO_FMT = "yyyy-MM-dd'T'HH:mm:ss'Z'"
 FNAME_FMT = "yyyy-MM-dd'T'HH-mm-ss'Z'"
 
-# P8/F16: units that mean "kilometres" — ONE definition, shared with
-# the scan-side conversion (ref stac/generator.py:549-552)
-from environmental_stac_generator_spark.sources.netcdf import KM_UNITS  # noqa: E402
-
-
-def convert_units(df: DataFrame, x_units: Column | str, y_units: Column | str) -> DataFrame:
-    """km / '1000 meter' coordinates -> metres (x1000), else pass
-    through (ref ``stac/generator.py:533-553``)."""
-    xu = F.col(x_units) if isinstance(x_units, str) else x_units
-    yu = F.col(y_units) if isinstance(y_units, str) else y_units
-    return df.withColumn(
-        "xc", F.when(xu.isin(*KM_UNITS), F.col("xc") * 1000).otherwise(F.col("xc"))
-    ).withColumn(
-        "yc", F.when(yu.isin(*KM_UNITS), F.col("yc") * 1000).otherwise(F.col("yc"))
-    )
-
-
-def hemisphere_expr(lat_min: Column | str) -> Column:
-    """[0,90] -> north, [-90,0) -> south, NULL -> '' (missing attr),
-    else 'invalid' — the reference raises on invalid
-    (ref ``utils.py:47-82``)."""
-    lat = F.col(lat_min) if isinstance(lat_min, str) else lat_min
-    return (
-        F.when(lat.isNull(), "")
-        .when(lat.between(0, 90), "north")
-        .when((lat >= -90) & (lat < 0), "south")
-        .otherwise("invalid")
-    )
-
 
 def nan_to_null(col: Column | str) -> Column:
     """NaN -> NULL so built-in aggregates reproduce numpy's

@@ -25,7 +25,7 @@ transforms.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 
 # (partial_expr, final_expr) per supported aggregate: partial runs on
 # (keys + salt), final re-combines partials on the true keys.
@@ -211,53 +211,3 @@ def blocked_self_pairs(
             for c in payload
         ],
     )
-
-
-def skew_report(df: DataFrame, keys: list[str], top: int = 10) -> DataFrame:
-    """Diagnose key skew before choosing a remedy: per-key counts in
-    one shuffle, then the tiny count table re-aggregates into a
-    single summary row — total rows, distinct keys, the max/mean key
-    population, a skew factor (max/mean; >> 1 means one reducer owns
-    the job), the share of rows held by the hottest key, and the
-    ``top`` hottest keys with counts. Feed the skew factor into
-    ``n_salt`` for :func:`salted_agg` / :func:`salted_join` (a key
-    ``s``× the mean wants ~``s`` salts to level its reducers)."""
-    from environmental_stac_generator_spark.operators.lineage import (
-        persist_tracked,
-    )
-
-    # pinned: the summary aggregate and the hottest top-k are two
-    # independent actions over this groupBy — unpinned, each re-runs
-    # the full input scan + per-key shuffle, doubling the cost of a
-    # diagnostic that should be cheap (releasable via the tracked
-    # registry, same pattern as bucket_pairs)
-    counts = persist_tracked(df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n")))
-    key_repr = F.concat_ws("|", *[F.col(k).cast("string") for k in keys])
-    summary = counts.agg(
-        F.sum("n").alias("total_rows"),
-        F.count(F.lit(1)).alias("distinct_keys"),
-        F.max("n").alias("max_key_rows"),
-        (F.sum("n") / F.count(F.lit(1))).alias("mean_key_rows"),
-        (F.max("n") * F.count(F.lit(1)) / F.sum("n")).alias("skew_factor"),
-        (F.max("n") / F.sum("n")).alias("top_key_share"),
-    )
-    # the hottest keys come from a TakeOrdered limit, NOT a
-    # collect_list over every distinct key — at 10^8 distinct keys a
-    # single aggregate row holding them all is the one-hot-reducer
-    # pattern this module exists to avoid; only `top` structs ever
-    # reach one task here (sort_array on <= top entries restores the
-    # descending order the limit selected by). Boundary ties at the
-    # limit break by key DESCENDING — the same order sort_array's
-    # struct compare emits, so the selected set and the displayed
-    # order always agree.
-    hottest = (
-        counts.orderBy(F.desc("n"), F.desc(key_repr))
-        .limit(top)
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("n"), key_repr.alias("key"))),
-                asc=False,
-            ).alias("hottest")
-        )
-    )
-    return summary.crossJoin(F.broadcast(hottest))

@@ -17,9 +17,10 @@ item count, never with cells:
 
 With the summary hash-partitioned by :data:`ITEM_KEYS`, steps 1 and 2
 run without a shuffle. The documents are ``to_json`` projections of
-the item and collection rows. Get-or-create is a left-anti + union
-(J1/J2/W3) and the extent update an aggregate merge (J8): both
-order-independent, unlike the reference's first-wins mutation.
+the item and collection rows. A re-run merges each collection into
+its stored document (``sinks.stac_json._merge_collection_doc``, J8);
+the registry's ``get_or_create_collections`` and ``extent_merge``
+state J1/J2 and J8 as relational queries.
 """
 
 from __future__ import annotations
@@ -75,40 +76,6 @@ def title_case(col: Column | str) -> Column:
         F.upper(F.substring(c, 1, 1)), F.lower(F.substring(c, 2, 1 << 30))
     )
     return F.translate(capitalized, "_-", "  ")
-
-
-def merge_collections(existing: DataFrame, new: DataFrame) -> DataFrame:
-    """J1 + J8: keep existing metadata (first writer wins on
-    title/description), merge temporal extents as [min(starts),
-    max(ends)] (ref ``stac/generator.py:175-207``)."""
-    meta_cols = [c for c in existing.columns if c not in ("extent_start", "extent_end")]
-    # ONE union feeds both derivations — a second union of the same
-    # inputs for the extents aggregate would scan both relations twice
-    tagged = existing.withColumn("_rank", F.lit(0)).unionByName(
-        new.select(*existing.columns).withColumn("_rank", F.lit(1))
-    )
-    w = Window.partitionBy("collection_id").orderBy("_rank")
-    meta = (
-        tagged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(*meta_cols)
-    )
-    extents = tagged.groupBy("collection_id").agg(
-        F.min("extent_start").alias("extent_start"),
-        F.max("extent_end").alias("extent_end"),
-    )
-    return meta.join(extents, "collection_id")
-
-
-def merge_items(existing: DataFrame, new: DataFrame) -> DataFrame:
-    """J2: composite-key get-or-create — existing items never
-    replaced (ref ``stac/generator.py:243-261``)."""
-    created = new.join(
-        existing.select("collection_id", "item_id"),
-        ["collection_id", "item_id"],
-        "left_anti",
-    )
-    return existing.unionByName(created.select(*existing.columns))
 
 
 def served_href(href: Column, file_server_url: str | None) -> Column:

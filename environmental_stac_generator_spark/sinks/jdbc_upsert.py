@@ -222,19 +222,3 @@ def ingest_catalog(
         )
         counts = {"collections": n_coll, "items": n_items}
     return counts
-
-
-def wait_for_sink(probe, retries: int = 30, delay_s: float = 10.0) -> bool:
-    """T5: retry/backoff loop around sink availability
-    (ref ``wait_for_api``, ``stac/dataloader.py:196-221``)."""
-    import time
-
-    for attempt in range(retries):
-        try:
-            if probe():
-                return True
-        except Exception:
-            pass
-        if attempt < retries - 1:
-            time.sleep(delay_s)
-    return False

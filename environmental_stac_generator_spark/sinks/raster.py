@@ -34,7 +34,6 @@ from pathlib import Path
 
 import numpy as np
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BooleanType,
@@ -544,9 +543,9 @@ def encode_cogs(
     result DataFrame (path, dims, checksum, skipped) — the input to
     asset assembly.
 
-    Skip-existing (P9/J6): with ``overwrite=False``, groups whose
-    output file already exists return ``skipped=True`` without
-    encoding.
+    Skip-existing (P9/J6): with ``overwrite=False``, each group checks
+    ``cog_path.exists()`` and, when its output file is already there,
+    returns ``skipped=True`` without encoding.
     """
     _check_leadtime_resolution(leadtime_unit, leadtime_step)
     out = str(out_dir)
@@ -703,28 +702,4 @@ def write_netcdf_slices(
 
     return grids_df.groupBy("collection", "forecast_reference_time").applyInPandas(
         encode_group, schema=NETCDF_RESULT_SCHEMA
-    )
-
-
-def skip_existing_outputs(planned: DataFrame, out_dir: str | Path, spark) -> DataFrame:
-    """J6: anti-join planned output paths against a distributed
-    listing of what already exists (ref ``stac/generator.py:906-907``).
-    A missing output dir (the very first run — nothing to skip) passes
-    ``planned`` through unchanged instead of failing the load."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(str(out_dir))
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return planned
-    existing = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(str(out_dir))
-        .select(F.col("path").alias("_existing_path"))
-    )
-    # unhinted: the existing-output listing grows with the catalog;
-    # AQE runtime-sizes the anti-join
-    return planned.join(
-        existing,
-        planned["path"] == F.regexp_replace("_existing_path", "^file:", ""),
-        "left_anti",
     )

@@ -334,17 +334,6 @@ def scan_netcdf_metadata(
     return files.select(*cols).mapInPandas(extract, schema=FILE_META_SCHEMA)
 
 
-def list_files(spark: SparkSession, path: str, glob: str = "*.nc") -> DataFrame:
-    """S2 file/glob discovery as a distributed listing with sizes —
-    also feeds A5 (directory size sum) and J6 (skip-existing)."""
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("path", "length", "modificationTime")
-    )
-
-
 GRID_SCHEMA = (
     "collection string, path string, forecast_reference_time timestamp, "
     "leadtime_idx int, variable string, ny int, nx int, "

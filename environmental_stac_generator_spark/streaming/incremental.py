@@ -6,9 +6,9 @@ catalog and skip existing outputs (``stac/generator.py:111-142``,
 
 - T1 incremental source: file stream over the landing directory (new
   daily forecast files appear, ref README.md:3);
-- T2 stateful running extent: streaming groupBy min/max per
-  collection — Spark keeps the state store, replacing the
-  reference's read-modify-write of the catalog JSON;
+- T2 stateful running extent: ``windows.stateful_running_extent``
+  keeps min/max/count per collection in the state store, replacing
+  the reference's read-modify-write of the catalog JSON;
 - T3 idempotent sink: ``foreachBatch`` + key-based anti-join merge
   into a parquet "catalog table" — exactly-once under retries
   because the merge is keyed, mirroring ON CONFLICT semantics;
@@ -24,7 +24,6 @@ from __future__ import annotations
 
 from pathlib import Path
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
@@ -38,17 +37,6 @@ def stream_source(
         .schema(schema)
         .option("maxFilesPerTrigger", 64)
         .load(str(landing_dir))
-    )
-
-
-def running_extent(stream_df: DataFrame) -> DataFrame:
-    """T2: stateful min/max extent per collection (complete-mode agg).
-    No watermark by design (T4): any past init time updates the
-    extent, as in the reference's extent merge
-    (``stac/generator.py:191-207``)."""
-    return stream_df.groupBy("collection").agg(
-        F.min("forecast_reference_time").alias("extent_start"),
-        F.max("forecast_reference_time").alias("extent_end"),
     )
 
 

@@ -62,10 +62,9 @@ def windowed_event_counts(
 def merge_extent(
     prior: tuple | None, pdfs: Iterator[pd.DataFrame]
 ) -> tuple:
-    """ONE implementation of the per-collection extent merge shared by
-    both stateful APIs (3.x applyInPandasWithState here, 4.x
-    transformWithState in ``stateful.py`` — the NaT-freeze guard
-    previously had to be fixed in two near-identical copies).
+    """The per-collection extent merge behind
+    :func:`stateful_running_extent`'s ``applyInPandasWithState``
+    state function.
 
     ``prior`` is the stored (start, end, n) or None; returns the
     merged (start, end, n) with None bounds normalized. Guards: a

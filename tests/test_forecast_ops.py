@@ -40,22 +40,6 @@ def long_df(spark):
     return spark.createDataFrame(pdf)
 
 
-def test_convert_units_km(spark):
-    # ref test_convert_units (test_generator.py:135-160): km & "1000
-    # meter" coords x1000
-    df = spark.createDataFrame(
-        [(1.0, 4.0, "km", "1000 meter"), (2.0, 5.0, "km", "1000 meter"),
-         (3.0, 6.0, "km", "1000 meter")],
-        "xc double, yc double, xu string, yu string",
-    )
-    out = fc.convert_units(df, "xu", "yu").orderBy("xc").collect()
-    assert [r["xc"] for r in out] == [1000.0, 2000.0, 3000.0]
-    assert [r["yc"] for r in out] == [4000.0, 5000.0, 6000.0]
-    # "m" passes through
-    df2 = spark.createDataFrame([(1.0, 4.0, "m", "m")], "xc double, yc double, xu string, yu string")
-    assert fc.convert_units(df2, "xu", "yu").first()["xc"] == 1.0
-
-
 def test_bbox_and_geometry(long_df):
     # ref test_get_bbox_and_geometry_epsg4326 (test_generator.py:163-196)
     out = fc.geometry_json(fc.bbox(long_df)).first()
@@ -66,15 +50,6 @@ def test_bbox_and_geometry(long_df):
     assert geom["type"] == "Polygon"
     assert geom["coordinates"][0][0] == [10.0, 40.0]
     assert len(geom["coordinates"][0]) == 5
-
-
-def test_hemisphere_expr(spark):
-    # ref get_hemisphere branches (utils.py:47-82)
-    df = spark.createDataFrame(
-        [(30.98,), (-90.0,), (0.0,), (None,), (95.0,)], "lat double"
-    )
-    out = [r[0] for r in df.select(fc.hemisphere_expr("lat")).collect()]
-    assert out == ["north", "south", "north", "", "invalid"]
 
 
 def test_band_statistics_matches_numpy(long_df):

@@ -7,7 +7,6 @@ import pytest
 from environmental_stac_generator_spark.sinks.jdbc_upsert import (
     build_upsert_sql,
     skip_existing,
-    wait_for_sink,
 )
 
 
@@ -46,18 +45,6 @@ def test_skip_existing_anti_join(spark):
     )
     out = skip_existing(incoming, existing, ["id", "collection"])
     assert sorted(r["id"] for r in out.collect()) == [1, 3, 5, 7, 9]
-
-
-def test_wait_for_sink_retries():
-    calls = []
-
-    def probe():
-        calls.append(1)
-        return len(calls) >= 3
-
-    assert wait_for_sink(probe, retries=5, delay_s=0.0)
-    assert len(calls) == 3
-    assert not wait_for_sink(lambda: False, retries=2, delay_s=0.0)
 
 
 # ---------------------------------------------------------------------------

@@ -40,8 +40,15 @@ def test_scan_is_deterministic(spark, landing):
 
 
 def test_glob_filter_excludes_non_nc(spark, landing):
-    files = netcdf.list_files(spark, str(landing))
-    assert files.count() == 3
+    """The pipeline's S2 discovery: the grid scan reads only ``*.nc``,
+    so ``ignore.txt`` in the landing dir yields no rows."""
+    grids = netcdf.scan_netcdf_grids(
+        spark, str(landing), decoder=netcdf.fake_decoder()
+    )
+    paths = sorted(r["path"] for r in grids.select("path").distinct().collect())
+    assert [p.rsplit("/", 1)[-1] for p in paths] == [
+        f"fc.2025-01-0{i + 1}.nc" for i in range(3)
+    ]
 
 
 def test_metadata_scan(spark, landing):
@@ -96,7 +103,8 @@ def test_scan_netcdf_matches_decoder_chunks(spark, tmp_path):
     dec = netcdf.fake_decoder(grid=8, n_lead=2)
     cols = netcdf.LONG_SCHEMA.fieldNames()
     keys = ["forecast_reference_time", "leadtime_idx", "variable", "yc", "xc"]
-    (path,) = [r["path"] for r in netcdf.list_files(spark, str(landing)).collect()]
+    # binaryFile's path form, which the scan hands the decoder
+    (path,) = [f"file:{p}" for p in sorted(landing.glob("*.nc"))]
     want = pd.concat(list(dec(path, None)), ignore_index=True)[cols]
     want["forecast_reference_time"] = want["forecast_reference_time"].astype(
         "datetime64[ns]"

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import struct
 import zlib
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
@@ -26,11 +27,13 @@ def grids(spark, tmp_path_factory):
     ).persist()
 
 
-def _decoded(spark, src: str, dec) -> pd.DataFrame:
-    """The decoder's own chunks for every listed file, concatenated:
-    the reference the sinks are checked against, built without the
-    scan or the sinks."""
-    paths = sorted(r["path"] for r in netcdf.list_files(spark, src).collect())
+def _decoded(src: str, dec) -> pd.DataFrame:
+    """The decoder's own chunks for every ``*.nc`` file under the
+    ``src`` glob, concatenated: the reference the sinks are checked
+    against, built without the scan or the sinks. Paths take
+    binaryFile's ``file:`` form, which the scan hands the decoder."""
+    src = Path(src)
+    paths = [f"file:{p}" for p in sorted(src.parent.glob(f"{src.name}/*.nc"))]
     return pd.concat([c for p in paths for c in dec(p, None)], ignore_index=True)
 
 
@@ -129,7 +132,7 @@ def test_cog_bytes_match_decoder_reference(spark, tmp_path):
     descending, xc ascending)."""
     src = _two_collection_landing(tmp_path / "grid_landing")
     dec = netcdf.fake_decoder(grid=8, n_lead=3)
-    cells = _decoded(spark, src, dec)
+    cells = _decoded(src, dec)
     grids = netcdf.scan_netcdf_grids(spark, src, decoder=dec)
     res = raster.encode_cogs(grids, tmp_path / "out").collect()
     got = {
@@ -151,7 +154,7 @@ def test_netcdf_slice_bytes_match_decoder_reference(spark, tmp_path):
     sorted by (variable, leadtime, yc, xc)."""
     src = _two_collection_landing(tmp_path / "ncg")
     dec = netcdf.fake_decoder(grid=8, n_lead=3)
-    cells = _decoded(spark, src, dec)
+    cells = _decoded(src, dec)
     got = {
         r["collection"]: open(r["path"], "rb").read()
         for r in raster.write_netcdf_slices(
@@ -277,23 +280,6 @@ def test_valid_time_matches_relativedelta_semantics():
         _valid_time(ref, 1, "months", 0.5)
     # fractional smaller units stay exact durations
     assert _valid_time(ref, 3, "hours", 0.5) == ref + pd.Timedelta(hours=1.5)
-
-
-def test_skip_existing_outputs_missing_dir_passes_through(spark, tmp_path):
-    """First run: no output dir yet — the planned frame must pass
-    through unchanged instead of failing the binaryFile load."""
-    import pyspark.sql.functions as F
-
-    from environmental_stac_generator_spark.sinks.raster import (
-        skip_existing_outputs,
-    )
-
-    planned = spark.range(3).select(
-        F.concat(F.lit(str(tmp_path / "missing_out/cogs/f")), F.col("id"))
-        .alias("path")
-    )
-    out = skip_existing_outputs(planned, tmp_path / "missing_out", spark)
-    assert out.count() == 3
 
 
 def test_sub_minute_leadtime_step_rejected(spark, tmp_path):

@@ -67,43 +67,6 @@ def test_salted_join_matches_plain_join(spark):
     )
 
 
-def test_skew_report_diagnoses_hot_key(spark, sf_dir):
-    from environmental_stac_generator_spark.operators.skew import skew_report
-    from environmental_stac_generator_spark.tables import load
-
-    li = load(spark, sf_dir, "lineitem").select("l_returnflag")
-    r = skew_report(li, ["l_returnflag"], top=2).collect()[0]
-    assert r["total_rows"] == li.count()
-    assert r["distinct_keys"] == li.distinct().count()
-    assert r["max_key_rows"] >= r["mean_key_rows"]
-    assert abs(r["skew_factor"] - r["max_key_rows"] / r["mean_key_rows"]) < 1e-9
-    assert 0 < r["top_key_share"] <= 1
-    # hottest list is (count, key) descending and matches groupBy truth
-    import pyspark.sql.functions as F
-
-    truth = (
-        li.groupBy("l_returnflag").count()
-        .orderBy(F.desc("count"), "l_returnflag").collect()
-    )
-    assert [(h["n"], h["key"]) for h in r["hottest"]][0] == (
-        truth[0]["count"], truth[0]["l_returnflag"]
-    )
-    assert len(r["hottest"]) == 2
-
-
-def test_skew_report_boundary_ties_break_key_descending(spark):
-    """When several keys tie on count at the top-N boundary, the
-    selected set and displayed order are both (n desc, key desc) —
-    the limit's tiebreak must match sort_array's struct compare so
-    the set shown is the set selected."""
-    from environmental_stac_generator_spark.operators.skew import skew_report
-
-    rows = [(k,) for k in ("a", "b", "c", "d") for _ in range(5)]
-    df = spark.createDataFrame(rows, "key string")
-    r = skew_report(df, ["key"], top=2).collect()[0]
-    assert [(h["n"], h["key"]) for h in r["hottest"]] == [(5, "d"), (5, "c")]
-
-
 def test_salted_agg_null_semantics_match_unsalted(spark):
     """avg/count must follow SQL null-skipping exactly like the
     unsalted plan: count(col) counts non-null values, avg divides by

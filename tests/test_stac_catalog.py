@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import json
 
-import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
@@ -44,20 +43,6 @@ def test_build_collections(summary):
     assert len(r["bbox"]) == 4
 
 
-def test_merge_collections_extent(spark, catalog):
-    import pyspark.sql.functions as F
-
-    base = catalog["collections"]
-    newer = base.withColumn("extent_end", F.expr("extent_end + INTERVAL 30 DAY")).withColumn(
-        "title", F.lit("SHOULD_NOT_WIN")
-    )
-    merged = sc.merge_collections(base, newer).collect()[0]
-    assert merged["title"] != "SHOULD_NOT_WIN"  # existing metadata wins (J1)
-    base_row = base.collect()[0]
-    assert merged["extent_start"] == base_row["extent_start"]
-    assert merged["extent_end"] == base_row["extent_end"] + pd.Timedelta(days=30)  # J8
-
-
 def test_build_items_and_merge(long_df, catalog):
     items = catalog["items"]
     rows = items.collect()
@@ -67,8 +52,6 @@ def test_build_items_and_merge(long_df, catalog):
     assert r["item_id"].endswith("Z")
     # forecast:end_time = ref + (nlead-1) days (ref generator.py:680-682)
     assert r["forecast_end_time_str"] > r["forecast_reference_time_str"]
-    # merge: re-adding the same items creates nothing (J2)
-    assert sc.merge_items(items, items).count() == len(rows)
 
 
 def test_cog_assets_band_meta(catalog):

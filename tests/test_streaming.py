@@ -84,26 +84,6 @@ def test_incremental_merge_null_keys_idempotent(spark, tmp_path):
     assert out.filter("item_id IS NULL").count() == 1
 
 
-def test_running_extent_stream(spark, tmp_path):
-    landing = tmp_path / "landing2"
-    t1 = pd.Timestamp("2025-01-01").to_pydatetime()
-    t2 = pd.Timestamp("2025-03-01").to_pydatetime()
-    _write_batch(spark, landing, [("icenet", "a", t1), ("icenet", "b", t2)])
-    stream = incremental.stream_source(spark, landing, SCHEMA)
-    extent = incremental.running_extent(stream)
-    q = (
-        extent.writeStream.format("memory")
-        .queryName("extent_tbl")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    row = spark.sql("SELECT * FROM extent_tbl").first()
-    assert row["extent_start"] == pd.Timestamp("2025-01-01")
-    assert row["extent_end"] == pd.Timestamp("2025-03-01")
-
-
 def test_windowed_event_counts_with_watermark(spark, tmp_path):
     from environmental_stac_generator_spark.streaming import windows as sw
 
@@ -227,115 +207,6 @@ def test_dedup_stream_exactly_once(spark, tmp_path):
     assert len({r["event_id"] for r in out}) == 100
 
 
-def test_stateful_running_extent_transform_with_state(spark, tmp_path):
-    """T2 on the Spark 4.x transformWithState API: same incremental
-    extent semantics as the applyInPandasWithState form, with typed
-    ValueState on a RocksDB store. The operator's Python protocol
-    needs protobuf (not shipped in this container) — skips where
-    absent, live coverage where installed."""
-    pytest.importorskip("google.protobuf")
-    from environmental_stac_generator_spark.streaming import stateful as st
-
-    provider_before = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    landing = tmp_path / "tws_landing"
-    t1 = pd.Timestamp("2025-01-01").to_pydatetime()
-    t2 = pd.Timestamp("2025-03-01").to_pydatetime()
-    _write_batch(spark, landing, [("icenet", "a", t1), ("icenet", "b", t2),
-                                  ("osisaf", "c", t2)])
-    collected: list = []
-
-    def run_once():
-        stream = incremental.stream_source(spark, landing, SCHEMA)
-        q = (
-            st.stateful_running_extent_tws(stream)
-            .writeStream.foreachBatch(
-                lambda bdf, bid: collected.extend(bdf.collect())
-            )
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    try:
-        run_once()
-        rows = {r["collection"]: r for r in collected}
-        assert rows["icenet"]["extent_start"] == pd.Timestamp("2025-01-01")
-        assert rows["icenet"]["extent_end"] == pd.Timestamp("2025-03-01")
-        assert rows["icenet"]["n_items"] == 2
-        assert rows["osisaf"]["n_items"] == 1
-
-        # state survives restart via the checkpoint: a new earlier file
-        # extends the stored extent incrementally
-        t0 = pd.Timestamp("2024-06-01").to_pydatetime()
-        _write_batch(spark, landing, [("icenet", "d", t0)])
-        collected.clear()
-        run_once()
-        rows2 = {r["collection"]: r for r in collected}
-        assert rows2["icenet"]["extent_start"] == pd.Timestamp("2024-06-01")
-        assert rows2["icenet"]["n_items"] == 3
-    finally:
-        if provider_before is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", provider_before
-            )
-
-
-def test_extent_processor_skips_nat_chunks():
-    """ADVICE r4: an all-NaT (or empty) chunk must not write NaT into
-    ValueState — NaT comparisons are always False, so a poisoned state
-    would freeze the extent forever. Drive handleInputRows directly
-    with a fake state handle (the TWS lane is env-gated)."""
-    import pandas as pd
-
-    from environmental_stac_generator_spark.streaming.stateful import (
-        ExtentProcessor,
-    )
-
-    class FakeState:
-        def __init__(self):
-            self.v = None
-
-        def exists(self):
-            return self.v is not None
-
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-    p = ExtentProcessor()
-    p._extent = FakeState()
-    nat_chunk = pd.DataFrame(
-        {"forecast_reference_time": pd.to_datetime([None, None])}
-    )
-    out = list(p.handleInputRows(("c",), iter([nat_chunk]), None))
-    start, end, n = p._extent.v
-    assert start is None and end is None, "NaT must not poison bounds"
-    assert n == 2, "rows before the first valid ts still count"
-    assert out[0]["n_items"].iloc[0] == 2
-
-    good = pd.DataFrame(
-        {"forecast_reference_time": pd.to_datetime(["2024-01-02", "2024-01-05"])}
-    )
-    list(p.handleInputRows(("c",), iter([good]), None))
-    start, end, n = p._extent.v
-    assert start == pd.Timestamp("2024-01-02") and end == pd.Timestamp("2024-01-05")
-    assert n == 4, "count carries across the count-only state"
-
-    # a later NaT chunk keeps the recovered extent and counts rows
-    list(p.handleInputRows(("c",), iter([nat_chunk]), None))
-    start, end, n = p._extent.v
-    assert start == pd.Timestamp("2024-01-02") and end == pd.Timestamp("2024-01-05")
-    assert n == 6
-
-
 def test_merge_raises_on_schema_drift_instead_of_wiping(spark, tmp_path):
     """A failure mid-merge (e.g. schema drift in unionByName) must
     RAISE, never fall through to an overwrite that replaces the whole
@@ -384,9 +255,9 @@ def test_merge_dedups_keys_within_a_batch(spark, tmp_path):
 
 
 def test_extent_state_fn_skips_nat_and_keeps_count():
-    """The applyInPandasWithState twin must carry the same NaT guard
-    as ExtentProcessor: null-timestamp rows count but never poison
-    the stored bounds, regardless of arrival order."""
+    """The applyInPandasWithState state function's NaT guard:
+    null-timestamp rows count but never poison the stored bounds,
+    regardless of arrival order."""
     from environmental_stac_generator_spark.streaming.windows import (
         _extent_state_fn,
     )

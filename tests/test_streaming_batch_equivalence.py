@@ -8,9 +8,9 @@ equals the one-shot batch aggregate over all rows. This is the
 SQL-expressible check the driver's rows-only `streaming_suite` entry
 cannot perform.
 
-Covered: T2 running extent (both the agg form and the
-applyInPandasWithState form), T4 watermarked tumbling and sliding
-windows, and the streaming exact-dedup twin.
+Covered: T2 running extent (the applyInPandasWithState form), T4
+watermarked tumbling and sliding windows, and the streaming
+exact-dedup twin.
 """
 
 from __future__ import annotations
@@ -18,7 +18,7 @@ from __future__ import annotations
 import pandas as pd
 import pyspark.sql.functions as F
 
-from environmental_stac_generator_spark.streaming import incremental, windows as sw
+from environmental_stac_generator_spark.streaming import windows as sw
 
 EV_SCHEMA = "ts timestamp, event_type string, value double"
 ITEM_SCHEMA = "collection string, item_id string, forecast_reference_time timestamp"
@@ -132,20 +132,6 @@ def _batch_extent(spark):
             F.count(F.lit(1)).alias("n"),
         )
         .collect()
-    }
-
-
-def test_running_extent_agg_stream_equals_batch(spark, tmp_path):
-    landing = tmp_path / "items"
-    _write_files(spark, landing, ITEM_SCHEMA, ITEM_BATCHES)
-    ext = incremental.running_extent(_stream(spark, landing, ITEM_SCHEMA))
-    _run(ext, "ext_eq", "complete", tmp_path / "ck3")
-    got = {
-        r["collection"]: (r["extent_start"], r["extent_end"])
-        for r in spark.sql("SELECT * FROM ext_eq").collect()
-    }
-    assert got == {
-        c: (lo, hi) for c, (lo, hi, _) in _batch_extent(spark).items()
     }
 
 

@@ -6,10 +6,12 @@ hash/range partitioning nodes), join strategies, whether any scan
 carries PushedFilters, and whether a Python/Arrow node appears.
 
     python tools/plan_audit.py [sf_dir]          # default sf0.1
+    python tools/plan_audit.py --render-soak     # PLANS.md soak blocks
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
@@ -526,11 +528,25 @@ def render_soak_into_plans() -> None:
     print(f"rendered soak + ann blocks from {latest_soak_path().name} into PLANS.md")
 
 
-def main() -> None:
-    if "--render-soak" in sys.argv:
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument(
+        "sf_dir", nargs="?",
+        help="corpus dir, or a name like sf0.1 under the testdata root "
+        "(default: $SPARK_GRAFT_SF_DIR, else sf0.1)",
+    )
+    ap.add_argument(
+        "--render-soak", action="store_true",
+        help="re-render the PLANS.md soak blocks from the latest committed "
+        "artifacts instead of auditing plans",
+    )
+    args = ap.parse_args(argv)
+    if args.render_soak:
         render_soak_into_plans()
         return
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
+    sf_dir = args.sf_dir or os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
     if not sf_dir.startswith("/"):  # 'sf0.1' shorthand, like driver_sweep
